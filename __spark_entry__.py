@@ -6,8 +6,7 @@
 - ``queries()``: every implemented operator/query from SURVEY.md §2,
   via the engine's registry (storm_bench_spark.plans.registry).
 - ``oracle_sql()``: the DuckDB twin for each query (same column names;
-  queries without an oracle are non-SQL-expressible and take the
-  rows-only check).
+  the registry requires one for every query).
 """
 
 from __future__ import annotations

@@ -1,29 +1,26 @@
 #!/usr/bin/env python
-"""Benchmark harness: run the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
-JSON line {"metric", "value", "unit", "queries", "sf"}.
+"""Benchmark harness: time the HEADLINE queries at $SPARK_GRAFT_SF_DIR
+(default /root/testdata/sf0.1) on the engine's session, each row
+interleaved with its DuckDB oracle on the same parquet; then an annex
+of every other registered query and an sf1 tier of the data-sized rows
+on an R=10 replica of the same SF.
 
-Each query is fully materialized through the noop sink (no driver
-collect, no column pruning shortcut — the executed plan is the plan a
-real sink would see).
+Every row of every stage is timed by one kernel, :func:`measure`: the
+query is fully materialized through the noop sink (no driver collect,
+no column-pruning shortcut — the executed plan is the plan a real sink
+would see), then its oracle is fetched in full on the same data.
 
-Round 14 (VERDICT r13 next #1/#2): the harness must be UN-KILLABLE as a
-measurement — r13's driver run blew its external wall-clock budget
-mid-sf1-tier and the kill-induced executor stack traces displaced the
-crash-safety snapshot from the captured stdout tail (BENCH_r13.json:
-rc 124, parsed null). Four defenses, all default-on:
-  1. tier warm run counts as the row's FIRST timed sample (one fewer
-     execution of every below-cut row on BOTH legs vs the r13
-     protocol — restores the r12 execution count while keeping the
-     warm lap's C2 separation);
-  2. tier membership rotation (alternating halves since round 15:
-     SF1_TIER_SKIP_ON_EVEN / SF1_TIER_SKIP_ON_ODD);
-  3. SPARK_GRAFT_BENCH_DEADLINE (default 2700 s from process start):
-     past it, no new tier/annex work starts, the final line prints
-     with the partial stages marked, and the process exits 0;
-  4. a SIGTERM/SIGINT handler re-prints the most recent snapshot JSON
-     line as the true last stdout line, and the Spark log level runs
-     at FATAL so teardown spew cannot displace it.
+stdout carries one compact JSON line per completed stage (headline,
++annex, +sf1 tier): the LAST line wins, and each line says whether it
+is ``final``. The full per-row record goes to BENCH_DETAIL.json, the
+duck leg's to DUCK_DETAIL.json. The run survives an external
+wall-clock kill: past $SPARK_GRAFT_BENCH_DEADLINE (default 2700 s from
+process start) no new annex/tier work starts and the final line names
+the skipped stages; SIGTERM/SIGINT re-print the latest line as the
+true last stdout line, and Spark logs at FATAL so teardown spew cannot
+displace it.
+
+The environment knobs are listed in README.md ("Bench knobs").
 """
 
 from __future__ import annotations
@@ -35,11 +32,17 @@ import re
 import signal
 import sys
 import time
+from dataclasses import dataclass
 
-# wall-clock origin for the bench deadline (defense #3 above)
+from pyspark.sql import functions as F
+
+from scripts import duck_twin
+from storm_bench_spark.plans.registry import all_oracles, all_queries
+from storm_bench_spark.session import get_spark
+
+# wall-clock origin of the bench deadline
 BENCH_T0 = time.monotonic()
-# most recent compact stdout snapshot line, re-printed by the kill
-# handler so an external SIGTERM cannot cost the round its numbers
+# most recent compact stdout line, re-printed by the kill handler
 _LAST_SNAPSHOT: str | None = None
 
 
@@ -55,9 +58,8 @@ def _past_deadline() -> bool:
 
 def _snapshot_line() -> str:
     """The line the kill handler re-prints: the most recent snapshot,
-    or a minimal parseable marker if the kill landed before the first
-    emit (still better than an empty tail — the driver's parse then
-    records an explicit early-kill instead of null)."""
+    or a parseable marker if the kill landed before the first one, so
+    the driver records an explicit early kill instead of null."""
     return _LAST_SNAPSHOT or json.dumps(
         {"metric": "headline_queries_total_wall", "value": None,
          "unit": "sec", "killed_before_first_snapshot": True,
@@ -66,10 +68,9 @@ def _snapshot_line() -> str:
 
 
 def _kill_handler(signum, frame):  # noqa: ARG001
-    """Re-print the latest snapshot as the LAST stdout line on
-    SIGTERM/SIGINT, then exit immediately (os._exit: no JVM teardown,
-    whose executor stack traces are exactly what displaced the r13
-    snapshot from the driver's tail capture)."""
+    """Re-print the latest snapshot as the LAST stdout line, then exit
+    at once: os._exit skips the JVM teardown, whose executor stack
+    traces would otherwise push the line out of the captured tail."""
     sys.stdout.write("\n" + _snapshot_line() + "\n")
     sys.stdout.flush()
     os._exit(0)
@@ -81,10 +82,8 @@ def _install_kill_handler() -> None:
 
 
 def _infer_round() -> int | None:
-    """Next round number = max over committed BENCH_r{N}.json + 1.
-    Drives the every-other-round tier rotation deterministically with
-    no extra env contract; None (fresh checkout) disables rotation —
-    fail-safe toward MORE coverage."""
+    """Next round number = max over committed BENCH_r{N}.json + 1, the
+    sf1 rotation's parity; None (fresh checkout) disables rotation."""
     ns = []
     here = os.path.dirname(os.path.abspath(__file__))
     for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
@@ -93,267 +92,138 @@ def _infer_round() -> int | None:
             ns.append(int(m.group(1)))
     return max(ns) + 1 if ns else None
 
-from pyspark.sql import functions as F
 
-from storm_bench_spark.plans.registry import all_queries
-from storm_bench_spark.session import get_spark
+def _selection(knob: str, default: list[str], queries) -> tuple[list[str], bool]:
+    """(names, explicit): the comma list in $knob, else ``default``.
+    Validated before any Spark work, so a typo fails fast instead of
+    with a KeyError mid-stage."""
+    sel = os.environ.get(knob)
+    names = [q.strip() for q in sel.split(",")] if sel else list(default)
+    unknown = [n for n in names if n not in queries]
+    if unknown:
+        raise SystemExit(f"{knob} names not in the registry: {unknown}")
+    return names, bool(sel)
 
+
+def _scale_dir() -> str:
+    return os.environ.get("SPARK_GRAFT_SCALE_DIR", f"/tmp/spark_graft_scale{SCALE_TIER_R}")
+
+
+# The headline set is frozen: its rows define the comparable series
+# across rounds, so a row is never renamed or dropped here.
 HEADLINE = [
     # the 12 reference topologies (SURVEY.md §2.10)
-    "wordcount",
-    "grep",
-    "rolling_count",
-    "rolling_hashtag_count",
-    "rolling_geo_count",
-    "rolling_sort",
-    "sol",
-    "pageview_count",
-    "dataclean",
-    "unique_visitor",
-    "rolling_latlong",
-    "rolling_flight_dist",
-    "rolling_flight_dist_bucketed",
+    "wordcount", "grep", "rolling_count", "rolling_hashtag_count", "rolling_geo_count",
+    "rolling_sort", "sol", "pageview_count", "dataclean", "unique_visitor",
+    "rolling_latlong", "rolling_flight_dist", "rolling_flight_dist_bucketed",
     # SQL capability demos — the full TPC-H 22 (q2..q22 adapted to the
     # fixture schema where it lacks partsupp/comment/phone columns; see
     # plans/tpch_ext.py docstring)
-    "tpch_q1",
-    "tpch_q2",
-    "tpch_q3",
-    "tpch_q4",
-    "tpch_q5",
-    "tpch_q6",
-    "tpch_q7",
-    "tpch_q8",
-    "tpch_q9",
-    "tpch_q10",
-    "tpch_q11",
-    "tpch_q12",
-    "tpch_q13",
-    "tpch_q14",
-    "tpch_q15",
-    "tpch_q16",
-    "tpch_q17",
-    "tpch_q18",
-    "tpch_q19",
-    "tpch_q20",
-    "tpch_q21",
+    "tpch_q1", "tpch_q2", "tpch_q3", "tpch_q4", "tpch_q5", "tpch_q6", "tpch_q7",
+    "tpch_q8", "tpch_q9", "tpch_q10", "tpch_q11", "tpch_q12", "tpch_q13", "tpch_q14",
+    "tpch_q15", "tpch_q16", "tpch_q17", "tpch_q18", "tpch_q19", "tpch_q20", "tpch_q21",
     "tpch_q22",
     # temporal joins + set ops + ranking + analytics
-    "asof_click_purchase",
-    "interval_click_error",
-    "users_intersect",
-    "top_terms",
-    "orders_rollup",
-    "user_running_value",
-    "value_percentiles",
-    "user_sessions",
+    "asof_click_purchase", "interval_click_error", "users_intersect", "top_terms",
+    "orders_rollup", "user_running_value", "value_percentiles", "user_sessions",
     # curation pipeline (iterative CC + composed keep-canonical +
-    # near-dup graph centrality, round 7)
-    "neardup_clusters",
-    "corpus_curate",
-    "pagerank_neardup",
+    # near-dup graph centrality)
+    "neardup_clusters", "corpus_curate", "pagerank_neardup",
     # span-duplication measure + boilerplate-line scrub + PII
-    # redaction (round 7); maximal-span emitter (round 13)
-    "dup_ngram_spans",
-    "exact_dup_spans",
-    "line_dedup",
-    "pii_scrub",
-    # tokenizer apply (train on vocab, join-encode the corpus, round 7)
+    # redaction; maximal-span emitter
+    "dup_ngram_spans", "exact_dup_spans", "line_dedup", "pii_scrub",
+    # tokenizer apply (train on vocab, join-encode the corpus)
     "bpe_encode",
     # incremental admission, split census, table profile, TF-IDF
-    # keywords, source overlap, keep-best survivorship (late round 7)
-    "incremental_dedup",
-    "corpus_split",
-    "table_profile",
-    "tfidf_top_terms",
-    "source_overlap",
-    "dedup_keep_best",
-    "pmi_bigrams",
-    "containment_pairs",
+    # keywords, source overlap, keep-best survivorship
+    "incremental_dedup", "corpus_split", "table_profile", "tfidf_top_terms",
+    "source_overlap", "dedup_keep_best", "pmi_bigrams", "containment_pairs",
     "kmv_distinct_users",
     # training-data pipeline: text analysis & cleaning
-    "dedup_exact",
-    "doc_fingerprint",
-    "token_count",
-    "quality_score",
-    "lang_id",
-    "text_normalize",
-    "pii_mask",
-    "repetition_score",
-    "stratified_sample",
-    "decontaminate",
-    "pack_sequences",
-    "quality_quantile_filter",
-    # training-data pipeline: corpus/IR ops (round 4)
-    "bigram_lm_score",
-    "chunk_documents",
-    "chunk_dedup",
-    "domain_mix_sample",
-    "inverted_index",
-    "bm25_rank",
-    "textrank_keywords",
-    "heavy_hitters_cms",
+    "dedup_exact", "doc_fingerprint", "token_count", "quality_score", "lang_id",
+    "text_normalize", "pii_mask", "repetition_score", "stratified_sample",
+    "decontaminate", "pack_sequences", "quality_quantile_filter",
+    # training-data pipeline: corpus/IR ops
+    "bigram_lm_score", "chunk_documents", "chunk_dedup", "domain_mix_sample",
+    "inverted_index", "bm25_rank", "textrank_keywords", "heavy_hitters_cms",
     # training-data pipeline: dedup / similarity / multimodal
-    "minhash_lsh",
-    "ngram_jaccard",
-    "simhash_pairs",
-    "embedding_neardup_lsh",
-    "semdedup",
-    "ann_topk",
-    "ann_topk_ivf",
-    "ann_topk_quantized",
-    "embedding_quantize",
+    "minhash_lsh", "ngram_jaccard", "simhash_pairs", "embedding_neardup_lsh",
+    "semdedup", "ann_topk", "ann_topk_ivf", "ann_topk_quantized", "embedding_quantize",
     "multimodal_image_meta",
-    # real RIFF/WAVE + Netpbm P6 + BMP codec round-trips (rounds 8, 13)
-    "multimodal_wav_meta",
-    "multimodal_ppm_meta",
-    "multimodal_bmp_meta",
-    "adsb_parse",
-    # sketches / pruning / fuzzy blocking (round 4, late)
-    "hll_users_per_type",
-    "bloom_high_value_orders",
+    # real RIFF/WAVE + Netpbm P6 + BMP codec round-trips
+    "multimodal_wav_meta", "multimodal_ppm_meta", "multimodal_bmp_meta", "adsb_parse",
+    # sketches / pruning / fuzzy blocking
+    "hll_users_per_type", "bloom_high_value_orders",
     # 5th sketch family: rank/quantile via mergeable histogram, and
-    # KMV set-resemblance from sketches alone (round 8)
-    "histogram_quantiles",
-    "histogram_quantiles_rollup",
-    "kmv_resemblance",
-    "audience_overlap_hll",
-    "fuzzy_name_pairs",
-    "salted_segment_revenue",
-    # time-series / history / funnel analytics (round 4, late)
-    "gap_fill_hourly",
-    "scd2_customer_history",
-    "funnel_conversion",
-    "value_zscore_outliers",
-    "streaming_hll_visitors",
-    "user_moving_avg",
-    "embedding_project",
-    "fuzzy_triangles",
-    "multires_rollup",
-    "unique_visitor_approx",
-    "ann_recall_at_k",
-    "training_corpus_build",
-    "fuzzy_name_pairs_d2",
-    "streaming_cdc_apply",
-    "cohort_retention",
-    "source_centroids_q8",
-    "source_similarity_q8",
-    "streaming_funnel",
-    "user_event_pivot",
-    "streaming_enriched_revenue",
-    "asof_click_purchase_tol",
-    "user_event_unpivot",
+    # KMV set-resemblance from sketches alone
+    "histogram_quantiles", "histogram_quantiles_rollup", "kmv_resemblance",
+    "audience_overlap_hll", "fuzzy_name_pairs", "salted_segment_revenue",
+    # time-series / history / funnel analytics
+    "gap_fill_hourly", "scd2_customer_history", "funnel_conversion",
+    "value_zscore_outliers", "streaming_hll_visitors", "user_moving_avg",
+    "embedding_project", "fuzzy_triangles", "multires_rollup", "unique_visitor_approx",
+    "ann_recall_at_k", "training_corpus_build", "fuzzy_name_pairs_d2",
+    "streaming_cdc_apply", "cohort_retention", "source_centroids_q8",
+    "source_similarity_q8", "streaming_funnel", "user_event_pivot",
+    "streaming_enriched_revenue", "asof_click_purchase_tol", "user_event_unpivot",
     "props_json_stats",
-    # round 5: shuffle / budget-select / fuzzy decontamination
-    "epoch_shuffle",
-    "token_budget_select",
-    "decontaminate_minhash",
-    # round 5, late: hybrid retrieval + graded contamination + CMS twin
-    "rrf_hybrid_rank",
-    "contamination_score",
-    # round 9: exact-n weighted sampling (A-ES via max-of-w-uniforms),
+    # shuffle / budget-select / fuzzy decontamination
+    "epoch_shuffle", "token_budget_select", "decontaminate_minhash",
+    # hybrid retrieval + graded contamination + CMS twin
+    "rrf_hybrid_rank", "contamination_score",
+    # exact-n weighted sampling (A-ES via max-of-w-uniforms),
     # global and stratified-per-source (WindowGroupLimit grouped top-n)
-    "weighted_sample",
-    "weighted_sample_per_source",
-    # round 9, late: bitmap-index exact distinct (batch + streaming
+    "weighted_sample", "weighted_sample_per_source",
+    # bitmap-index exact distinct (batch + streaming
     # fixed-size-state twin), single-agg OHLC bars, Z-order layout audit
-    "bitmap_distinct_daily",
-    "streaming_bitmap_visitors",
-    "bitmap_retention_daily",
-    "bitmap_distinct_weekly_rollup",
-    "tumbling_ohlc",
-    "streaming_tumbling_ohlc",
-    "zorder_layout",
-    "streaming_heavy_hitters",
-    "lsh_recall_pairs",
-    "events_cube",
-    # round 5, tail: tokenizer prep + DSIR data selection + 2-stage ANN
-    "boilerplate_ngram_ratio",
-    "vocab_oov_rate",
-    "dsir_select",
-    "bpe_merge_steps",
+    "bitmap_distinct_daily", "streaming_bitmap_visitors", "bitmap_retention_daily",
+    "bitmap_distinct_weekly_rollup", "tumbling_ohlc", "streaming_tumbling_ohlc",
+    "zorder_layout", "streaming_heavy_hitters", "lsh_recall_pairs", "events_cube",
+    # tokenizer prep + DSIR data selection + 2-stage ANN
+    "boilerplate_ngram_ratio", "vocab_oov_rate", "dsir_select", "bpe_merge_steps",
     "ann_rerank",
 ]
 
 
-# --- sf1 scale tier (VERDICT r10 next #1) ---------------------------------
-# The standing data-sized bench tier: the sf0.1 pair's DuckDB
-# denominators are < 100 ms for ~100 of 145 headline rows, so their
-# ratios measure Spark's fixed per-job cost, not plan quality. The tier
-# re-times the rows below on an R=10 fact-replicated copy of the bench
-# SF (scripts/scale_smoke.replicate — key-remapped facts, perturbed
-# documents/embeddings/customer so dedup/similarity semantics stay
-# linear), interleaved spark/duck per row.
+# --- sf1 scale tier --------------------------------------------------------
+# At sf0.1 the DuckDB denominators are < 100 ms for ~100 of the headline
+# rows, so their ratios measure Spark's fixed per-job cost, not plan
+# quality. The tier re-times the data-sized rows on an R=10
+# fact-replicated copy of the bench SF (scripts/scale_smoke.replicate:
+# key-remapped facts, perturbed documents/embeddings/customer so
+# dedup/similarity semantics stay linear).
 SCALE_TIER_R = 10
+# Samples per leg, the warm-lap run counting as the first; symmetric
+# on both legs so each row's ratio is a like-for-like pair.
+SCALE_RUNS = 2
+# Past this a leg's warm run is its only sample: its box-noise share is
+# negligible, and a repeat would double the tier's wall for nothing.
+SCALE_SLOW_S = 70.0
 
-# Ratio rows: duck >= ~0.3 s at sf0.1 (the r10 pair's data-sized set)
-# AND an oracle whose cost is linear-ish in data size, so the tier's
-# duck leg stays minutes, not hours. Measured single-run duck cost at
-# R=10 informs membership; see BASELINE.md round 11 for the census.
+# Ratio rows: duck >= ~0.3 s at sf0.1 AND an oracle whose cost is
+# linear-ish in data size, so the duck leg stays minutes, not hours
+# (BASELINE.md round 11 has the per-row census).
 SF1_TIER = [
-    "rolling_flight_dist",
-    "rolling_latlong",
-    "rolling_geo_count",
-    "pagerank_neardup",
-    "neardup_clusters",
-    "corpus_curate",
-    "training_corpus_build",
-    "dedup_keep_best",
-    "source_overlap",
-    "simhash_pairs",
-    "simhash",
-    "minhash_lsh",
-    "ngram_jaccard",
-    "containment_pairs",
-    "decontaminate_minhash",
-    "embedding_neardup_lsh",
-    "bpe_encode",
-    "bpe_merge_steps",
-    "heavy_hitters_cms",
-    "gap_fill_hourly",
-    "dup_ngram_spans",
-    "exact_dup_spans",
-    "line_dedup",
-    "chunk_dedup",
-    "boilerplate_ngram_ratio",
-    "lang_id",
-    "quality_score",
-    "ann_rerank",
-    "ann_topk_ivf",
-    "unique_visitor_approx",
-    "dsir_select",
-    "multimodal_wav_meta",
-    "multimodal_ppm_meta",
-    "multimodal_bmp_meta",
-    "multimodal_audio_meta",
-    "expand_words",
-    # probed in the round-11 census and measured affordable (duck 38 /
-    # 19 / 7 s at R=10 — linear-ish oracles after all; BASELINE.md)
-    "semdedup",
-    "ann_topk_ivf_kmeans",
-    "lsh_recall_pairs",
+    "rolling_flight_dist", "rolling_latlong", "rolling_geo_count", "pagerank_neardup",
+    "neardup_clusters", "corpus_curate", "training_corpus_build", "dedup_keep_best",
+    "source_overlap", "simhash_pairs", "simhash", "minhash_lsh", "ngram_jaccard",
+    "containment_pairs", "decontaminate_minhash", "embedding_neardup_lsh", "bpe_encode",
+    "bpe_merge_steps", "heavy_hitters_cms", "gap_fill_hourly", "dup_ngram_spans",
+    "exact_dup_spans", "line_dedup", "chunk_dedup", "boilerplate_ngram_ratio",
+    "lang_id", "quality_score", "ann_rerank", "ann_topk_ivf", "unique_visitor_approx",
+    "dsir_select", "multimodal_wav_meta", "multimodal_ppm_meta", "multimodal_bmp_meta",
+    "multimodal_audio_meta", "expand_words",
+    # measured affordable after all (duck 38 / 19 / 7 s at R=10)
+    "semdedup", "ann_topk_ivf_kmeans", "lsh_recall_pairs",
 ]
-# Alternating-halves tier rotation (round 15; generalizes the r14
-# every-other-round cadence per VERDICT r14 next #3 "raise rotation"):
-# the tier's wall driver is the duck leg, and these rows' adjudications
-# have been stable at <=0.35x for 3+ pairs (ratio history r12-pair-1 /
-# r12-final / r13-closing quoted per row), so each runs every OTHER
-# round — but as two opposite-parity halves instead of r14's
-# all-or-nothing set, so EVERY round sheds duck-seconds and no round
-# pays the full stable set (the r14 odd-round full tier is what blew
-# the 2700 s deadline mid-tier and degraded 16 rows to cold singles).
-# Halves are assigned by round-15 need: rows whose code or shared
-# helper changed in round 14 (corpus_curate, ann_topk_ivf_kmeans) run
-# on ODD rounds (r15 corroborates them); the untouched stable rows —
-# including pagerank_neardup, whose 172-260 s oracle is ~40% of the
-# whole tier's duck leg by itself — run on EVEN rounds. The watch rows
-# (line_dedup, chunk_dedup, exact_dup_spans, dup_ngram_spans,
-# boilerplate_ngram_ratio, ann_rerank) and everything else touched in
-# the last round stay EVERY round. Round inferred from committed
-# BENCH_r*.json — see _infer_round. Override:
-# SPARK_GRAFT_TIER_ROTATION=all (force-include) / skip (force-exclude
-# both halves); an explicit SPARK_GRAFT_SCALE_TIER_QUERIES selection
-# bypasses rotation entirely.
+# Alternating-halves rotation: the tier's wall is driven by its duck
+# leg, and these rows' ratios have been stable at <= 0.35x for 3+
+# pairs (ratio history quoted per row), so each half sits out every
+# other round and no round pays the full stable set, which is what
+# keeps the whole tier inside the deadline. Rows touched since their
+# last corroboration go in the ODD half; pagerank_neardup, whose
+# oracle alone is ~40% of the duck leg, in the EVEN one. An explicit
+# SPARK_GRAFT_SCALE_TIER_QUERIES selection bypasses rotation.
 SF1_TIER_SKIP_ON_EVEN = {
     "corpus_curate": "0.215/0.176/0.067; duck 28-73 s; r14-touched (CC/minhash)",
     "ann_topk_ivf_kmeans": "0.196/0.152/0.163; duck 15-17 s; r14-touched (Lloyd persist)",
@@ -369,35 +239,21 @@ SF1_TIER_SKIP_ON_ODD = {
     "expand_words": "0.053/0.046/0.055; duck 3 s",
 }
 
+
 def _apply_rotation(
-    names: list[str],
-    explicit_selection: bool,
-    rotation: str,
-    round_inferred: int | None,
+    names: list[str], explicit_selection: bool, round_inferred: int | None
 ) -> tuple[list[str], list[str]]:
-    """(kept, rotated_out) under the alternating-halves cadence: EVEN
-    rounds skip SF1_TIER_SKIP_ON_EVEN, odd rounds skip
-    SF1_TIER_SKIP_ON_ODD; unknown rounds, explicit selections, and
-    rotation=all run everything; rotation=skip skips both halves."""
-    if explicit_selection or rotation == "all":
+    """(kept, rotated_out): EVEN rounds skip SF1_TIER_SKIP_ON_EVEN, odd
+    rounds SF1_TIER_SKIP_ON_ODD; an unknown round or an explicit
+    selection runs everything."""
+    if explicit_selection or round_inferred is None:
         return names, []
-    if rotation == "skip":
-        skip_set = set(SF1_TIER_SKIP_ON_EVEN) | set(SF1_TIER_SKIP_ON_ODD)
-    elif rotation == "auto" and round_inferred is not None:
-        skip_set = set(
-            SF1_TIER_SKIP_ON_EVEN
-            if round_inferred % 2 == 0
-            else SF1_TIER_SKIP_ON_ODD
-        )
-    else:
-        return names, []
-    rotated = [n for n in names if n in skip_set]
-    return [n for n in names if n not in skip_set], rotated
+    skip = SF1_TIER_SKIP_ON_EVEN if round_inferred % 2 == 0 else SF1_TIER_SKIP_ON_ODD
+    return [n for n in names if n not in skip], [n for n in names if n in skip]
 
 
-# Spark-timed only — the ORACLE is super-linear in data (brute-force
-# quadratic stand-ins), so a duck leg at R=10 is hours; the engine side
-# is still timed and its scale shape recorded.
+# Spark-timed only: the ORACLE is super-linear in data (brute-force
+# quadratic stand-ins), so a duck leg at R=10 would take hours.
 SF1_TIER_SPARK_ONLY = {
     "fuzzy_name_pairs": "oracle is the within-nation quadratic brute force",
     "fuzzy_name_pairs_d2": "oracle is the within-nation quadratic brute force",
@@ -410,266 +266,242 @@ SF1_TIER_EXCLUDED = {
     "streaming_*": "wall is engine-start floor; processing ratio reported in the annex instead",
 }
 
+# The nine Arrow-kernel tier rows. SPARK_GRAFT_TIER_SMOKE=1 runs
+# exactly these spark-side on the R=10 replica, once each, no duck leg:
+# a ~90 s "does the tier crash?" discriminator.
+TIER_SMOKE_ROWS = [
+    "multimodal_bmp_meta",
+    "multimodal_wav_meta",
+    "multimodal_ppm_meta",
+    "multimodal_audio_meta",
+    "ann_rerank",
+    "semdedup",
+    "embedding_neardup_lsh",
+    "lsh_recall_pairs",
+    "ann_topk_ivf_kmeans",
+]
+
+# Closing-pair acceptance rule: a pair whose probe drift or summed
+# spread exceeds these should be retaken once on an idle box before it
+# becomes a round's record. Advisory: the numbers still print, since
+# per-row pairing keeps the ratios honest under drift.
+RETAKE_DRIFT_MAX = 0.1
+RETAKE_SPREAD_FRAC = 0.15
+
+
+@dataclass
+class Sample:
+    """One row's measurement: Spark walls (s), DuckDB walls (s), and the
+    engine-start floor of the streams the row's last Spark run started."""
+
+    spark: list[float]
+    duck: list[float]
+    floor: float
+
+    @property
+    def first(self) -> float:
+        return self.spark[0]
+
+
+def measure(spark, fn, sf_dir: str, runs: int, con=None, oracle: str | None = None,
+            duck_runs: int | None = None) -> Sample:
+    """Time one row: ``runs`` executions of ``fn`` through the noop
+    sink, then, given a DuckDB connection and the row's oracle,
+    ``duck_runs`` (default ``runs``) fetches of the oracle on the same
+    data.
+
+    The cache is cleared after the Spark leg. The operators are lazy,
+    so a query cannot unpersist the intermediates it persists, and the
+    blocks would otherwise pile up in executor storage across rows.
+    Clearing between rows, not samples, is the min-of-N convention:
+    samples 2..N ride sample 1's cache, and ``first`` is the one that
+    paid every in-query persist build."""
+    from storm_bench_spark.streaming.streams import LAST_STREAM_RUNS
+
+    walls: list[float] = []
+    floor = 0.0
+    for _ in range(runs):
+        before = list(LAST_STREAM_RUNS)
+        t0 = time.perf_counter()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        walls.append(time.perf_counter() - t0)
+        # roughly constant across runs, so the last run's stands for the row
+        floor = sum(
+            r.get("floor_sec") or 0.0
+            for r in LAST_STREAM_RUNS
+            if not any(r is b for b in before)
+        )
+    spark.catalog.clearCache()
+    duck: list[float] = []
+    if oracle is not None:
+        duck = duck_twin.time_oracle(con, oracle, runs if duck_runs is None else duck_runs)
+    return Sample(walls, duck, floor)
+
+
+def warm_session(spark, sf_dir: str) -> None:
+    """JVM/codegen/scan warm-up so the first timed query is not charged
+    one-time startup: codegen, a shuffle, and the file index of every
+    fixture table (a cheap count over pruned scans)."""
+    from storm_bench_spark.sources.tables import TABLES, load_table
+
+    spark.range(100_000).selectExpr("sum(id * 2)").collect()
+    spark.range(10_000).selectExpr("id % 7 AS k").groupBy("k").count().collect()
+    for t in TABLES:
+        load_table(spark, sf_dir, t).select(F.lit(1)).limit(1).collect()
+
+
+def warm_lap(spark, queries, sf_dir: str, names: list[str]) -> None:
+    """One untimed execution of every row before any row is timed.
+    min-of-3 alone does not remove first-encounter JIT: C2 compiles a
+    row's hot paths over more than 3 encounters, in the background, so
+    only a full lap's separation reaches steady state (fully warm
+    unique_visitor_approx 0.54 s vs a benched min of 1.03 s)."""
+    t0 = time.perf_counter()
+    for name in names:
+        measure(spark, queries[name], sf_dir, 1)
+    print(f"# warm lap: {len(names)} queries in {time.perf_counter() - t0:.1f}s "
+          "(untimed)", file=sys.stderr)
+
+
+def run_headline(spark, queries, oracles, con, sf_dir: str, names: list[str],
+                 runs: int) -> dict:
+    """The timed lap: min-of-``runs`` per row on both engines, A/B per
+    ROW, so box drift lands on both legs of a row within seconds and
+    cancels out of its ratio. Spreads cover the warm samples only
+    (duck_twin.summarize): sample 1 pays first-plan compilation, which
+    is warm-up, not box noise."""
+    keys = ("queries", "spreads", "first_samples", "stream_floor_sec", "duck", "duck_spreads")
+    h: dict[str, dict] = {k: {} for k in keys}
+    for name in names:
+        s = measure(spark, queries[name], sf_dir, runs, con, oracles[name])
+        h["queries"][name], h["spreads"][name] = duck_twin.summarize(s.spark)
+        h["first_samples"][name] = round(s.first, 3)
+        if s.floor > 0:
+            h["stream_floor_sec"][name] = round(s.floor, 3)
+        h["duck"][name], h["duck_spreads"][name] = duck_twin.summarize(s.duck)
+        print(f"# {name}: {h['queries'][name]}s (min of {runs}, spread "
+              f"{h['spreads'][name]}s) | duck {h['duck'][name]}s", file=sys.stderr)
+    return h
+
+
+def run_annex(spark, queries, oracles, con, sf_dir: str, names: list[str],
+              runs: int) -> dict:
+    """A datum for every registered query outside the headline, min-of-2
+    (or of the headline's ``runs``, if fewer), timed after the headline
+    so it cannot perturb it. The annex is mostly streaming twins whose
+    wall is dominated by the ~0.3 s engine-start floor, so
+    (wall - floor) / duck is reported beside wall / duck."""
+    runs = max(1, min(2, runs))
+    t: dict[str, float] = {}
+    fl: dict[str, float] = {}
+    d: dict[str, float] = {}
+    for name in names:
+        s = measure(spark, queries[name], sf_dir, runs, con, oracles[name])
+        t[name], d[name] = round(min(s.spark), 3), round(min(s.duck), 3)
+        if s.floor > 0:
+            fl[name] = round(s.floor, 3)
+        print(f"# annex {name}: {t[name]}s (min of {runs}) | duck {d[name]}s",
+              file=sys.stderr)
+    return {
+        "queries": t,
+        "duck": d,
+        "ratio": {n: round(t[n] / d[n], 3) for n in d if d[n]},
+        "ratio_processing": {
+            n: round(max(t[n] - fl.get(n, 0.0), 0.0) / d[n], 3) for n in d if d[n]
+        },
+        "stream_floor_sec": fl,
+        "total": round(sum(t.values()), 3),
+        "duck_total": round(sum(d.values()), 3),
+        "stream_floor_total": round(sum(fl.values()), 3),
+        "runs": runs,
+    }
+
 
 def run_scale_tier(spark, queries, oracles, base_sf_dir: str) -> dict:
-    """Time the data-sized rows on the R=10 replica, interleaved with
-    the duck twin on the same parquet. min-of-N with an adaptive cut:
-    past SCALE_SLOW_S a single sample's box-noise share is negligible
-    and repeats would double the tier's wall for nothing."""
-    from scripts.duck_twin import connect, summarize, time_oracle
+    """Time the tier rows on the R=10 replica, duck interleaved per row.
 
-    r = SCALE_TIER_R
-    dst = os.environ.get("SPARK_GRAFT_SCALE_DIR", f"/tmp/spark_graft_scale{r}")
+    A full warm lap runs first, one execution of every row on both
+    legs, for the headline's JIT reason; that warm run is each row's
+    first timed sample, so a row costs SCALE_RUNS executions per leg.
+    A leg whose warm run is past SCALE_SLOW_S keeps it as its only
+    sample. Every tier sample pays the row's persist builds cold (the
+    cache clears after every measure call), so warm_first_sample_s is
+    recorded beside the min. Past the deadline, rows not yet warmed are
+    dropped and warmed rows keep their warm sample on both legs."""
+    from scripts.scale_smoke import ensure_replica
 
-    # Tier sampling depth min-of-3 -> min-of-2 in round 15 (VERDICT
-    # r14 next #3 "budget the rest"): SYMMETRIC on both legs (the
-    # asymmetric-depth bias ADVICE r11 flagged cannot appear — each
-    # leg takes warm + 1 more sample under the same adaptive cut), so
-    # the ratio stays a like-for-like pair; min-of-2 reads ~2-5% above
-    # min-of-3 on BOTH numerator and denominator. Saves ~one full
-    # spark+duck lap (~350 duck-seconds on the r14 census), which —
-    # with the alternating-halves rotation above — is what lets the
-    # whole tier finish warm-protocol inside the 2700 s deadline
-    # instead of degrading its tail to cold single samples (r14: 16
-    # rows degraded, 4 of them misread 2.4-4.0x from the C2-JIT tail).
-    # Override with SPARK_GRAFT_SCALE_RUNS=3 to reproduce the r12-r14
-    # protocol for bridging measurements.
-    runs = int(os.environ.get("SPARK_GRAFT_SCALE_RUNS", "2"))
-    # Default raised 30 -> 70 in round 14 (VERDICT r13 next #1a): the
-    # builder's pairs have run SLOW_S=70 since r12 so 30-70 s oracles
-    # get n=3 on both legs; the driver ran the 30 default and the two
-    # protocols diverged. With the warm run now counting as the first
-    # timed sample (below), 70 no longer multiplies executions of
-    # mid-weight rows, so the proven builder value becomes the default.
-    slow_s = float(os.environ.get("SPARK_GRAFT_SCALE_SLOW_S", "70"))
-    # TIER WARM LAP (round 13, VERDICT r12 next #1): the headline leg
-    # has carried a warm lap since round 10 because min-of-3 provably
-    # does NOT remove first-encounter C2 JIT (the written rationale at
-    # main()'s warm_lap). The tier never got the same treatment, and
-    # the gap is exactly what the boilerplate_ngram_ratio "2.08x"
-    # straddle was: fresh-session decay on that row measures
-    # 2.60 → 1.17 → 0.77 → 0.74 s, so a cold min-of-3 reads the
-    # 1.2–1.5 s JIT tail while steady state is 0.75 s vs a 0.73 s duck
-    # leg (ratio ~1.0). Protocol mirrors the headline: one UNTIMED
-    # execution of every tier row FIRST (a full lap, not warm-then-
-    # time per row — C2 compiles in the background, so the lap
-    # separation is what actually reaches steady state; measured
-    # per-row warm+immediate-3 still read the 0.95–1.0 s tail on this
-    # row), then the timed min-of-`runs` lap, duck interleaved per
-    # row with its own symmetric untimed first execution. A row whose
-    # warm run exceeds the adaptive cut keeps the pre-r13 behavior
-    # exactly — the warm run becomes its single (timed) sample, so
-    # slow rows pay no extra wall. Opt out with SPARK_GRAFT_SCALE_WARM=0
-    # to reproduce the r10–r12 tier protocol for bridging measurements.
-    tier_warm = os.environ.get("SPARK_GRAFT_SCALE_WARM", "1") != "0"
-    sel = os.environ.get("SPARK_GRAFT_SCALE_TIER_QUERIES")
-    names = (
-        [q.strip() for q in sel.split(",")]
-        if sel
-        else SF1_TIER + sorted(SF1_TIER_SPARK_ONLY)
+    names, explicit = _selection(
+        "SPARK_GRAFT_SCALE_TIER_QUERIES", SF1_TIER + sorted(SF1_TIER_SPARK_ONLY), queries
     )
-    # alternating-halves rotation (see SF1_TIER_SKIP_ON_*); an
-    # explicit selection bypasses it. No silent caps: what rotated out
-    # is printed AND recorded in the result dict.
-    rotation = os.environ.get("SPARK_GRAFT_TIER_ROTATION", "auto")
     round_inferred = _infer_round()
-    names, rotated_out = _apply_rotation(names, bool(sel), rotation, round_inferred)
+    names, rotated_out = _apply_rotation(names, explicit, round_inferred)
     if rotated_out:
-        print(
-            f"# sf1 rotation (round {round_inferred}): "
-            f"{len(rotated_out)} stable <=0.35x rows sit this round "
-            f"out — {', '.join(rotated_out)}",
-            file=sys.stderr,
-        )
-    # Validate BEFORE the expensive replica build (ADVICE r11): a typo
-    # in SCALE_TIER_QUERIES used to raise KeyError mid-tier, after the
-    # R=10 replication and possibly after some rows had already timed.
-    unknown = [n for n in names if n not in queries]
-    if unknown:
-        raise SystemExit(
-            f"SPARK_GRAFT_SCALE_TIER_QUERIES names not in the registry: "
-            f"{unknown}"
-        )
-    for n in names:
-        if n not in oracles and n not in SF1_TIER_SPARK_ONLY:
-            print(
-                f"# sf1 WARNING: {n} has no oracle and is not in "
-                "SF1_TIER_SPARK_ONLY — it will time Spark-only",
-                file=sys.stderr,
-            )
-
-    # Replica provenance marker (ADVICE r11; shared helper since r13 —
-    # ADVICE r12: scale_smoke.py and rollup_ab.py used to write a
-    # legacy "ok" marker this code always rebuilt over): records the
-    # base SF dir and R the replica was built from, so a SCALE_DIR
-    # reused across pairs built from a DIFFERENT base is rebuilt
-    # instead of silently mislabeling the tier's provenance.
-    from scripts.scale_smoke import ensure_replica, read_replica_marker
-
+        print(f"# sf1 rotation (round {round_inferred}): {len(rotated_out)} stable "
+              f"<=0.35x rows sit this round out — {', '.join(rotated_out)}",
+              file=sys.stderr)
+    dst = _scale_dir()
     t0 = time.perf_counter()
-    have = read_replica_marker(dst)
-    want = {"base": os.path.abspath(base_sf_dir), "r": r}
-    if have is not None and have != want:
-        print(
-            f"# sf1 replica marker mismatch ({have} != {want}) — "
-            "re-replicating",
-            file=sys.stderr,
-        )
-    ensure_replica(spark, base_sf_dir, dst, r)
+    # the replica's marker records its base SF and R, so a SCALE_DIR
+    # built from a different base is rebuilt, not silently reused
+    if ensure_replica(spark, base_sf_dir, dst, SCALE_TIER_R):
+        print(f"# sf1 replica built at {dst}", file=sys.stderr)
     build_s = round(time.perf_counter() - t0, 3)
 
-    con = connect(dst)
+    def oracle(name):
+        return None if name in SF1_TIER_SPARK_ONLY else oracles[name]
+
+    con = duck_twin.connect(dst)
+    warm: dict[str, Sample] = {}
+    dropped: list[str] = []
+    t_w = time.perf_counter()
+    for i, name in enumerate(names):
+        if _past_deadline():
+            dropped = names[i:]
+            print(f"# sf1 DEADLINE ({_deadline_s():.0f}s) hit in warm lap — "
+                  f"dropping {len(dropped)} rows: {', '.join(dropped)}", file=sys.stderr)
+            break
+        warm[name] = measure(spark, queries[name], dst, 1, con, oracle(name))
+    print(f"# sf1 warm lap: {len(warm)} rows in {time.perf_counter() - t_w:.1f}s",
+          file=sys.stderr)
+
+    def more(first: float) -> int:
+        return SCALE_RUNS - 1 if first < SCALE_SLOW_S else 0
+
     t: dict[str, float] = {}
     d: dict[str, float] = {}
     ratio: dict[str, float | None] = {}
     n_samples: dict[str, int] = {}
     duck_n_samples: dict[str, int] = {}
     warmed: dict[str, bool] = {}
-    warm_wall: dict[str, float] = {}
-    duck_warm: dict[str, float] = {}
-    # deadline bookkeeping (VERDICT r13 next #1b): rows the wall budget
-    # never let START are dropped; rows whose warm lap ran but whose
-    # timed lap the deadline overtook degrade to their (already-paid)
-    # warm sample on both legs — zero extra wall, still a datum.
-    deadline_dropped: list[str] = []
-    deadline_degraded: list[str] = []
-    if tier_warm:
-        t_w = time.perf_counter()
-        lap_names = []
-        for name in names:
-            if _past_deadline():
-                deadline_dropped = names[len(lap_names):]
-                print(
-                    f"# sf1 DEADLINE ({_deadline_s():.0f}s) hit in warm "
-                    f"lap — dropping {len(deadline_dropped)} rows: "
-                    f"{', '.join(deadline_dropped)}",
-                    file=sys.stderr,
-                )
-                break
-            s, _ = _run_spark_query(spark, queries[name], dst, 1)
-            warm_wall[name] = s[0]
-            if name not in SF1_TIER_SPARK_ONLY and name in oracles:
-                duck_warm[name] = time_oracle(con, oracles[name], 1)[0]
-            lap_names.append(name)
-        names = lap_names
-        print(
-            f"# sf1 warm lap: {len(names)} rows in "
-            f"{time.perf_counter() - t_w:.1f}s (the warm run is each "
-            "row's FIRST timed sample since r14; past the adaptive cut "
-            "it is the row's ONLY sample)",
-            file=sys.stderr,
-        )
-    for name in names:
-        if tier_warm:
-            # Round 14 (VERDICT r13 next #1a): the warm run COUNTS as
-            # the row's first timed sample, so a below-cut row runs
-            # `runs` times total instead of r13's warm+runs — one full
-            # execution of every fast row removed from BOTH legs,
-            # restoring the r12 wall while keeping the r13 lap
-            # separation (samples 2..runs are post-lap steady state;
-            # min-of-N discards the cold first sample).
-            if (
-                warm_wall[name] >= slow_s
-                or runs <= 1
-                or _past_deadline()
-            ):
-                # past the cut (or the deadline): the warm run IS the
-                # sample — identical wall cost to the pre-r13 protocol
-                samples = [warm_wall[name]]
-                warmed[name] = False
-                if warm_wall[name] < slow_s and runs > 1:
-                    deadline_degraded.append(name)
-            else:
-                more, _ = _run_spark_query(
-                    spark, queries[name], dst, runs - 1
-                )
-                samples = [warm_wall[name]] + more
-                warmed[name] = True
-        else:
-            if _past_deadline():
-                deadline_dropped.append(name)
-                continue
-            samples, _fl = _run_spark_query(spark, queries[name], dst, 1)
-            warmed[name] = False
-            if samples[0] < slow_s and runs > 1:
-                more, _ = _run_spark_query(
-                    spark, queries[name], dst, runs - 1
-                )
-                samples += more
-        t[name] = round(min(samples), 3)
-        n_samples[name] = len(samples)
-        if (
-            tier_warm
-            and warmed[name]
-            and name not in deadline_degraded
-            and _past_deadline()
-        ):
-            # deadline arrived after this row's spark samples but
-            # before its duck leg: fall back to the warm pair on BOTH
-            # legs so min-of-N depth stays symmetric within the row
-            deadline_degraded.append(name)
-            warmed[name] = False
-            t[name] = round(warm_wall[name], 3)
-            n_samples[name] = 1
-        msg = f"# sf1 {name}: {t[name]}s (n={n_samples[name]}"
-        msg += ", warm)" if warmed[name] else ")"
-        if name not in SF1_TIER_SPARK_ONLY and name in oracles:
-            # symmetric sampling (ADVICE r11 medium): the duck leg gets
-            # the SAME runs-1 extra samples under the SAME adaptive cut
-            # as the Spark leg — min-of-N falls with N, so a duck leg
-            # hard-capped at 2 while Spark took `runs` biased tier
-            # ratios in Spark's favor on the rows that carry the 2x
-            # adjudication. Duck sample counts are recorded too.
-            # With the r13 warm lap, duck's untimed first execution
-            # happened in the lap (page-cache/scan warmup — symmetric
-            # with the Spark leg), and a past-the-cut warm run is the
-            # single sample on this leg too.
-            if tier_warm:
-                # symmetric warm-as-first-sample (r14): duck's warm
-                # execution is its first timed sample too; a degraded
-                # (deadline-overtaken) row keeps just the warm sample
-                # on both legs so the ratio stays a like-for-like pair
-                if (
-                    duck_warm[name] >= slow_s
-                    or runs <= 1
-                    or name in deadline_degraded
-                ):
-                    ds = [duck_warm[name]]
-                else:
-                    ds = [duck_warm[name]] + time_oracle(
-                        con, oracles[name], runs - 1
-                    )
-            else:
-                ds = time_oracle(con, oracles[name], 1)
-                if ds[0] < slow_s and runs > 1:
-                    ds += time_oracle(con, oracles[name], runs - 1)
-            duck_n_samples[name] = len(ds)
-            d[name], _ = summarize(ds)
+    degraded: list[str] = []
+    for name, w in warm.items():
+        s_more, d_more = more(w.first), (more(w.duck[0]) if w.duck else 0)
+        if (s_more or d_more) and _past_deadline():
+            degraded.append(name)
+            s_more = d_more = 0
+        m = measure(spark, queries[name], dst, s_more, con, oracle(name), d_more)
+        spark_s, duck_s = w.spark + m.spark, w.duck + m.duck
+        warmed[name] = bool(m.spark)
+        t[name], n_samples[name] = round(min(spark_s), 3), len(spark_s)
+        msg = f"# sf1 {name}: {t[name]}s (n={len(spark_s)}{', warm' if warmed[name] else ''})"
+        if duck_s:
+            d[name], duck_n_samples[name] = round(min(duck_s), 3), len(duck_s)
             ratio[name] = round(t[name] / d[name], 3) if d[name] else None
-            msg += f" | duck {d[name]}s (n={len(ds)}) | ratio {ratio[name]}"
+            msg += f" | duck {d[name]}s (n={len(duck_s)}) | ratio {ratio[name]}"
         print(msg, file=sys.stderr)
     con.close()
     duck_total = round(sum(d.values()), 3)
     matched = round(sum(t[n] for n in d), 3)
     return {
-        "r": r,
+        "r": SCALE_TIER_R,
         "dir": dst,
         "base": base_sf_dir,
         "replicate_build_s": build_s,
-        "runs": runs,
-        "adaptive_cut_s": slow_s,
-        "warm_run": tier_warm,
+        "runs": SCALE_RUNS,
+        "adaptive_cut_s": SCALE_SLOW_S,
+        "warm_run": True,
         "warmed": warmed,
-        # Cache-honesty twin of the headline's first_samples (round
-        # 15): the warm-lap execution is each row's FIRST timed sample
-        # and — because the cache clears after every _run_spark_query
-        # call — EVERY tier sample at runs=2 pays the row's in-query
-        # persist builds cold. The reported min is therefore a
-        # COLD-CACHE min (the headline's min-of-3 rides the run-1
-        # cache instead; r12-r14 tiers had one riding sample at
-        # runs=3). Recording the warm/cold first sample per row keeps
-        # the two protocols distinguishable in the detail.
-        "warm_first_sample_s": {k: round(v, 3) for k, v in warm_wall.items()},
+        "warm_first_sample_s": {k: round(w.first, 3) for k, w in warm.items()},
         "n_samples": n_samples,
         "duck_n_samples": duck_n_samples,
         "queries": t,
@@ -681,50 +513,31 @@ def run_scale_tier(spark, queries, oracles, base_sf_dir: str) -> dict:
         "matched_spark_total": matched,
         "duck_total": duck_total,
         "ratio_total": round(matched / duck_total, 3) if duck_total else None,
-        # ADVICE r10: the Spark JVM stays resident during the duck leg
+        # DuckDB is timed while the Spark JVM stays resident
         "duck_jvm_resident": True,
-        # r14 protocol provenance: what the rotation skipped and what
-        # the deadline cost, if anything (no silent caps)
         "round_inferred": round_inferred,
         "rotated_out": rotated_out,
-        "deadline_dropped": deadline_dropped,
-        "deadline_degraded": deadline_degraded,
-        "sf1_partial": bool(deadline_dropped or deadline_degraded),
+        "deadline_dropped": dropped,
+        "deadline_degraded": degraded,
+        "sf1_partial": bool(dropped or degraded),
     }
 
 
-# Paired-ratio honesty gate (VERDICT r8 next #1): the ratio is only
-# printed when the box measured the SAME between the two legs. The
-# probe is a fixed CPU-bound DuckDB aggregation (no Spark, no IO after
-# first touch) timed min-of-3 immediately before each leg; a relative
-# shift beyond PROBE_DRIFT_MAX means box state moved mid-pair (other
-# tenants, thermal, page-cache pressure) and the aggregate ratio would
-# be attributing box drift to code — suppress it, keep both totals.
-PROBE_DRIFT_MAX = 0.25
-# Closing-pair acceptance thresholds (VERDICT r11 next #6): tighter than
-# the sequential-mode suppression gate above — they don't suppress
-# anything, they flag a pair that should be retaken on an idle box
-# before it becomes the round's committed headline.
-RETAKE_DRIFT_MAX = 0.1
-RETAKE_SPREAD_FRAC = 0.15
-
-
 def cpu_probe_spark(spark, runs: int = 2) -> float:
-    """Fixed CPU-bound Spark job (codegen'd modulo-sum over a long
-    range, one task per core), min-of-N after one warm run — the
-    scaling leg's self-evidence (VERDICT r14 next #2). At sf0.1 every
-    headline row is dominated by fixed per-job cost, so the driver's
-    32-vs-8-core comparison of headline walls reads ≈1.0 and looks
-    like the core count was ignored; this probe is pure compute and
-    scales with the cores the session actually got (measured on this
-    box: 1.85 s at local[32] vs 4.44 s at local[8])."""
+    """A fixed CPU-bound Spark job (codegen'd modulo-sum over a long
+    range, one task per core), min-of-N after one warm run. Every sf0.1
+    headline row is dominated by fixed per-job cost and reads ~flat
+    across core counts; this probe is pure compute and scales with the
+    cores the session actually got (1.85 s at local[32] vs 4.44 s at
+    local[8] on the reference box)."""
     sc = spark.sparkContext
-    q = lambda: (  # noqa: E731
-        spark.range(0, 2 * 10**10, 1, sc.defaultParallelism)
-        .selectExpr("sum(id % 1000007)")
-        .collect()
-    )
-    q()  # warm (codegen/JIT)
+
+    def q():
+        spark.range(0, 2 * 10**10, 1, sc.defaultParallelism).selectExpr(
+            "sum(id % 1000007)"
+        ).collect()
+
+    q()
     best = float("inf")
     for _ in range(runs):
         t0 = time.perf_counter()
@@ -734,6 +547,8 @@ def cpu_probe_spark(spark, runs: int = 2) -> float:
 
 
 def box_probe(runs: int = 3) -> float:
+    """A fixed CPU-bound DuckDB aggregation, min-of-N: the box-state
+    gauge taken at pair start and end (``probe_drift``)."""
     import duckdb
 
     con = duckdb.connect()
@@ -749,78 +564,23 @@ def box_probe(runs: int = 3) -> float:
     return round(best, 4)
 
 
-def _run_spark_query(spark, fn, sf_dir: str, runs: int) -> tuple[list[float], float]:
-    """(wall samples, last-run streaming floor) of one query, fully
-    materialized through the noop sink."""
-    from storm_bench_spark.streaming.streams import LAST_STREAM_RUNS
-
-    samples: list[float] = []
-    floor = 0.0
-    for _ in range(runs):
-        before = list(LAST_STREAM_RUNS)
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        samples.append(time.perf_counter() - t0)
-        # engine-start/checkpoint floor of the run's streams
-        # (VERDICT r8 next #4); roughly constant across runs, so
-        # the last run's value stands for the row
-        floor = sum(
-            r.get("floor_sec") or 0.0
-            for r in LAST_STREAM_RUNS
-            if not any(r is b for b in before)
-        )
-    # Release every DataFrame.persist the query planted (fuzzy
-    # variant tables, shingle arrays, prefix-sum blocks, ...): the
-    # operators are lazy so they cannot unpersist their own
-    # intermediates, and across 100+ queries the cached blocks
-    # otherwise accumulate in executor storage. Between QUERIES,
-    # not runs — the r1–r8 protocol (min-of-N over same-cache
-    # reruns); changing it would break round-over-round deltas.
-    spark.catalog.clearCache()
-    return samples, floor
-
-
-# The nine Arrow-kernel tier rows — the set the r13 judge had to
-# hand-rerun to establish that the killed tier had no organic crash.
-# SPARK_GRAFT_TIER_SMOKE=1 runs exactly these spark-side on the R=10
-# replica, one execution each, no duck leg, no timing protocol: a
-# ~90 s "does the tier crash?" discriminator (VERDICT r13 next #7).
-TIER_SMOKE_ROWS = [
-    "multimodal_bmp_meta",
-    "multimodal_wav_meta",
-    "multimodal_ppm_meta",
-    "multimodal_audio_meta",
-    "ann_rerank",
-    "semdedup",
-    "embedding_neardup_lsh",
-    "lsh_recall_pairs",
-    "ann_topk_ivf_kmeans",
-]
-
-
 def run_tier_smoke() -> None:
     global _LAST_SNAPSHOT
+    from scripts.scale_smoke import ensure_replica
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="sbs-tier-smoke")
     spark.sparkContext.setLogLevel("FATAL")
     queries = all_queries()
-    sel = os.environ.get("SPARK_GRAFT_SCALE_TIER_QUERIES")
-    names = [q.strip() for q in sel.split(",")] if sel else TIER_SMOKE_ROWS
-    unknown = [n for n in names if n not in queries]
-    if unknown:
-        raise SystemExit(f"tier-smoke names not in the registry: {unknown}")
-    from scripts.scale_smoke import ensure_replica
-
-    dst = os.environ.get(
-        "SPARK_GRAFT_SCALE_DIR", f"/tmp/spark_graft_scale{SCALE_TIER_R}"
-    )
+    names, _ = _selection("SPARK_GRAFT_SCALE_TIER_QUERIES", TIER_SMOKE_ROWS, queries)
+    dst = _scale_dir()
     t0 = time.perf_counter()
     ensure_replica(spark, sf_dir, dst, SCALE_TIER_R)
     failures: dict[str, str] = {}
     for name in names:
         t_row = time.perf_counter()
         try:
-            _run_spark_query(spark, queries[name], dst, 1)
+            measure(spark, queries[name], dst, 1)
             status = f"ok ({time.perf_counter() - t_row:.1f}s)"
         except Exception as e:  # noqa: BLE001 — the smoke must finish the list
             failures[name] = str(e).split("\n")[0][:300]
@@ -840,465 +600,163 @@ def run_tier_smoke() -> None:
         sys.exit(1)
 
 
+def _emit(rec: dict) -> tuple[dict, dict]:
+    """(BENCH_DETAIL dict, compact stdout line) of the run record.
+
+    The compact line must fit the driver's 2 KB stdout-tail capture, so
+    it carries totals and the 5 slowest rows only; the detail file has
+    everything."""
+    h = rec["headline"]
+    timings = h["queries"]
+    total = round(sum(timings.values()), 3)
+    total_spread = round(sum(h["spreads"].values()), 3)
+    total_floor = round(sum(h["stream_floor_sec"].values()), 3)
+    duck_total = round(sum(h["duck"].values()), 3)
+    duck_spread = round(sum(h["duck_spreads"].values()), 3)
+    common = {
+        "metric": "headline_queries_total_wall",
+        "value": total,
+        "unit": "sec",
+        "sf": rec["sf"],
+        "parallelism": rec["parallelism"],
+        "master": rec["master"],
+        "cpu_probe_spark_s": rec["cpu_probe_spark_s"],
+        "value_spread": total_spread,
+        "stream_floor_total": total_floor,
+    }
+    detail = {
+        **common,
+        "queries": timings,
+        "spreads": h["spreads"],
+        "first_samples": h["first_samples"],
+        "stream_floor_sec": h["stream_floor_sec"],
+        "runs": rec["runs"],
+        "pair_id": rec["pair_id"],
+        "duck_total": duck_total,
+        "probes": rec["probes"],
+        "mode": "interleaved",
+        "warm_lap": True,
+        # DuckDB is timed while the Spark JVM stays resident
+        "duck_jvm_resident": True,
+        "annex": rec["annex"],
+        "scale_tier": rec["scale_tier"],
+    }
+    out = {
+        **common,
+        "n_queries": len(timings),
+        "queries": dict(sorted(timings.items(), key=lambda kv: -kv[1])[:5]),
+        "detail": "BENCH_DETAIL.json",
+    }
+    retake = []
+    if duck_total:
+        ratio = round(total / duck_total, 3)
+        probes = list(rec["probes"].values())
+        drift = round((max(probes) - min(probes)) / min(probes), 3)
+        out.update(
+            duck_total=duck_total,
+            pair_id=rec["pair_id"],
+            ratio_vs_duck=ratio,
+            # conservative linear propagation of both legs' summed spreads
+            ratio_pm=round(ratio * (total_spread / total + duck_spread / duck_total), 3),
+            probe_drift=drift,
+            mode="interleaved",
+        )
+        if total_floor:
+            # the engine-start floor is real wall but not plan quality
+            out["ratio_vs_duck_processing"] = round((total - total_floor) / duck_total, 3)
+        if drift > RETAKE_DRIFT_MAX:
+            retake.append(f"probe_drift {drift} > {RETAKE_DRIFT_MAX}")
+    if rec["annex"]:
+        out["annex_total"] = rec["annex"]["total"]
+    tier = rec["scale_tier"]
+    if tier:
+        out["sf1_total"] = tier["matched_spark_total"]
+        out["sf1_duck_total"] = tier["duck_total"]
+        out["sf1_ratio"] = tier["ratio_total"]
+        out["sf1_rows"] = len(tier["duck"])
+        if tier["sf1_partial"]:
+            out["sf1_partial"] = True
+    if rec["deadline_skipped"]:
+        out["deadline_skipped"] = list(rec["deadline_skipped"])
+    out["final"] = not rec["pending"]
+    if total > 0 and total_spread > RETAKE_SPREAD_FRAC * total:
+        retake.append(f"value_spread {total_spread} > "
+                      f"{int(RETAKE_SPREAD_FRAC * 100)}% of value {total}")
+    if retake:
+        out["retake_recommended"] = "; ".join(retake)
+    return detail, out
+
+
+def _publish(rec: dict) -> None:
+    """Write BENCH_DETAIL.json, then print the compact line and keep it
+    for the kill handler."""
+    global _LAST_SNAPSHOT
+    detail, out = _emit(rec)
+    here = os.path.dirname(os.path.abspath(__file__))
+    detail_dir = os.environ.get("SPARK_GRAFT_DETAIL_DIR", here)
+    with open(os.path.join(detail_dir, "BENCH_DETAIL.json"), "w") as f:
+        json.dump(detail, f, indent=1, sort_keys=True)
+    if out["final"] and "retake_recommended" in out:
+        print(f"# RETAKE RECOMMENDED before committing this pair: "
+              f"{out['retake_recommended']}", file=sys.stderr)
+    _LAST_SNAPSHOT = json.dumps(out)
+    print(_LAST_SNAPSHOT, flush=True)
+
+
 def main() -> None:
     _install_kill_handler()
     if os.environ.get("SPARK_GRAFT_TIER_SMOKE", "0") == "1":
         return run_tier_smoke()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
     spark = get_spark(app_name="sbs-bench")
-    # FATAL, not ERROR (round 14): when an external kill lands, the
-    # dying executors spew ERROR-level stack traces into the captured
-    # output — in r13 that spew displaced the final snapshot line from
-    # the driver's tail. Real failures still surface as Python
-    # exceptions; the log stream is not the error channel here.
+    # FATAL: real failures surface as Python exceptions, and on an
+    # external kill the dying executors' ERROR spew would otherwise
+    # push the final line out of the driver's captured tail
     spark.sparkContext.setLogLevel("FATAL")
-
-    queries = all_queries()
-    headline = HEADLINE
-    sel_h = os.environ.get("SPARK_GRAFT_HEADLINE_QUERIES")
-    if sel_h:
-        headline = [q.strip() for q in sel_h.split(",")]
-        unknown = [n for n in headline if n not in queries]
-        if unknown:
-            raise SystemExit(
-                f"SPARK_GRAFT_HEADLINE_QUERIES names not in the registry: "
-                f"{unknown}"
-            )
-    # JVM/codegen/scan warmup so the first timed query isn't charged
-    # one-time startup: exercise codegen, a shuffle, and the file index
-    # of every fixture table (cheap count over pruned scans).
-    spark.range(100_000).selectExpr("sum(id * 2)").collect()
-    spark.range(10_000).selectExpr("id % 7 AS k").groupBy("k").count().collect()
-    from storm_bench_spark.sources.tables import TABLES, load_table
-
-    for t in TABLES:
-        load_table(spark, sf_dir, t).select(F.lit(1)).limit(1).collect()
-
+    queries, oracles = all_queries(), all_oracles()
+    headline, _ = _selection("SPARK_GRAFT_HEADLINE_QUERIES", HEADLINE, queries)
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    duck_on = os.environ.get("SPARK_GRAFT_DUCK", "1") != "0"
-    # Round 10 (VERDICT r9 next #3/#6): two protocol upgrades, both
-    # default-on with env opt-outs so the r1–r9 sequential protocol
-    # stays reproducible for bridging measurements.
-    #
-    # WARM LAP: one untimed execution of every headline query before
-    # any timing. min-of-3 provably did not remove first-encounter JIT
-    # (unique_visitor_approx: fully-warm 0.54 s vs benched-min 1.03 s —
-    # C2 compilation of a row's hot paths spans more than 3 encounters
-    # and depends on where the row lands in global run order). After a
-    # full lap, every query's code paths have been compiled once and
-    # the timed lap measures steady state.
-    warm_lap = os.environ.get("SPARK_GRAFT_WARM_LAP", "1") != "0"
-    # INTERLEAVE: engine and DuckDB run A/B/A/B per QUERY instead of
-    # as two whole legs. Box drift (other tenants, thermal) then lands
-    # on both engines' samples of the same row within seconds of each
-    # other and cancels out of the ratio, instead of gating the whole
-    # pair — two full r9 pairs were discarded at probe drift 0.32/0.36
-    # that this layout would have salvaged.
-    interleave = duck_on and os.environ.get("SPARK_GRAFT_INTERLEAVE", "1") != "0"
+    sf = duck_twin.sf_of(sf_dir)
 
-    from scripts.duck_twin import connect, summarize, time_oracle
-    from storm_bench_spark.plans.registry import all_oracles
-
-    oracles = all_oracles() if duck_on else {}
-    con = connect(sf_dir) if interleave else None
-
-    if warm_lap:
-        t_warm = time.perf_counter()
-        for name in headline:
-            _run_spark_query(spark, queries[name], sf_dir, 1)
-        print(
-            f"# warm lap: {len(headline)} queries in "
-            f"{time.perf_counter() - t_warm:.1f}s (untimed)",
-            file=sys.stderr,
-        )
-
-    # box-state gauge at pair start (drift detection below)
-    probe_spark = box_probe()
-    # scaling self-evidence (VERDICT r14 next #2): the effective
-    # parallelism and resolved master prove $SPARK_GRAFT_CPUS reached
-    # the session, and the CPU-bound Spark probe gives the driver a
-    # compute-dominated number that scales with cores even when every
-    # sf0.1 headline row is fixed-cost-dominated.
-    parallelism = spark.sparkContext.defaultParallelism
-    master = spark.sparkContext.master
-    probe_cpu_spark = cpu_probe_spark(spark)
-
-    # min-of-N per query, mirroring the DuckDB baseline's min-of-N:
-    # single-run timings flap ±1 s on untouched code (JIT, GC, page
-    # cache), which made round-over-round deltas unattributable.
-    # Round 9 (VERDICT r8 next #1): N defaults to 3 and the max−min
-    # SPREAD is recorded per query, so every reported number carries
-    # its own dispersion.
-    timings: dict[str, float] = {}
-    spreads: dict[str, float] = {}
-    # cache-honest first sample (VERDICT r14 next #4): run 1 of the
-    # timed lap pays every in-query persist's build cost; runs 2..N
-    # ride the run-1 cache (cleared between QUERIES, not samples — the
-    # r1–r8 protocol). Reporting it per row keeps min-of-N from
-    # over-crediting persist-heavy rows. No protocol change: the
-    # headline value stays min-of-N.
-    first_samples: dict[str, float] = {}
-    stream_floor: dict[str, float] = {}
-    duck_timings: dict[str, float] = {}
-    duck_spreads: dict[str, float] = {}
-    for name in headline:
-        samples, floor = _run_spark_query(spark, queries[name], sf_dir, runs)
-        first_samples[name] = round(samples[0], 3)
-        timings[name] = round(min(samples), 3)
-        # dispersion over the WARM encounters only: run 1 pays JIT /
-        # first-plan compilation for this row's code paths, which is
-        # warm-up, not box noise — including it made value_spread ~50%
-        # of the total and the ± band meaninglessly wide. (With the
-        # warm lap on, run 1 is already warm and the distinction is
-        # mostly moot — kept for protocol continuity.)
-        warm = samples[1:] if len(samples) > 2 else samples
-        spreads[name] = round(max(warm) - min(warm), 3)
-        if floor > 0:
-            stream_floor[name] = round(floor, 3)
-        msg = f"# {name}: {timings[name]}s (min of {runs}, spread {spreads[name]}s)"
-        # guard mirrors the annex loop (ADVICE r10): a headline query
-        # registered rows-only must not crash the bench mid-leg — skip
-        # its duck sample and let the matched-subset ratio note it
-        if interleave and name in oracles:
-            duck_timings[name], duck_spreads[name] = summarize(
-                time_oracle(con, oracles[name], runs)
-            )
-            msg += f" | duck {duck_timings[name]}s"
-        elif interleave:
-            msg += " | duck n/a (rows-only registration)"
-        print(msg, file=sys.stderr)
-
-    # box-state gauge at pair END too (added after the 2026-08-15
-    # evening pairs: churn that ARRIVES mid-leg passes a start-only
-    # gate — four probes make the gate see within-leg drift). In
-    # interleaved mode only start/end probes exist; drift is reported
-    # but never suppresses the ratio — per-row pairing is the defense.
-    probe_spark_end = box_probe()
-
-    total = round(sum(timings.values()), 3)
-    # Full per-query detail goes to a FILE; stdout ends with a compact
-    # line that fits the driver's 2 KB stdout-tail capture (at 103
-    # queries the full dict is >2 KB, which made BENCH_r04 parse as
-    # null — the driver recorded rc=0 but no numbers). The compact
-    # line carries totals + the 5 slowest rows so round-over-round
-    # regression diffing works from the driver record alone;
-    # BENCH_DETAIL.json has everything.
-    # Same-hour DuckDB twin, SAME process, shared pair_id (VERDICT r7
-    # next #4): box state drifts between separately-launched runs (a
-    # reboot mid-round-7 moved Spark times ~36% while DuckDB sat
-    # still), so a ratio is only honest when both legs ran together.
-    # Opt out with SPARK_GRAFT_DUCK=0 (e.g. Spark-only profiling).
-    #
-    # Robustness to an external wall-clock cap: the Spark-leg results
-    # are written and a COMPLETE stdout line printed BEFORE the duck
-    # leg starts, then the final line (with duck_total/ratio) prints
-    # after it. The driver captures the stdout TAIL, so if this
-    # process is killed mid-duck the last intact line still carries
-    # the full Spark record — the pairing degrades gracefully instead
-    # of losing the round's bench numbers.
-    pair_id = time.strftime("%Y-%m-%dT%H:%M:%S")
-    detail_path = os.path.join(
-        os.environ.get(
-            "SPARK_GRAFT_DETAIL_DIR", os.path.dirname(os.path.abspath(__file__))
-        ),
-        "BENCH_DETAIL.json",
-    )
-    worst = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:5])
-    total_spread = round(sum(spreads.values()), 3)
-    total_floor = round(sum(stream_floor.values()), 3)
-    mode = "interleaved" if interleave else "sequential"
-    annex: dict | None = None
-    scale_tier: dict | None = None
-    # Which progressive emits will run (ADVICE r11: the compact line
-    # prints once per completed stage for crash-safety — headline,
-    # +annex, +scale tier — and the driver contract is LAST-LINE-WINS.
-    # Each line now carries "final": whether any stage is still
-    # pending, so a consumer parsing all stdout JSON lines can tell a
-    # progressive snapshot from the round's number of record.)
-    annex_on = interleave and os.environ.get("SPARK_GRAFT_ANNEX", "1") != "0"
-    tier_on = interleave and os.environ.get("SPARK_GRAFT_SCALE_TIER", "1") != "0"
-    # stages the wall-budget deadline refused to start (round 14);
-    # a skipped stage flips its *_on flag so "final" still completes
-    deadline_skipped: list[str] = []
-
-    def _emit(duck_total=None, duck_spread=None, probes=None):
-        global _LAST_SNAPSHOT
-        with open(detail_path, "w") as f:
-            json.dump({
-                "metric": "headline_queries_total_wall",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "spreads": spreads,
-                "first_samples": first_samples,
-                "parallelism": parallelism,
-                "master": master,
-                "cpu_probe_spark_s": probe_cpu_spark,
-                "value_spread": total_spread,
-                "stream_floor_sec": stream_floor,
-                "stream_floor_total": total_floor,
-                "sf": sf,
-                "runs": runs,
-                "pair_id": pair_id,
-                "duck_total": duck_total,
-                "probes": probes,
-                "mode": mode,
-                "warm_lap": warm_lap,
-                # ADVICE r10: interleaved mode times DuckDB while the
-                # full Spark JVM stays resident (the sequential protocol
-                # called spark.stop() first). Recorded so readers can
-                # weigh memory-squeeze asymmetry at larger SFs; the
-                # interleaved-vs-standalone duck agreement is validated
-                # per tier in BASELINE.md ("Protocol bridge" entries).
-                "duck_jvm_resident": mode == "interleaved",
-                "annex": annex,
-                "scale_tier": scale_tier,
-            }, f, indent=1, sort_keys=True)
-        out = {
-            "metric": "headline_queries_total_wall",
-            "value": total,
-            "unit": "sec",
-            "sf": sf,
-            "n_queries": len(timings),
-            "parallelism": parallelism,
-            "master": master,
-            "cpu_probe_spark_s": probe_cpu_spark,
-            "value_spread": total_spread,
-            "stream_floor_total": total_floor,
-            "queries": worst,
-            "detail": "BENCH_DETAIL.json",
-        }
-        if duck_total:
-            out["duck_total"] = duck_total
-            out["pair_id"] = pair_id
-            # ratio over the duck-MATCHED subset: identical to total /
-            # duck_total while every headline row has an oracle (true
-            # today); if a rows-only headline row ever appears, its
-            # spark time must not count against a duck total that
-            # lacks it
-            matched_total = round(
-                sum(timings[n] for n in duck_timings if n in timings), 3
-            )
-            ratio = round(matched_total / duck_total, 3)
-            if matched_total != total:
-                out["ratio_rows"] = len(duck_timings)
-            # ± on the ratio: conservative linear propagation of both
-            # legs' summed per-query spreads
-            pm = round(
-                ratio * (total_spread / total + (duck_spread or 0) / duck_total),
-                3,
-            )
-            drift = None
-            if probes and len([v for v in probes.values() if v]) >= 2:
-                # max pairwise drift over EVERY probe taken (leg
-                # starts AND ends): the gate must see churn that
-                # arrives mid-leg, not only churn present at starts
-                vals = [v for v in probes.values() if v]
-                drift = round((max(vals) - min(vals)) / min(vals), 3)
-            if mode == "sequential" and drift is not None and drift > PROBE_DRIFT_MAX:
-                # box state moved mid-pair: a ratio would attribute the
-                # drift to code — refuse it, keep the raw totals.
-                # Interleaved pairs are exempt (round 10): both engines
-                # sample each row within seconds of each other, so box
-                # drift lands on both legs symmetrically and cancels
-                # out of the ratio instead of corrupting it — drift is
-                # still REPORTED for the record.
-                out["ratio_vs_duck"] = None
-                out["ratio_suppressed_box_drift"] = drift
-            else:
-                out["ratio_vs_duck"] = ratio
-                out["ratio_pm"] = pm
-                if drift is not None:
-                    out["probe_drift"] = drift
-            out["mode"] = mode
-            # processing-time ratio for the streaming-row floor
-            # (VERDICT r8 next #4): the fixed engine-start cost is real
-            # wall but not plan quality — report both
-            if total_floor:
-                out["ratio_vs_duck_processing"] = round(
-                    (total - total_floor) / duck_total, 3
-                )
-        if annex:
-            out["annex_total"] = annex["total"]
-        if scale_tier:
-            out["sf1_total"] = scale_tier["matched_spark_total"]
-            out["sf1_duck_total"] = scale_tier["duck_total"]
-            out["sf1_ratio"] = scale_tier["ratio_total"]
-            out["sf1_rows"] = len(scale_tier["duck"])
-            if scale_tier.get("sf1_partial"):
-                # the deadline cut the tier short (dropped rows and/or
-                # warm-only samples) — the number stands but is partial
-                out["sf1_partial"] = True
-        if deadline_skipped:
-            out["deadline_skipped"] = deadline_skipped
-        # last-line-wins marker (ADVICE r11): progressive crash-safety
-        # emits are snapshots; only the line with final=true carries
-        # every enabled stage
-        out["final"] = not (
-            (annex_on and annex is None)
-            or (tier_on and scale_tier is None)
-            or (mode == "sequential" and duck_on and duck_total is None)
-        )
-        # Closing-pair acceptance rule (VERDICT r11 next #6): the r11
-        # closing pair ran at probe_drift 0.139 / spread 20 s and only
-        # the three-pair envelope saved the round. Encode the informal
-        # rule: a pair whose probe drift exceeds 0.1 or whose summed
-        # spread exceeds 15% of its value should be retaken once on an
-        # idle box before the round's headline is committed. Advisory
-        # (the numbers still print — per-row pairing keeps ratios
-        # honest under drift); the flag makes the retake decision
-        # mechanical instead of judgment.
-        retake = []
-        # explicit None check (ADVICE r12): a drift of exactly 0.0 is
-        # falsy — `or` would fall through to the (absent) suppressed
-        # key and yield None for a perfectly-measured pair
-        d_ = out.get("probe_drift")
-        if d_ is None:
-            d_ = out.get("ratio_suppressed_box_drift")
-        if d_ is not None and d_ > RETAKE_DRIFT_MAX:
-            retake.append(f"probe_drift {d_} > {RETAKE_DRIFT_MAX}")
-        if total > 0 and total_spread > RETAKE_SPREAD_FRAC * total:
-            retake.append(
-                f"value_spread {total_spread} > "
-                f"{int(RETAKE_SPREAD_FRAC * 100)}% of value {total}"
-            )
-        if retake:
-            out["retake_recommended"] = "; ".join(retake)
-            if out["final"]:
-                print(
-                    f"# RETAKE RECOMMENDED before committing this pair: "
-                    f"{out['retake_recommended']}",
-                    file=sys.stderr,
-                )
-        line = json.dumps(out)
-        _LAST_SNAPSHOT = line
-        print(line, flush=True)
-
-    from scripts.duck_twin import write_detail
-
-    if interleave:
-        probes = {"pair_start": probe_spark, "pair_end": probe_spark_end}
-        duck_total = round(sum(duck_timings.values()), 3)
-        write_detail(duck_timings, sf, runs, pair_id=pair_id,
-                     spreads=duck_spreads, probe=probe_spark)
-        _emit(duck_total, round(sum(duck_spreads.values()), 3), probes)
-    else:
-        probes = {
-            "spark_leg": probe_spark,
-            "spark_leg_end": probe_spark_end,
-            "duck_leg": None,
-            "duck_leg_end": None,
-        }
-        _emit(probes=probes)
-        if duck_on:
-            spark.stop()  # free the JVM's memory before DuckDB materializes
-            from scripts.duck_twin import time_oracles
-
-            probes["duck_leg"] = box_probe()
-            duck_timings, duck_spreads = time_oracles(sf_dir, headline, runs)
-            probes["duck_leg_end"] = box_probe()
-            write_detail(duck_timings, sf, runs, pair_id=pair_id,
-                         spreads=duck_spreads, probe=probes["duck_leg"])
-            _emit(round(sum(duck_timings.values()), 3),
-                  round(sum(duck_spreads.values()), 3), probes)
-
-    # ANNEX (VERDICT r9 next #5): a perf datum for every registered
-    # query, not just the headline set. The non-headline rows are the
-    # streaming twins (floor-dominated by design — stream_floor_sec is
-    # recorded so processing time is separable) and trivial library
-    # ops; they are timed min-of-2 AFTER the headline pair so they
-    # cannot perturb it, and the headline totals/ratio above exclude
-    # them (protocol continuity). A complete compact line has already
-    # printed, so an annex crash or an external wall-clock kill cannot
-    # lose the round's numbers; after the annex the line re-prints
-    # with annex_total added. Interleaved-mode only (sequential mode
-    # stops the JVM before the duck leg).
-    if annex_on and _past_deadline():
-        # wall budget spent before the annex (round 14): skip it, keep
-        # the round's headline numbers, finish with a parseable line
-        annex_on = False
-        deadline_skipped.append("annex")
-        print(
-            f"# DEADLINE ({_deadline_s():.0f}s) hit before the annex — "
-            "skipping it",
-            file=sys.stderr,
-        )
-    if annex_on:
-        annex_names = [n for n in queries if n not in set(headline)]
-        a_runs = min(2, runs) if runs > 0 else 1
-        a_t: dict[str, float] = {}
-        a_floor: dict[str, float] = {}
-        a_duck: dict[str, float] = {}
-        for name in annex_names:
-            samples, floor = _run_spark_query(spark, queries[name], sf_dir, a_runs)
-            a_t[name] = round(min(samples), 3)
-            if floor > 0:
-                a_floor[name] = round(floor, 3)
-            msg = f"# annex {name}: {a_t[name]}s (min of {a_runs})"
-            if name in oracles:
-                a_duck[name], _ = summarize(time_oracle(con, oracles[name], a_runs))
-                msg += f" | duck {a_duck[name]}s"
-            print(msg, file=sys.stderr)
-        # per-row ratios, wall AND processing (VERDICT r10 next #6): the
-        # annex is mostly streaming twins whose wall is dominated by the
-        # ~0.3 s/row engine-start floor — report (wall − floor)/duck
-        # beside wall/duck so a floor-dominated row isn't misread as
-        # plan cost
-        a_ratio = {
-            n: round(a_t[n] / a_duck[n], 3) for n in a_duck if a_duck[n]
-        }
-        a_proc = {
-            n: round(max(a_t[n] - a_floor.get(n, 0.0), 0.0) / a_duck[n], 3)
-            for n in a_duck
-            if a_duck[n]
-        }
-        annex = {
-            "queries": a_t,
-            "duck": a_duck,
-            "ratio": a_ratio,
-            "ratio_processing": a_proc,
-            "stream_floor_sec": a_floor,
-            "total": round(sum(a_t.values()), 3),
-            "duck_total": round(sum(a_duck.values()), 3),
-            "stream_floor_total": round(sum(a_floor.values()), 3),
-            "runs": a_runs,
-        }
-        _emit(round(sum(duck_timings.values()), 3),
-              round(sum(duck_spreads.values()), 3), probes)
-
-    # sf1 SCALE TIER (VERDICT r10 next #1): at sf0.1 DuckDB's
-    # denominators for ~100 of the 145 headline rows are < 100 ms, so
-    # those ratios measure Spark's per-job floor, not plans. This tier
-    # re-times the DATA-SIZED rows on an R=10 replica (sf1-equivalent,
-    # scripts/scale_smoke.py's key-remapped + perturbed replication) with
-    # the same interleaved duck twin — per-row ratios there are data-
-    # dominated and carry the 2x adjudication for those rows. Runs LAST:
-    # a complete compact line has already printed, so a tier crash or an
-    # external wall-clock kill cannot lose the round's headline numbers.
-    if tier_on and _past_deadline():
-        tier_on = False
-        deadline_skipped.append("sf1_tier")
-        print(
-            f"# DEADLINE ({_deadline_s():.0f}s) hit before the sf1 tier "
-            "— skipping it",
-            file=sys.stderr,
-        )
-    if tier_on:
-        scale_tier = run_scale_tier(spark, queries, oracles, sf_dir)
-        _emit(round(sum(duck_timings.values()), 3),
-              round(sum(duck_spreads.values()), 3), probes)
-
-    if deadline_skipped and interleave:
-        # a stage was refused: the last emitted line predates the skip
-        # decision, so re-emit — now with final=true and the skipped
-        # stages named — and exit 0 (VERDICT r13 next #1b done-criteria)
-        _emit(round(sum(duck_timings.values()), 3),
-              round(sum(duck_spreads.values()), 3), probes)
-
-    if con is not None:
-        con.close()
+    warm_session(spark, sf_dir)
+    warm_lap(spark, queries, sf_dir, headline)
+    con = duck_twin.connect(sf_dir)
+    sc = spark.sparkContext
+    rec: dict = {
+        "sf": sf,
+        "runs": runs,
+        "probes": {"pair_start": box_probe()},
+        # parallelism and master prove $SPARK_GRAFT_CPUS reached the session
+        "parallelism": sc.defaultParallelism,
+        "master": sc.master,
+        "cpu_probe_spark_s": cpu_probe_spark(spark),
+    }
+    rec["headline"] = h = run_headline(spark, queries, oracles, con, sf_dir, headline, runs)
+    rec["probes"]["pair_end"] = box_probe()
+    # one pair_id stamps both detail files: every ratio is same-box,
+    # same-hour by construction
+    rec["pair_id"] = time.strftime("%Y-%m-%dT%H:%M:%S")
+    duck_twin.write_detail(h["duck"], sf, runs, pair_id=rec["pair_id"],
+                           spreads=h["duck_spreads"], probe=rec["probes"]["pair_start"])
+    stages = {"annex": "SPARK_GRAFT_ANNEX", "sf1_tier": "SPARK_GRAFT_SCALE_TIER"}
+    rec.update(annex=None, scale_tier=None, deadline_skipped=[],
+               pending=[s for s, knob in stages.items() if os.environ.get(knob, "1") != "0"])
+    # a complete line prints before each later stage, so a crash or an
+    # external kill there cannot lose the headline's numbers
+    _publish(rec)
+    for stage in list(rec["pending"]):
+        if _past_deadline():
+            rec["deadline_skipped"].append(stage)
+            print(f"# DEADLINE ({_deadline_s():.0f}s) hit before the {stage} — "
+                  "skipping it", file=sys.stderr)
+        elif stage == "annex":
+            rest = [n for n in queries if n not in set(headline)]
+            rec["annex"] = run_annex(spark, queries, oracles, con, sf_dir, rest, runs)
+        else:
+            rec["scale_tier"] = run_scale_tier(spark, queries, oracles, sf_dir)
+        rec["pending"].remove(stage)
+        _publish(rec)
+    con.close()
 
     # test hook for the kill contract (tests/test_bench_contract.py):
     # hold the process alive after the final emit so a test can SIGTERM

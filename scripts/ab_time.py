@@ -4,10 +4,11 @@
 Usage:
     python scripts/ab_time.py <out_json> <query> [<query> ...]
 
-Mirrors the bench headline per-query protocol exactly (warm lap of 1
-untimed run, then min-of-3 timed runs through the noop sink, cache
-cleared between queries, engine get_spark session) so numbers are
-comparable to BENCH_DETAIL.json rows taken on the same box.
+Runs the bench headline's Spark leg through bench.py's own warm-up
+and measurement kernel (session warm-up, a warm lap of 1 untimed run,
+then min-of-3 timed runs through the noop sink, cache cleared between
+queries, engine get_spark session) so numbers are comparable to
+BENCH_DETAIL.json rows taken on the same box.
 """
 
 from __future__ import annotations
@@ -15,7 +16,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path[:0] = [os.path.dirname(os.path.dirname(os.path.abspath(__file__)))]
 
@@ -35,31 +35,13 @@ def main() -> None:
     if unknown:
         raise SystemExit(f"not in the registry: {unknown}")
 
-    # same session warmup as bench.py
-    from pyspark.sql import functions as F
+    from bench import measure, warm_lap, warm_session
 
-    from storm_bench_spark.sources.tables import TABLES, load_table
-
-    spark.range(100_000).selectExpr("sum(id * 2)").collect()
-    spark.range(10_000).selectExpr("id % 7 AS k").groupBy("k").count().collect()
-    for t in TABLES:
-        load_table(spark, sf_dir, t).select(F.lit(1)).limit(1).collect()
-
-    def run_once(fn):
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    # full warm lap first (bench protocol), then timed lap
-    for name in names:
-        spark.sparkContext.setJobDescription(f"warm:{name}")
-        run_once(queries[name])
-        spark.catalog.clearCache()
+    warm_session(spark, sf_dir)
+    warm_lap(spark, queries, sf_dir, names)
     timings: dict[str, float] = {}
     for name in names:
-        spark.sparkContext.setJobDescription(f"time:{name}")
-        samples = [run_once(queries[name]) for _ in range(runs)]
-        spark.catalog.clearCache()
+        samples = measure(spark, queries[name], sf_dir, runs).spark
         timings[name] = round(min(samples), 3)
         print(f"# {name}: {timings[name]}s  (samples {[round(s,3) for s in samples]})", file=sys.stderr)
     with open(out, "w") as f:

@@ -41,6 +41,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 N_QUERIES = int(os.environ.get("BOX_CONTROL_N", "10"))
 RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
 
+# Keeps its own copy of the noop-sink loop rather than bench.measure:
+# it runs inside an older checked-out tree, which may predate the kernel.
 _TIMER = """
 import json, sys, time
 from storm_bench_spark.plans.registry import all_queries

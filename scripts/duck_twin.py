@@ -9,11 +9,11 @@ protocol: same SF directory, min-of-N (default 2), results fully
 materialized (fetchall — the analog of bench.py's noop write), one
 process, queries in HEADLINE order.
 
-Since round 8 the pairing is MECHANICAL (VERDICT r7 next #4):
-``bench.py`` invokes :func:`time_oracles` in the same run and stamps
-both BENCH_DETAIL.json and DUCK_DETAIL.json with one shared
-``pair_id``, so every recorded engine/duck ratio is same-hour same-box
-by construction. Standalone invocation remains for re-measurement:
+``bench.py`` times each oracle with :func:`time_oracle` right after
+its Spark row in the same process, and stamps both BENCH_DETAIL.json
+and DUCK_DETAIL.json with one shared ``pair_id``, so every recorded
+engine/duck ratio is same-hour same-box by construction. Standalone
+invocation remains for re-measurement:
 
     python scripts/duck_twin.py                  # sf0.1, writes DUCK_DETAIL.json
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 python scripts/duck_twin.py
@@ -49,9 +49,7 @@ def sf_of(sf_dir: str) -> float:
 
 
 def connect(sf_dir: str):
-    """One DuckDB connection with the fixture tables as views — the
-    shared setup for both the sequential leg and bench.py's
-    interleaved per-query pairing (round 10)."""
+    """One DuckDB connection with the fixture tables as views."""
     import duckdb
 
     from storm_bench_spark.sources.tables import TABLES
@@ -98,10 +96,6 @@ def time_oracles(
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
     for name in names:
-        if name not in oracles:  # rows-only registration (ADVICE r10)
-            if verbose:
-                print(f"# duck {name}: skipped (no oracle)", file=sys.stderr)
-            continue
         timings[name], spreads[name] = summarize(
             time_oracle(con, oracles[name], runs)
         )

@@ -37,27 +37,17 @@ SPIN = "import time\nwhile True:\n  x = sum(i * i for i in range(10000))\n"
 
 
 def run_pair(spark, con, queries, oracles, sf_dir, runs=3):
-    from scripts.duck_twin import summarize, time_oracle
+    from bench import measure
+    from scripts.duck_twin import summarize
 
     eng: dict[str, float] = {}
     eng_sp: dict[str, float] = {}
     duck: dict[str, float] = {}
     duck_sp: dict[str, float] = {}
     for name in SUBSET:
-        samples = []
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            queries[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            samples.append(time.perf_counter() - t0)
-        spark.catalog.clearCache()
-        warm = samples[1:] if len(samples) > 2 else samples
-        eng[name] = round(min(samples), 3)
-        eng_sp[name] = round(max(warm) - min(warm), 3)
-        duck[name], duck_sp[name] = summarize(
-            time_oracle(con, oracles[name], runs)
-        )
+        s = measure(spark, queries[name], sf_dir, runs, con, oracles[name])
+        eng[name], eng_sp[name] = summarize(s.spark)
+        duck[name], duck_sp[name] = summarize(s.duck)
         print(f"# {name}: eng {eng[name]} duck {duck[name]}", file=sys.stderr)
     e, d = sum(eng.values()), sum(duck.values())
     ratio = round(e / d, 3)
@@ -78,10 +68,10 @@ def main() -> None:
     queries, oracles = all_queries(), all_oracles()
     con = connect(sf_dir)
 
-    # warm lap (untimed), same as bench.py
-    for name in SUBSET:
-        queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
+    from bench import warm_lap, warm_session
+
+    warm_session(spark, sf_dir)
+    warm_lap(spark, queries, sf_dir, SUBSET)
 
     idle = run_pair(spark, con, queries, oracles, sf_dir)
 

@@ -170,7 +170,7 @@ def packed_order(hi: Column | str, lo: Column | str) -> Column:
     Sorts). DECIMAL(38,0) IS a mutable buffer type, so ``max(packed)``
     + per-column ``max_by(col, packed)`` hash-aggregate.
 
-    Correctness bounds, checked statically rather than at runtime:
+    Correctness bounds (property-tested in tests/test_properties.py):
     ``lo`` must lie in [0, 10^19) — any non-negative BIGINT qualifies
     since 2^63 − 1 ≈ 9.22e18 < 10^19 — while ``hi`` may be any bigint
     (the encoding stays monotone for negative hi as long as lo is in
@@ -185,15 +185,6 @@ def packed_order(hi: Column | str, lo: Column | str) -> Column:
     return hi_c.cast("decimal(19,0)") * F.expr(
         f"CAST({_PACK_RADIX} AS DECIMAL(20,0))"
     ) + lo_c.cast("decimal(19,0)")
-
-
-def unpack_order_hi(packed: Column | str) -> Column:
-    """The ``hi`` bigint back out of :func:`packed_order` (exact
-    decimal arithmetic; valid for hi ≥ 0, which every current caller
-    satisfies — epoch-derived timestamps)."""
-    p = F.col(packed) if isinstance(packed, str) else packed
-    radix = F.expr(f"CAST({_PACK_RADIX} AS DECIMAL(20,0))")
-    return ((p - (p % radix)) / radix).cast("bigint")
 
 
 def latest_by(df: DataFrame, key_cols: Sequence[str], order_key: Column, payload_cols: Sequence[str]) -> DataFrame:

@@ -3,11 +3,9 @@
 The driver contract (``__spark_entry__.py``) needs ``queries()`` and
 ``oracle_sql()`` dicts; this registry is their single source of truth.
 Each registered query is a ``(spark, sf_dir) -> DataFrame`` callable plus
-an optional DuckDB oracle SQL string with IDENTICAL output column names
-(the driver sorts columns by name before hashing).
-
-Queries with ``oracle=None`` are non-SQL-expressible (custom stateful
-streaming etc.) and get the driver's weaker rows-only check.
+a mandatory DuckDB oracle SQL string with IDENTICAL output column names
+(the driver sorts columns by name before hashing), so every query gets
+the driver's full row-hash check and every bench row a DuckDB twin.
 """
 
 from __future__ import annotations
@@ -24,14 +22,14 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class QuerySpec:
     name: str
     fn: QueryFn
-    oracle: str | None
+    oracle: str
     doc: str = ""
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
 
 
-def register(name: str, oracle: str | None = None, doc: str = ""):
+def register(name: str, oracle: str, doc: str = ""):
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
@@ -307,7 +305,7 @@ def all_queries() -> dict[str, QueryFn]:
 
 def all_oracles() -> dict[str, str]:
     _ensure_loaded()
-    return {spec.name: spec.oracle for spec in _gate_ordered() if spec.oracle is not None}
+    return {spec.name: spec.oracle for spec in _gate_ordered()}
 
 
 def get_spec(name: str) -> QuerySpec:

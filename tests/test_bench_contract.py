@@ -27,46 +27,56 @@ def test_headline_queries_are_oracle_checked():
 
 def test_compact_summary_line_fits_driver_tail():
     """The driver parses bench.py's LAST stdout line from a 2 KB tail
-    capture (bench.py:199-211 — BENCH_r04 was lost to an over-long
-    line). The compact line is top-5-only so it does not grow with
-    registry COUNT, but it does grow with query-NAME length: build the
-    worst case the current registry could emit — the five longest
-    names, max-width float values, worst total — and assert it clears
-    the 2 KB tail with headroom. Adding a verbose field or switching
-    back to the full dict fails here before it loses a round's BENCH."""
+    capture (BENCH_r04 was lost to an over-long line). The compact line
+    is top-5-only so it does not grow with registry COUNT, but it does
+    grow with query-NAME length: feed the real line builder the worst
+    case the current registry could emit — the five longest names as
+    the slowest rows, max-width values, every optional field switched
+    on — and assert it clears the 2 KB tail with headroom. Adding a
+    verbose field or switching back to the full dict fails here before
+    it loses a round's BENCH."""
     import json
 
-    names = sorted(all_queries(), key=len, reverse=True)[:5]
-    worst_line = json.dumps({
-        "metric": "headline_queries_total_wall",
-        "value": 99999.999,
-        "unit": "sec",
-        "sf": 0.1,
-        "n_queries": len(all_queries()),
-        "value_spread": 99999.999,
-        "stream_floor_total": 99999.999,
-        "queries": {n: 99999.999 for n in names},
-        "detail": "BENCH_DETAIL.json",
-        "duck_total": 99999.999,
+    from bench import _emit
+
+    names = sorted(all_queries(), key=len, reverse=True)
+    wide = {n: 99999.999 for n in names}
+    rec = {
+        "sf": 0.001,
+        "runs": 3,
+        "parallelism": 9999,
+        "master": "local[9999]",
+        "cpu_probe_spark_s": 99999.999,
+        "probes": {"pair_start": 1.0, "pair_end": 10.999},
         "pair_id": "2026-01-01T00:00:00",
-        "ratio_vs_duck": 99.999,
-        "ratio_pm": 99.999,
-        "probe_drift": 9.999,
-        "mode": "interleaved",
-        "ratio_vs_duck_processing": 99.999,
-        "annex_total": 99999.999,
-        "sf1_total": 99999.999,
-        "sf1_duck_total": 99999.999,
-        "sf1_ratio": 99.999,
-        "sf1_rows": 999,
-        "sf1_partial": True,
+        "headline": {
+            "queries": wide,
+            "spreads": wide,
+            "first_samples": wide,
+            "stream_floor_sec": {n: 0.001 for n in names},
+            "duck": {n: 0.007 for n in names},
+            "duck_spreads": wide,
+        },
+        "annex": {"total": 99999.999},
+        "scale_tier": {
+            "matched_spark_total": 99999.999,
+            "duck_total": 99999.999,
+            "ratio_total": 99.999,
+            "duck": {str(i): 1.0 for i in range(999)},
+            "sf1_partial": True,
+        },
         "deadline_skipped": ["annex", "sf1_tier"],
-        "final": False,
-        "retake_recommended": (
-            "probe_drift 9.999 > 0.1; value_spread 99999.999 > 15% of "
-            "value 99999.999"
-        ),
-    })
+        "pending": ["sf1_tier"],
+    }
+    _, out = _emit(rec)
+    assert list(out["queries"]) == names[:5]
+    optional = {
+        "ratio_vs_duck_processing", "probe_drift", "annex_total", "sf1_partial",
+        "deadline_skipped", "retake_recommended",
+    }
+    assert optional <= set(out), f"worst case misses {optional - set(out)}"
+    assert "; " in out["retake_recommended"]  # both retake reasons
+    worst_line = json.dumps(out)
     assert len(worst_line.encode()) < 1536, (
         f"compact bench line could reach {len(worst_line)} B; the driver "
         f"tail-captures 2048 B — trim fields or name lengths"
@@ -147,64 +157,85 @@ def test_scale_tier_names_resolve():
 
 
 def test_scale_tier_warm_lap_protocol(spark, tmp_path, monkeypatch):
-    """Round 13/14: the tier runs the headline's warm-lap protocol —
-    one execution of every row first in a full lap, then the timed lap,
-    duck symmetric. Since round 14 (VERDICT r13 next #1a) the warm run
-    COUNTS as each below-cut row's first timed sample, so a row costs
-    exactly `runs` executions per leg (r12's wall), not r13's
-    warm+runs — asserted here by counting real executions through a
-    delegating wrapper. SPARK_GRAFT_SCALE_WARM=0 reproduces the
-    pre-r13 adaptive-sampling path. Exercised end-to-end on a tiny
-    sf0.001-based replica so the assertion covers the real loop, not
-    a mock: execution counts, sample counts, the warmed flags, the
-    recorded protocol fields, and replica reuse via the marker."""
+    """Every stage times its rows through bench.measure, and each row's
+    per-leg execution count is the protocol's:
+    - headline: 1 warm-lap run + `runs` timed runs on Spark, `runs` on
+      DuckDB;
+    - annex: min(2, `runs`) on each leg;
+    - sf1 tier: SCALE_RUNS on each leg — a full warm lap first, whose
+      run COUNTS as the row's first timed sample.
+    Counted through delegating wrappers around the query functions and
+    duck_twin.time_oracle, end to end on sf0.001-based data so the
+    assertion covers the real loops, not a mock; the tier part also
+    checks sample counts, warmed flags, the recorded protocol fields,
+    and replica reuse via the marker."""
+    from collections import Counter
+
     import bench as B
-    from bench import run_scale_tier
     from scripts import duck_twin as DT
     from scripts.scale_smoke import read_replica_marker
 
+    base = "/root/testdata/sf0.001"
+    oracles = all_oracles()
+    spark_execs: Counter = Counter()
+    duck_execs: Counter = Counter()
+
+    def counted(name, fn):
+        def run(sp, d):
+            spark_execs[name] += 1
+            return fn(sp, d)
+        return run
+
+    queries = {n: counted(n, fn) for n, fn in all_queries().items()}
+    real_oracle = DT.time_oracle
+
+    def oracle_counted(con, sql, runs):
+        duck_execs[sql] += runs
+        return real_oracle(con, sql, runs)
+
+    monkeypatch.setattr(DT, "time_oracle", oracle_counted)
+
+    # headline + annex, through the same functions main() calls
+    runs = 3
+    annex_row = "expand_words"
+    assert annex_row not in B.HEADLINE
+    con = DT.connect(base)
+    try:
+        B.warm_lap(spark, queries, base, ["wordcount"])
+        h = B.run_headline(spark, queries, oracles, con, base, ["wordcount"], runs)
+        a = B.run_annex(spark, queries, oracles, con, base, [annex_row], runs)
+    finally:
+        con.close()
+    assert spark_execs["wordcount"] == 1 + runs
+    assert duck_execs[oracles["wordcount"]] == runs
+    assert set(h["queries"]) == set(h["duck"]) == {"wordcount"}
+    assert h["first_samples"]["wordcount"] >= h["queries"]["wordcount"]
+    assert spark_execs[annex_row] == 2 and duck_execs[oracles[annex_row]] == 2
+    assert a["runs"] == 2 and set(a["ratio"]) == {annex_row}
+
+    # sf1 tier
+    spark_execs.clear()
+    duck_execs.clear()
     dst = str(tmp_path / "tier_replica")
     monkeypatch.setenv("SPARK_GRAFT_SCALE_DIR", dst)
     monkeypatch.setenv("SPARK_GRAFT_SCALE_TIER_QUERIES", "wordcount")
-    monkeypatch.setenv("SPARK_GRAFT_SCALE_RUNS", "2")
-    base = "/root/testdata/sf0.001"
-
-    spark_execs = {"n": 0}
-    real_run = B._run_spark_query
-    monkeypatch.setattr(
-        B, "_run_spark_query",
-        lambda sp, fn, d, runs: (spark_execs.__setitem__("n", spark_execs["n"] + runs)
-                                 or real_run(sp, fn, d, runs)),
-    )
-    duck_execs = {"n": 0}
-    real_oracle = DT.time_oracle
-    monkeypatch.setattr(
-        DT, "time_oracle",
-        lambda con, sql, runs: (duck_execs.__setitem__("n", duck_execs["n"] + runs)
-                                or real_oracle(con, sql, runs)),
-    )
-
-    out = run_scale_tier(spark, all_queries(), all_oracles(), base)
-    assert out["warm_run"] is True
+    out = B.run_scale_tier(spark, queries, oracles, base)
+    assert out["warm_run"] is True and out["runs"] == B.SCALE_RUNS == 2
     assert out["warmed"] == {"wordcount": True}
-    # warm run = first timed sample: exactly `runs` samples AND exactly
-    # `runs` executions per leg (the r13 protocol executed runs+1)
+    # warm run = first timed sample: exactly SCALE_RUNS samples AND
+    # exactly SCALE_RUNS executions per leg
     assert out["n_samples"] == {"wordcount": 2}
     assert out["duck_n_samples"] == {"wordcount": 2}
-    assert spark_execs["n"] == 2
-    assert duck_execs["n"] == 2
+    assert spark_execs["wordcount"] == 2
+    assert duck_execs[oracles["wordcount"]] == 2
     assert out["ratio"]["wordcount"] is not None
     assert out["sf1_partial"] is False
     assert out["deadline_dropped"] == [] and out["deadline_degraded"] == []
     marker = read_replica_marker(dst)
     assert marker == {"base": base, "r": out["r"]}
 
-    # opt-out reproduces the r10-r12 protocol (first sample timed,
-    # adaptive top-up) and reuses the replica without a rebuild
-    monkeypatch.setenv("SPARK_GRAFT_SCALE_WARM", "0")
-    out2 = run_scale_tier(spark, all_queries(), all_oracles(), base)
-    assert out2["warm_run"] is False
-    assert out2["warmed"] == {"wordcount": False}
+    # a second run reuses the replica without a rebuild
+    out2 = B.run_scale_tier(spark, queries, oracles, base)
     assert out2["n_samples"] == {"wordcount": 2}
     assert out2["replicate_build_s"] < 1.0  # marker hit — no rebuild
 
@@ -290,22 +321,49 @@ def test_alternating_halves_rotation_membership():
     }
     overlap = must_stay & both
     assert not overlap, f"watch rows must not rotate out: {overlap}"
-    kept_e, rotated_e = _apply_rotation(list(SF1_TIER), False, "auto", 14)
+    kept_e, rotated_e = _apply_rotation(list(SF1_TIER), False, 14)
     assert set(rotated_e) == set(SF1_TIER_SKIP_ON_EVEN)
     assert must_stay <= set(kept_e)
-    kept_o, rotated_o = _apply_rotation(list(SF1_TIER), False, "auto", 15)
+    kept_o, rotated_o = _apply_rotation(list(SF1_TIER), False, 15)
     assert set(rotated_o) == set(SF1_TIER_SKIP_ON_ODD)
     assert must_stay <= set(kept_o)
     # every stable row runs on exactly one parity
     assert both <= set(kept_e) | set(kept_o)
     # r14-touched rows needing odd-round corroboration DO run on odd
     assert {"corpus_curate", "ann_topk_ivf_kmeans"} <= set(kept_o)
-    # unknown round / explicit selection / 'all' -> no skip
-    assert _apply_rotation(list(SF1_TIER), False, "auto", None)[1] == []
-    assert _apply_rotation(list(SF1_TIER), True, "auto", 14)[1] == []
-    assert _apply_rotation(list(SF1_TIER), False, "all", 14)[1] == []
-    # 'skip' -> both halves out
-    assert set(_apply_rotation(list(SF1_TIER), False, "skip", 15)[1]) == both
+    # unknown round / explicit selection -> no skip
+    assert _apply_rotation(list(SF1_TIER), False, None)[1] == []
+    assert _apply_rotation(list(SF1_TIER), True, 14)[1] == []
+
+
+def test_bench_knobs_are_the_documented_ones():
+    """The SPARK_GRAFT_* names bench.py reads must be exactly the list
+    README.md's "Bench knobs" section documents, so a knob cannot creep
+    back undocumented (or linger in the docs after it is gone)."""
+    import ast
+    import os
+    import re
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(repo, "bench.py")) as f:
+        tree = ast.parse(f.read())
+    # every knob name is a string literal of its own, whether it is
+    # read in place or passed on (e.g. to _selection)
+    read = {
+        node.value for node in ast.walk(tree)
+        if isinstance(node, ast.Constant) and isinstance(node.value, str)
+        and re.fullmatch(r"SPARK_GRAFT_\w+", node.value)
+    }
+    with open(os.path.join(repo, "README.md")) as f:
+        readme = f.read()
+    assert "### Bench knobs" in readme
+    section = readme.split("### Bench knobs", 1)[1].split("\n#", 1)[0]
+    documented = set(re.findall(r"`(SPARK_GRAFT_\w+)", section))
+    assert read, "found no knob reads in bench.py — the pattern is stale"
+    assert read == documented, (
+        f"read but undocumented: {sorted(read - documented)}; "
+        f"documented but not read: {sorted(documented - read)}"
+    )
 
 
 def test_infer_round_from_bench_artifacts():

@@ -569,3 +569,45 @@ def test_dup_span_extents_matches_python_islands(spark, corpus_texts, k):
         for s, e, nw in spans:
             expect[(d, s)] = (e - s + k, nw)
     assert got == expect
+
+
+# ---------------------------------------------------------------------------
+# packed_order: order-preserving, exact, never null, at any bigint hi
+
+_I64_MIN, _I64_MAX = -(2**63), 2**63 - 1
+# the extremes ride along in every example, not only when drawn
+_PACK_EXTREMES = [
+    (_I64_MIN, 0), (_I64_MIN, _I64_MAX), (-1, _I64_MAX), (0, 0),
+    (0, _I64_MAX), (_I64_MAX, 0), (_I64_MAX, _I64_MAX),
+]
+_pack_pairs = st.lists(
+    st.tuples(
+        st.one_of(
+            st.sampled_from([_I64_MIN, _I64_MIN + 1, -1, 0, 1, _I64_MAX]),
+            st.integers(_I64_MIN, _I64_MAX),
+        ),
+        st.integers(0, _I64_MAX),
+    ),
+    min_size=1,
+    max_size=30,
+)
+
+
+@settings(max_examples=8, deadline=None)
+@given(_pack_pairs)
+def test_packed_order_sorts_like_the_pair(spark, pairs):
+    from storm_bench_spark.operators.windows import packed_order
+
+    pairs = pairs + _PACK_EXTREMES
+    df = spark.createDataFrame(
+        [Row(i=i, hi=h, lo=lo) for i, (h, lo) in enumerate(pairs)],
+        schema="i long, hi long, lo long",
+    ).select("i", "hi", "lo", packed_order("hi", "lo").alias("p"))
+    rows = df.collect()
+    for r in rows:
+        # exact hi * 10^19 + lo: no null, no overflow, no rounding
+        # (compared as Python ints: Decimal arithmetic rounds to 28 digits)
+        assert r.p is not None and int(r.p) == r.hi * 10**19 + r.lo, (r.hi, r.lo, r.p)
+    by_pair = [r.i for r in df.orderBy("hi", "lo", "i").collect()]
+    by_packed = [r.i for r in df.orderBy("p", "i").collect()]
+    assert by_pair == by_packed

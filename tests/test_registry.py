@@ -48,7 +48,7 @@ def test_all_queries_order_matches_gate_priority():
 def test_unlisted_names_sort_last_not_first():
     # Fail-safe semantics: even if the set-equality test were skipped,
     # an unlisted query lands BELOW the window, never inside it.
-    spec = R.QuerySpec(name="zz_unlisted_probe", fn=lambda s, d: None, oracle=None)
+    spec = R.QuerySpec(name="zz_unlisted_probe", fn=lambda s, d: None, oracle="SELECT 1 AS x")
     R._ensure_loaded()
     R._REGISTRY[spec.name] = spec
     try:
@@ -57,3 +57,10 @@ def test_unlisted_names_sort_last_not_first():
         assert spec.name not in ordered[:50]
     finally:
         del R._REGISTRY[spec.name]
+
+
+def test_every_query_has_an_oracle():
+    # oracles are mandatory: every query gets the driver's full row-hash
+    # check, and the bench times every row against its DuckDB twin with
+    # no rows-only branch
+    assert set(R.all_oracles()) == set(R.all_queries())
