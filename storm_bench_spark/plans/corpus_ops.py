@@ -44,7 +44,6 @@ from storm_bench_spark.functions.text import word_split
 from storm_bench_spark.operators import similarity as SIM
 from storm_bench_spark.plans.pipeline import _WORDS_SQL, _spread
 from storm_bench_spark.plans.registry import register
-from storm_bench_spark.streaming.streams import drains_input_bytes_on_error
 from storm_bench_spark.sources.tables import load_table
 
 EMB_DIM = 64
@@ -1088,7 +1087,6 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("streaming_heavy_hitters", oracle=_CMS_ORACLE)
-@drains_input_bytes_on_error
 def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``heavy_hitters_cms`` through the streaming engine: the CMS
     CELL TABLE is the streaming aggregation — ``count`` per (row,

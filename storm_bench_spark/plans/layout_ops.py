@@ -47,7 +47,6 @@ from pyspark.sql import functions as F
 from storm_bench_spark.functions.zorder import ZORDER_MASK, morton32, morton32_sql
 from storm_bench_spark.plans.registry import register
 from storm_bench_spark.sources import derived as D
-from storm_bench_spark.streaming.streams import drains_input_bytes_on_error
 
 # Matches tpch.py's determinism discipline: exact decimal sum surfaced
 # as double (associative — immune to Spark's partition summation order).
@@ -110,7 +109,6 @@ def bitmap_distinct_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("streaming_bitmap_visitors", oracle=_BITMAP_DAILY_ORACLE)
-@drains_input_bytes_on_error
 def streaming_bitmap_visitors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``bitmap_distinct_daily`` through the streaming engine: the
     (day, block) → ``bit_or`` partial IS the streaming aggregation, so
@@ -268,7 +266,6 @@ def tumbling_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("streaming_tumbling_ohlc", oracle=_OHLC_ORACLE)
-@drains_input_bytes_on_error
 def streaming_tumbling_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``tumbling_ohlc`` through the streaming engine: every bar field
     is an incrementally-mergeable aggregate — min/max/count merge

@@ -10,10 +10,13 @@ the driver's full row-hash check and every bench row a DuckDB twin.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from storm_bench_spark.streaming.streams import _take_input_bytes
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -30,11 +33,27 @@ _REGISTRY: dict[str, QuerySpec] = {}
 
 
 def register(name: str, oracle: str, doc: str = ""):
+    """Register ``fn`` under ``name``. The registry entry and the
+    decorated module name both bind a wrapper that clears the session's
+    recorded stream input bytes on entry and on exit: a query that
+    reads a stream with ``stream_table`` and fails (or never runs a
+    stream) cannot leave them behind to size the next query's state
+    width."""
+
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        _REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""))
-        return fn
+
+        @functools.wraps(fn)
+        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            _take_input_bytes(spark)
+            try:
+                return fn(spark, sf_dir)
+            finally:
+                _take_input_bytes(spark)
+
+        _REGISTRY[name] = QuerySpec(name=name, fn=run, oracle=oracle, doc=doc or (fn.__doc__ or ""))
+        return run
 
     return deco
 
@@ -70,39 +89,21 @@ def _ensure_loaded() -> None:
 # name that somehow escapes the list sorts LAST — fail-safe: an
 # unlisted query can never displace promised window rows.
 #
-# ROUND-15 WINDOW (exactly 50) = VERDICT r14 next #1 (the touched-row
-# correctness debt) + this round's optimization targets + oldest-cohort
-# fillers:
-# (a) ALL 27 round-14-touched rows FIRST — the rewritten dedup/CC/
-# corpus/similarity/flight/span family had its code or a shared helper
-# changed in commits 9320cdb..2c2dfad but was never re-certified by the
-# driver's hash-gate at gate SF (VERDICT r14 "What's wrong" #1; the r14
-# window predated the optimization work and was never re-rotated —
-# a violation of this rule, acknowledged and repaid here). The set =
-# VERDICT r14's audit list (25) + ann_topk_ivf_kmeans and
-# source_similarity_q8, which this round's consumer audit shows also
-# ride changed code (ann_topk_ivf helper; cb5be8c persist).
-# rrf_hybrid_rank / embedding_project / token_budget_select were
-# checked and EXCLUDED: they touch only unchanged *_sql() oracle
-# generators or docstrings, not the changed Spark helpers.
-# (b) the round-15 TOUCHED rows (final rotation, end of round 15):
-# gap_fill_hourly, asof_click_purchase, asof_click_purchase_tol
-# joined the window when the argmax-respell commit touched them; the
-# three rolling_* twins initially pinned as optimization targets were
-# examined, phase-profiled and left UNCHANGED (exec-bound, textbook
-# two-phase plans — OPTIMIZATION_r15.md), so they rotated back out to
-# make room. rolling_latlong / fuzzy_name_pairs_d2 / ann_rerank also
-# ended the round untouched (adjudicated; rolling_latlong's decimal
-# respell was measured slower and REVERTED) but keep their slots.
-# NOTE on streams.py: round 15 added python_stateful_partitions() to
-# streaming/streams.py — a pure function addition whose only
-# behavioral consumer is streaming_funnel (gate-pinned above); no
-# other streaming row's code path changed, so they are not rotated in.
-# (c) fillers: the full r11-cohort remainder (16 rows, oldest gated
-# cohort) + ann_recall_at_k (oldest r12 row). After this gate the
-# oldest cohort is r12.
-# Any FURTHER query touched later in round 15 must be rotated in
-# before the round closes (the standing round-4 rule).
+# CURRENT WINDOW (exactly 50):
+# (a) the 27 round-14-touched dedup/CC/corpus/similarity/flight/span
+# rows (VERDICT r14 "What's wrong" #1), which include two streaming
+# rows;
+# (b) the round-15 touched rows gap_fill_hourly, asof_click_purchase
+# and asof_click_purchase_tol;
+# (c) the other 20 streaming rows: every streaming row now starts,
+# awaits and records its stream through streams.run_stream, and
+# streaming_rolling_sort and streaming_cdc_apply moved onto it.
+# Rotated out to just below the boundary to make room: the 17 fillers
+# (the r11-cohort remainder and ann_recall_at_k) and the three
+# round-15 rows adjudicated untouched (rolling_latlong,
+# fuzzy_name_pairs_d2, ann_rerank). The register wrapper sits in front
+# of every query, but for a query that reads no stream it only resets
+# an unused session conf.
 _GATE_PRIORITY: tuple[str, ...] = (
     "simhash",
     "simhash_pairs",
@@ -131,12 +132,33 @@ _GATE_PRIORITY: tuple[str, ...] = (
     "rolling_flight_dist_bucketed",
     "streaming_flight_dist",
     "streaming_funnel",
-    "rolling_latlong",
-    "fuzzy_name_pairs_d2",
-    "ann_rerank",
     "gap_fill_hourly",
     "asof_click_purchase",
     "asof_click_purchase_tol",
+    "streaming_audience_overlap",
+    "streaming_hll_visitors",
+    "stateful_running_count",
+    "streaming_bitmap_visitors",
+    "streaming_cdc_apply",
+    "streaming_dedup",
+    "streaming_dedup_watermarked",
+    "streaming_enriched_revenue",
+    "streaming_hashtag_count",
+    "streaming_heavy_hitters",
+    "streaming_histogram_quantiles",
+    "streaming_interval_join",
+    "streaming_kmv_sketch",
+    "streaming_rolling_count",
+    "streaming_rolling_sort",
+    "streaming_sol",
+    "streaming_tumbling_ohlc",
+    "streaming_user_sessions",
+    "streaming_weighted_sample",
+    "trident_wordcount",
+    # --- window boundary (first 50 above) ---
+    "rolling_latlong",
+    "fuzzy_name_pairs_d2",
+    "ann_rerank",
     "bm25_rank",
     "bpe_encode",
     "bpe_merge_steps",
@@ -154,14 +176,11 @@ _GATE_PRIORITY: tuple[str, ...] = (
     "token_budget_select",
     "vocab_oov_rate",
     "ann_recall_at_k",
-    # --- window boundary (first 50 above) ---
     "rolling_hashtag_count",
     "rolling_geo_count",
     "rolling_count",
     "multimodal_bmp_meta",
-    "streaming_audience_overlap",
     "unique_visitor_approx",
-    "streaming_hll_visitors",
     "interval_click_error",
     "print_passthrough",
     "users_except",
@@ -250,24 +269,6 @@ _GATE_PRIORITY: tuple[str, ...] = (
     "one_per_key",
     "orders_rollup",
     "pageview_extract",
-    "stateful_running_count",
-    "streaming_bitmap_visitors",
-    "streaming_cdc_apply",
-    "streaming_dedup",
-    "streaming_dedup_watermarked",
-    "streaming_enriched_revenue",
-    "streaming_hashtag_count",
-    "streaming_heavy_hitters",
-    "streaming_histogram_quantiles",
-    "streaming_interval_join",
-    "streaming_kmv_sketch",
-    "streaming_rolling_count",
-    "streaming_rolling_sort",
-    "streaming_sol",
-    "streaming_tumbling_ohlc",
-    "streaming_user_sessions",
-    "streaming_weighted_sample",
-    "trident_wordcount",
     "tumbling_ohlc",
     "user_running_value",
     "value_percentiles",

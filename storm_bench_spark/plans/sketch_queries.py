@@ -26,7 +26,6 @@ from storm_bench_spark.operators.sketches import (
 )
 from storm_bench_spark.operators.skew import salted_join
 from storm_bench_spark.plans.registry import register
-from storm_bench_spark.streaming.streams import drains_input_bytes_on_error
 from storm_bench_spark.sources.tables import load_table
 
 # Matches tpch.py's determinism discipline: exact decimal sum surfaced
@@ -69,7 +68,6 @@ def hll_users_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("streaming_hll_visitors", oracle=_HLL_ORACLE)
-@drains_input_bytes_on_error
 def streaming_hll_visitors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``hll_users_per_type`` through the streaming engine: the HLL
     REGISTER TABLE is the streaming aggregation — ``max(rho)`` per
@@ -434,7 +432,6 @@ FROM ranked WHERE rn <= {K_KMV} GROUP BY event_type
 
 
 @register("streaming_kmv_sketch", oracle=_kmv_streaming_oracle())
-@drains_input_bytes_on_error
 def streaming_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The KMV sketch maintained as STREAMING keyed state
     (streaming/stateful.py:bottomk_state): per event type, the state
@@ -622,7 +619,6 @@ def histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("streaming_histogram_quantiles", oracle=_hist_oracle())
-@drains_input_bytes_on_error
 def streaming_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``histogram_quantiles`` through the streaming engine: the
     histogram CELL TABLE is the streaming aggregation — one bounded
@@ -1133,7 +1129,6 @@ def _overlap_from_wide_regs(regs: DataFrame) -> DataFrame:
 
 
 @register("streaming_audience_overlap", oracle=_audience_overlap_oracle())
-@drains_input_bytes_on_error
 def streaming_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``audience_overlap_hll`` through the streaming engine: the WIDE
     register vector is the streaming aggregation — each event_type

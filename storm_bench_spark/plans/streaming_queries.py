@@ -19,7 +19,7 @@ from storm_bench_spark.plans.registry import register
 from storm_bench_spark.sources.derived import DOC_EPOCH, DOC_TS_STEP_SEC
 from storm_bench_spark.streaming.stateful import running_count
 from storm_bench_spark.streaming.streams import (
-    drains_input_bytes_on_error,
+    run_stream,
     run_to_memory,
     stream_table,
 )
@@ -36,7 +36,6 @@ WHERE word <> ''
 GROUP BY word
 """,
 )
-@drains_input_bytes_on_error
 def trident_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Micro-batched, checkpointed, exactly-once word count.
 
@@ -61,7 +60,6 @@ def trident_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parity test asserts the same equality engine-side).
     oracle=T.ROLLING_COUNT_ORACLE,
 )
-@drains_input_bytes_on_error
 def streaming_rolling_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rolling_count executed through the streaming engine (event-time
     window state + availableNow), complete-mode snapshot."""
@@ -83,7 +81,6 @@ def streaming_rolling_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=T.FLIGHT_DIST_ORACLE,
     doc="streaming twin of rolling_flight_dist",
 )
-@drains_input_bytes_on_error
 def streaming_flight_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rolling_flight_dist through the streaming engine: the flightMap
     state (latest position per aircraft) is a streaming ``max_by``
@@ -137,7 +134,6 @@ def streaming_flight_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=T.ROLLING_SORT_ORACLE,
     doc="per-trigger buffered sort + top-k (RollingSort through foreachBatch)",
 )
-@drains_input_bytes_on_error
 def streaming_rolling_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RollingSort's tick semantics — sort whatever the trigger
     buffered, emit the top rows (SURVEY.md §4.3.3) — as a foreachBatch
@@ -146,7 +142,6 @@ def streaming_rolling_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     ring-buffer sort. Returns the last trigger's top-k; parity with the
     batch topology is asserted in tests."""
     from storm_bench_spark.sources.derived import messages_from_events
-    from storm_bench_spark.sources.sinks import foreach_batch_capture
 
     e = stream_table(spark, sf_dir, "events").withColumn(
         "sec", F.col("ts").cast("long")
@@ -159,8 +154,7 @@ def streaming_rolling_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
         top = batch_df.orderBy("message", "event_id").limit(100).collect()
         per_trigger.append(top)
 
-    q = foreach_batch_capture(m, sort_batch, output_mode="append")
-    q.awaitTermination()
+    run_stream(m, "append", batch_fn=sort_batch)
     # merge across triggers: availableNow is one batch for the
     # single-file fixture, but with maxFilesPerTrigger (or a multi-file
     # table) the global top-100 spans batches — re-sort the union of
@@ -179,7 +173,6 @@ def streaming_rolling_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=T.SOL_ORACLE,
     doc="identity shuffle chain through the streaming engine",
 )
-@drains_input_bytes_on_error
 def streaming_sol(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SOL's identity-bolt chain with an exchange between levels,
     executed per micro-batch (repartition is legal inside a streaming
@@ -210,7 +203,6 @@ from storm_bench_spark.plans.relational import INTERVAL_CLICK_ERROR_ORACLE
     oracle=INTERVAL_CLICK_ERROR_ORACLE,
     doc="watermarked stream-stream interval join (twin of interval_click_error)",
 )
-@drains_input_bytes_on_error
 def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """interval_click_error through TWO streams: each side keeps a
     watermark-bounded state store and the join condition carries the
@@ -263,7 +255,6 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT event_type AS key, count(*) AS cnt FROM events GROUP BY event_type
 """,
 )
-@drains_input_bytes_on_error
 def stateful_running_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-key cumulative count via arbitrary keyed state
     (applyInPandasWithState) — the WordCount.Count HashMap semantics.
@@ -288,7 +279,6 @@ def stateful_running_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT DISTINCT event_id, event_type, user_id FROM events
 """,
 )
-@drains_input_bytes_on_error
 def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streaming deduplication: the events stream is unioned
     with a second read of itself (every row arrives twice — the
@@ -314,7 +304,6 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT DISTINCT event_id, event_type, user_id FROM events
 """,
 )
-@drains_input_bytes_on_error
 def streaming_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-state twin of ``streaming_dedup``:
     ``dropDuplicatesWithinWatermark`` holds a key only until the
@@ -348,7 +337,6 @@ from storm_bench_spark.plans.relational import USER_SESSIONS_ORACLE  # noqa: E40
     # streaming_* twins rely on)
     oracle=USER_SESSIONS_ORACLE,
 )
-@drains_input_bytes_on_error
 def streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``user_sessions`` through the streaming engine: gap-merged
     session windows live in the aggregation state store
@@ -380,7 +368,6 @@ def streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # streaming path too
     oracle=T.ROLLING_HASHTAG_ORACLE,
 )
-@drains_input_bytes_on_error
 def streaming_hashtag_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rolling_hashtag_count through the streaming engine — the
     trending-topics shape: tweet stream → parse 13-field wire format →
@@ -417,7 +404,6 @@ from storm_bench_spark.plans.curation import CDC_ORACLE as _CDC_ORACLE  # noqa: 
     oracle=_CDC_ORACLE,
     doc="cdc_apply maintained incrementally across 3 micro-batches",
 )
-@drains_input_bytes_on_error
 def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``cdc_apply`` as a STREAMING fold: the changelog is split into
     three chronological files, consumed one per micro-batch
@@ -494,7 +480,6 @@ from storm_bench_spark.plans.analytics_ext import _FUNNEL_ORACLE as _SF_ORACLE  
     oracle=_SF_ORACLE,
     doc="funnel_conversion via an applyInPandasWithState stage machine",
 )
-@drains_input_bytes_on_error
 def streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``funnel_conversion`` through ARBITRARY keyed state: a per-user
     view→click→purchase machine in ``applyInPandasWithState``
@@ -550,7 +535,6 @@ FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
 GROUP BY c.c_mktsegment
 """,
 )
-@drains_input_bytes_on_error
 def streaming_enriched_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAM-STATIC join — the dimension-enrichment capability: the
     orders STREAM joins the static customer table (planned as a
@@ -589,7 +573,6 @@ def _wsmp_oracle() -> str:
 
 
 @register("streaming_weighted_sample", oracle=_wsmp_oracle())
-@drains_input_bytes_on_error
 def streaming_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``weighted_sample`` maintained CONTINUOUSLY: the A-ES top-n
     (exact-n weighted sample without replacement, integer-exact keys —

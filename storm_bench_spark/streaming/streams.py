@@ -11,13 +11,13 @@ per-tuple running-count semantics no built-in mode reproduces.
 
 from __future__ import annotations
 
-import functools
 import json
 import os
 import tempfile
 import time
 import uuid
 from collections import deque
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,7 +41,7 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # files — stream it directly. The glob spelling below would
         # match the directory name but not the part files inside, and
         # the source silently lists ZERO files: the silent-empty-stream
-        # guard in run_to_memory caught exactly this on the first
+        # guard in run_stream caught exactly this on the first
         # streaming run over a replicated (Spark-written) fixture.
         df = spark.readStream.schema(schema).parquet(path)
     else:
@@ -74,15 +74,13 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 #
 # SIZING RULE (VERDICT r5 #8 — the small default must not silently
 # under-parallelize a data-sized stream): ``stream_table`` records the
-# input's on-disk byte size in a session conf; ``run_to_memory`` derives
+# input's on-disk byte size in a session conf; ``run_stream`` derives
 # the state width from it via :func:`state_partitions_for` —
 #   input ≤ 4 × 32 MiB  → STREAM_STATE_PARTITIONS (the floor trim);
 #   larger              → max(defaultParallelism, input/32 MiB),
 #                         capped at 4 × defaultParallelism
-# so real ingest always gets at least core-count state partitions. The
-# env override, when set, is taken verbatim (cluster operators size to
-# their state volume directly).
-STREAM_STATE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "4"))
+# so real ingest always gets at least core-count state partitions.
+STREAM_STATE_PARTITIONS = 4
 
 # Target on-disk input bytes per state partition in the data-sized
 # regime: one comfortable shuffle/state block. 4× this is the boundary
@@ -104,7 +102,7 @@ def _path_bytes(path: str) -> int:
 
 def _record_input_bytes(spark: SparkSession, n: int) -> None:
     """Accumulate (max) the byte size of streamed inputs in the session
-    conf so ``run_to_memory`` can size the state width. Max, not sum: a
+    conf so ``run_stream`` can size the state width. Max, not sum: a
     multi-input query (stream-stream join) keys its state off the larger
     side. Consumed-and-reset by :func:`_take_input_bytes`."""
     cur = int(spark.conf.get(_INPUT_BYTES_KEY, "0"))
@@ -118,31 +116,10 @@ def _take_input_bytes(spark: SparkSession) -> int:
     return n
 
 
-def drains_input_bytes_on_error(fn):
-    """Close the failed-build input-bytes leak (VERDICT r7 "what's
-    wrong" #3): a query that raises anywhere between ``stream_table``
-    (which records the input's byte size in the session conf) and
-    ``run_to_memory`` (which consumes it) must not leave the recorded
-    bytes behind to max-inflate the NEXT query's derived state width.
-    Decorate every streaming query function with this; success paths
-    are untouched (``run_to_memory`` already drains unconditionally).
-    """
-
-    @functools.wraps(fn)
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        try:
-            return fn(spark, sf_dir)
-        except BaseException:
-            spark.conf.set(_INPUT_BYTES_KEY, "0")
-            raise
-
-    return wrapped
-
-
 # Post-mortem breadcrumbs for the rare in-suite streaming flake
 # (VERDICT r7 next #1: the one-time streaming_flight_dist oracle
 # mismatch was never reproduced — 11 clean re-runs — and left no
-# artifact). Every run_to_memory appends one record here: batch count,
+# artifact). Every run_stream appends one record here: batch count,
 # input-row total, final state-store row count, checkpoint dir, state
 # width. tests/oracle_utils dumps this next to the mismatched frames,
 # so a recurrence pinpoints WHICH stage lost rows (source listing vs
@@ -174,15 +151,8 @@ def state_partitions_for(spark: SparkSession, input_bytes: int) -> int:
     trim (:data:`STREAM_STATE_PARTITIONS`); data-sized input gets at
     least ``defaultParallelism`` stores (never fewer than the cores the
     cluster can commit deltas on concurrently), growing with volume to
-    a 4×-cores cap. An explicit ``SPARK_GRAFT_STREAM_PARTITIONS`` wins
-    in both regimes.
+    a 4×-cores cap.
     """
-    if "SPARK_GRAFT_STREAM_PARTITIONS" in os.environ:
-        # Read at call time, not the module-import-time default: an
-        # override set after import (programmatic, monkeypatch) must
-        # win — returning the stale STREAM_STATE_PARTITIONS here was
-        # an ADVICE r6 finding.
-        return int(os.environ["SPARK_GRAFT_STREAM_PARTITIONS"])
     small = STREAM_STATE_PARTITIONS
     if input_bytes <= STREAM_STATE_TARGET_BYTES * small:
         return small
@@ -203,22 +173,23 @@ def python_stateful_partitions(spark: SparkSession) -> int:
     stages with enough keys therefore size to defaultParallelism —
     cores, at any scale, not a constant — while stages whose key
     domain is narrow (topn shards, per-event-type counts) keep the
-    derived width, where extra stores would just commit empty deltas.
-    ``SPARK_GRAFT_STREAM_PARTITIONS`` still wins everywhere."""
-    if "SPARK_GRAFT_STREAM_PARTITIONS" in os.environ:
-        return int(os.environ["SPARK_GRAFT_STREAM_PARTITIONS"])
+    derived width, where extra stores would just commit empty deltas."""
     return spark.sparkContext.defaultParallelism
 
 
-def run_to_memory(
+def run_stream(
     df: DataFrame,
-    output_mode: str = "complete",
+    output_mode: str,
     query_name: str | None = None,
+    batch_fn: Callable[[DataFrame, int], None] | None = None,
+    checkpoint: str | None = None,
     processing_time: str | None = None,
     state_partitions: int | None = None,
-) -> DataFrame:
-    """Run a streaming DataFrame into a memory sink; returns the sink
-    table as a batch DataFrame.
+) -> None:
+    """Run a streaming DataFrame to completion: into the memory table
+    ``query_name``, or through ``batch_fn(batch_df, batch_id)`` once
+    per micro-batch (foreachBatch) when one is given. The only place
+    the engine starts and awaits a stream.
 
     Default trigger is ``availableNow`` (run to completion — the
     deterministic, testable mode). ``processing_time`` (e.g.
@@ -228,34 +199,36 @@ def run_to_memory(
     available, then stops; the final state is the same, the *emission
     cadence* is what changes (benchmark-fidelity mode, SURVEY §4.3.2).
 
-    A fresh checkpoint dir per call keeps reruns deterministic; the
-    checkpoint + micro-batch epoch machinery is the exactly-once path
-    the Trident topology models (TridentWordCount.java:36-52).
+    The checkpoint (a fresh temp dir unless ``checkpoint`` names one)
+    + micro-batch epoch machinery is the exactly-once path the Trident
+    topology models (TridentWordCount.java:36-52).
 
     ``spark.sql.shuffle.partitions`` is trimmed to ``state_partitions``
     (default: :func:`state_partitions_for` over the input bytes that
     ``stream_table`` recorded — the floor trim for fixture-sized input,
     ≥ core-count for data-sized ingest) for the duration of the
     stream and restored after — the streaming plan compiles at
-    ``start()``, so only this query's state width is affected. The
-    session-conf swap is NOT safe against a batch query compiling
-    concurrently on the same session; the engine's entry points are
-    sequential.
+    ``start()``, and foreachBatch jobs run inside it, so only this
+    query's width is affected. The session-conf swap is NOT safe
+    against a batch query compiling concurrently on the same session;
+    the engine's entry points are sequential.
+
+    Appends one :data:`LAST_STREAM_RUNS` record per run.
     """
-    name = query_name or f"sbs_mem_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="sbs_ckpt_")
+    spark = df.sparkSession
+    name = query_name or f"sbs_stream_{uuid.uuid4().hex[:12]}"
+    ckpt = checkpoint or tempfile.mkdtemp(prefix="sbs_ckpt_")
     w = (
-        df.writeStream.format("memory")
-        .queryName(name)
+        df.writeStream.queryName(name)
         .outputMode(output_mode)
         .option("checkpointLocation", ckpt)
     )
-    spark = df.sparkSession
+    w = w.format("memory") if batch_fn is None else w.foreachBatch(batch_fn)
     # Consume the recorded input bytes UNCONDITIONALLY: with an
     # explicit state_partitions an `or` short-circuit would leave the
     # conf key set, max-inflating the NEXT query's derived width
     # (ADVICE r6). A failed build between stream_table and here is
-    # drained by ``drains_input_bytes_on_error`` on the query function.
+    # drained by the registry's wrapper around every query function.
     input_bytes = _take_input_bytes(spark)
     n_parts = state_partitions or state_partitions_for(spark, input_bytes)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -326,7 +299,27 @@ def run_to_memory(
             f"{input_bytes}-byte source (checkpoint {ckpt}); "
             f"progress: {progs!r}"
         )
-    return spark.table(name)
+
+
+def run_to_memory(
+    df: DataFrame,
+    output_mode: str = "complete",
+    query_name: str | None = None,
+    processing_time: str | None = None,
+    state_partitions: int | None = None,
+) -> DataFrame:
+    """Run a streaming DataFrame into a memory sink (:func:`run_stream`);
+    returns the sink table as a batch DataFrame. A fresh checkpoint dir
+    per call keeps reruns deterministic."""
+    name = query_name or f"sbs_mem_{uuid.uuid4().hex[:12]}"
+    run_stream(
+        df,
+        output_mode,
+        query_name=name,
+        processing_time=processing_time,
+        state_partitions=state_partitions,
+    )
+    return df.sparkSession.table(name)
 
 
 def with_processing_time(df: DataFrame, col: str = "proc_sec") -> DataFrame:

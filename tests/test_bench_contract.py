@@ -366,6 +366,37 @@ def test_bench_knobs_are_the_documented_ones():
     )
 
 
+def test_engine_knobs_are_the_documented_ones():
+    """The SPARK_GRAFT_* names the engine (storm_bench_spark/) reads
+    must be exactly README.md's "Engine knobs" list."""
+    import ast
+    import os
+    import re
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    read = set()
+    for root, _dirs, files in os.walk(os.path.join(repo, "storm_bench_spark")):
+        for name in files:
+            if name.endswith(".py"):
+                with open(os.path.join(root, name)) as f:
+                    tree = ast.parse(f.read())
+                read |= {
+                    node.value for node in ast.walk(tree)
+                    if isinstance(node, ast.Constant) and isinstance(node.value, str)
+                    and re.fullmatch(r"SPARK_GRAFT_\w+", node.value)
+                }
+    with open(os.path.join(repo, "README.md")) as f:
+        readme = f.read()
+    assert "### Engine knobs" in readme
+    section = readme.split("### Engine knobs", 1)[1].split("\n#", 1)[0]
+    documented = set(re.findall(r"`(SPARK_GRAFT_\w+)", section))
+    assert read, "found no knob reads in storm_bench_spark/ — the pattern is stale"
+    assert read == documented, (
+        f"read but undocumented: {sorted(read - documented)}; "
+        f"documented but not read: {sorted(documented - read)}"
+    )
+
+
 def test_infer_round_from_bench_artifacts():
     """_infer_round reads the committed BENCH_r{N}.json files — the
     same files the driver writes — so the rotation parity needs no

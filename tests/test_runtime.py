@@ -1,4 +1,4 @@
-"""Runtime surface tests: CLI runner, sinks, streaming metrics."""
+"""Runtime surface tests: CLI runner, sinks, stream run records."""
 
 import os
 import tempfile
@@ -114,31 +114,29 @@ def test_foreach_batch_capture_sees_all_rows(spark):
 
 
 def test_metrics_recorder_counts_rows(spark):
+    """The stream run record is the monitors/ analog (the reference's
+    JMX rates and offset lag): it counts every input row the query
+    read and serializes as one JSON line."""
+    import json
+
     from pyspark.sql import functions as F
 
-    from storm_bench_spark.streaming.metrics import MetricsRecorder
-    from storm_bench_spark.streaming.streams import run_to_memory, stream_table
+    from storm_bench_spark.sources.tables import load_table
+    from storm_bench_spark.streaming.streams import (
+        last_stream_diagnostics,
+        run_to_memory,
+        stream_table,
+    )
 
-    rec = MetricsRecorder()
-    spark.streams.addListener(rec)
-    try:
-        docs = stream_table(spark, SF_DIR, "documents")
-        agg = docs.groupBy("lang").agg(F.count("*").alias("n"))
-        out = run_to_memory(agg, output_mode="complete", query_name="metrics_probe")
-        assert out.count() > 0
-        # listener events are delivered asynchronously
-        import time
-
-        deadline = time.time() + 30
-        while time.time() < deadline and rec.total_input_rows("metrics_probe") == 0:
-            time.sleep(0.2)
-        from storm_bench_spark.sources.tables import load_table
-
-        expected = load_table(spark, SF_DIR, "documents").count()
-        assert rec.total_input_rows("metrics_probe") == expected
-        assert rec.dump_jsonl()  # one JSON line per progress event
-    finally:
-        spark.streams.removeListener(rec)
+    docs = stream_table(spark, SF_DIR, "documents")
+    agg = docs.groupBy("lang").agg(F.count("*").alias("n"))
+    out = run_to_memory(agg, output_mode="complete", query_name="metrics_probe")
+    assert out.count() > 0
+    rec = last_stream_diagnostics()[-1]
+    assert rec["query"] == "metrics_probe"
+    expected = load_table(spark, SF_DIR, "documents").count()
+    assert rec["num_input_rows"] == expected
+    assert json.loads(json.dumps(rec)) == rec
 
 
 def test_task_retry_yields_identical_results():

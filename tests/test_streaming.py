@@ -379,23 +379,21 @@ def test_streaming_cdc_folds_across_real_epochs(spark, tmp_path):
 
 # --- state-partition sizing (streams.py:state_partitions_for) ------------
 # The VERDICT r5 #8 rule shipped in round 6 without a test; these pin
-# both regimes, the cap, the call-time env override, and the
-# consumed-on-every-run reset of the recorded input bytes.
+# both regimes, the cap, and the consumed-on-every-run reset of the
+# recorded input bytes.
 
-def test_state_partitions_small_regime_floor(spark, monkeypatch):
+def test_state_partitions_small_regime_floor(spark):
     from storm_bench_spark.streaming import streams as S
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS", raising=False)
     floor = S.STREAM_STATE_PARTITIONS
     boundary = S.STREAM_STATE_TARGET_BYTES * floor
     assert S.state_partitions_for(spark, 0) == floor
     assert S.state_partitions_for(spark, boundary) == floor  # inclusive
 
 
-def test_state_partitions_data_sized_regime(spark, monkeypatch):
+def test_state_partitions_data_sized_regime(spark):
     from storm_bench_spark.streaming import streams as S
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS", raising=False)
     par = spark.sparkContext.defaultParallelism
     boundary = S.STREAM_STATE_TARGET_BYTES * S.STREAM_STATE_PARTITIONS
     # Just past the boundary: never fewer stores than cores, and the
@@ -410,20 +408,9 @@ def test_state_partitions_data_sized_regime(spark, monkeypatch):
     assert S.state_partitions_for(spark, S.STREAM_STATE_TARGET_BYTES * 100 * par) == 4 * par
 
 
-def test_state_partitions_env_override_wins_both_regimes(spark, monkeypatch):
+def test_recorded_input_bytes_reset_between_queries(spark):
     from storm_bench_spark.streaming import streams as S
 
-    # Set AFTER module import: the override must be read at call time
-    # (ADVICE r6 — the old code returned the import-time default).
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "7")
-    assert S.state_partitions_for(spark, 0) == 7
-    assert S.state_partitions_for(spark, 10**12) == 7
-
-
-def test_recorded_input_bytes_reset_between_queries(spark, monkeypatch):
-    from storm_bench_spark.streaming import streams as S
-
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS", raising=False)
     # A data-sized recording is consumed by the take...
     S._record_input_bytes(spark, 10**12)
     assert S._take_input_bytes(spark) == 10**12
@@ -437,13 +424,12 @@ def test_recorded_input_bytes_reset_between_queries(spark, monkeypatch):
     assert S._take_input_bytes(spark) == 0
 
 
-def test_run_to_memory_consumes_bytes_with_explicit_partitions(spark, monkeypatch):
+def test_run_to_memory_consumes_bytes_with_explicit_partitions(spark):
     """An explicit state_partitions run must still drain the recorded
     bytes — the `or` short-circuit leak from ADVICE r6."""
     from storm_bench_spark.streaming import streams as S
     from pyspark.sql import Row
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS", raising=False)
     import tempfile
     d = tempfile.mkdtemp(prefix="sbs_state_reset_")
     spark.createDataFrame([Row(k="a"), Row(k="b")]).write.mode("overwrite").parquet(f"{d}/t.parquet")
@@ -456,38 +442,94 @@ def test_run_to_memory_consumes_bytes_with_explicit_partitions(spark, monkeypatc
     assert S._take_input_bytes(spark) == 0
 
 
-def test_failed_build_drains_recorded_bytes(spark, monkeypatch):
+def test_failed_build_drains_recorded_bytes(spark):
     """VERDICT r7 "what's wrong" #3: a streaming query that raises
-    BETWEEN stream_table (bytes recorded) and run_to_memory (bytes
+    BETWEEN stream_table (bytes recorded) and the stream run (bytes
     consumed) must not leave the recording behind to inflate the next
-    query's derived state width. The decorator closes that window."""
+    query's derived state width. The register wrapper closes that
+    window for every registered query."""
+    from storm_bench_spark.plans import registry as R
     from storm_bench_spark.streaming import streams as S
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS", raising=False)
-
-    @S.drains_input_bytes_on_error
     def doomed(spark_, sf_dir):
         S.stream_table(spark_, sf_dir, "events")  # records real bytes
+        assert int(spark_.conf.get(S._INPUT_BYTES_KEY)) > 0
         raise ValueError("build failed after stream_table")
 
-    with pytest.raises(ValueError):
-        doomed(spark, SF_DIR)
-    assert S._take_input_bytes(spark) == 0
-    # and every registered streaming query carries the decorator
-    import storm_bench_spark.plans.corpus_ops as CO
-    import storm_bench_spark.plans.sketch_queries as SQ
-    import storm_bench_spark.plans.streaming_queries as SMQ
+    wrapped = R.register("zz_doomed_probe", oracle="SELECT 1 AS x")(doomed)
+    try:
+        with pytest.raises(ValueError):
+            wrapped(spark, SF_DIR)
+        assert S._take_input_bytes(spark) == 0
+        assert R._REGISTRY["zz_doomed_probe"].fn is wrapped
+        assert wrapped.__wrapped__ is doomed
+    finally:
+        del R._REGISTRY["zz_doomed_probe"]
+    # and every registered query is the register wrapper, both in the
+    # registry and as its module attribute
+    import importlib
 
-    for mod in (SMQ, CO, SQ):
-        src_names = [
-            n for n in dir(mod)
-            if n.startswith(("streaming_", "trident_", "stateful_"))
-            and callable(getattr(mod, n))
-        ]
-        for n in src_names:
-            fn = getattr(mod, n)
-            if getattr(fn, "__module__", "").startswith("storm_bench_spark"):
-                assert fn.__wrapped__ is not fn, n  # functools.wraps marker
+    for n, fn in all_queries().items():
+        assert fn.__wrapped__ is not fn, n  # functools.wraps marker
+        mod = importlib.import_module(fn.__module__)
+        assert getattr(mod, fn.__name__) is fn, n
+
+
+def _run_row(spark, name: str) -> list[dict]:
+    """Run one registry row to completion; return the stream run
+    records it appended."""
+    from storm_bench_spark.streaming.streams import LAST_STREAM_RUNS
+
+    before = list(LAST_STREAM_RUNS)
+    all_queries()[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    return [r for r in LAST_STREAM_RUNS if not any(r is b for b in before)]
+
+
+def test_rolling_sort_leaves_no_bytes_and_a_run_record(spark):
+    """streaming_rolling_sort runs a foreachBatch sink: it must still
+    consume its recorded input bytes and leave a run record, or the
+    next stream sizes its state off events.parquet and the bench stamps
+    the row's stream floor as 0."""
+    import os
+
+    from storm_bench_spark.streaming import streams as S
+
+    recs = _run_row(spark, "streaming_rolling_sort")
+    assert S._take_input_bytes(spark) == 0
+    assert len(recs) == 1
+    assert recs[0]["num_input_rows"] > 0
+    assert recs[0]["input_bytes"] == os.path.getsize(
+        os.path.join(SF_DIR, "events.parquet")
+    )
+    # the row that follows records its own input, not the sort's
+    (wc,) = _run_row(spark, "trident_wordcount")
+    assert wc["input_bytes"] == os.path.getsize(
+        os.path.join(SF_DIR, "documents.parquet")
+    )
+
+
+def test_every_streaming_row_writes_the_full_run_record(spark, tmp_path):
+    """One run path: every streaming registry row appends exactly one
+    run record with the key set run_to_memory writes (the CDC fold and
+    the foreachBatch sort included), and leaves no recorded bytes."""
+    from pyspark.sql import Row
+
+    from storm_bench_spark.streaming import streams as S
+
+    spark.createDataFrame([Row(k="a")]).write.parquet(str(tmp_path / "t"))
+    probe = spark.readStream.schema("k string").parquet(str(tmp_path / "t"))
+    run_to_memory(probe.groupBy("k").count())
+    want = set(S.last_stream_diagnostics()[-1])
+    rows = [
+        n for n in all_queries()
+        if n.startswith(("streaming_", "trident_", "stateful_"))
+    ]
+    assert len(rows) >= 22
+    for n in rows:
+        recs = _run_row(spark, n)
+        assert len(recs) == 1, (n, recs)
+        assert set(recs[0]) == want, (n, sorted(set(recs[0]) ^ want))
+        assert S._take_input_bytes(spark) == 0, n
 
 
 def test_stream_diagnostics_recorded(spark):
