@@ -482,7 +482,8 @@ from storm_bench_spark.plans.analytics_ext import _FUNNEL_ORACLE as _SF_ORACLE  
 )
 def streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``funnel_conversion`` through ARBITRARY keyed state: a per-user
-    view→click→purchase machine in ``applyInPandasWithState``
+    view→click→purchase machine in ``applyInPandasWithState``, run per
+    user shard
     (streaming/stateful.py:funnel_state) — the sequential-pattern
     class no built-in windowed aggregation expresses, because stage
     k's predicate depends on stage k−1's match TIME. The greedy
@@ -497,10 +498,10 @@ def streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = stream_table(spark, sf_dir, "events").withColumn(
         "sec", F.col("ts").cast("long")
     )
-    # Python-stateful stage over a per-user key domain: width = cores,
-    # not the JVM floor trim — one Python worker per state partition
-    # (streams.python_stateful_partitions; 2.52 s → 1.65 s at 32
-    # cores). Results are partition-invariant (keys route whole).
+    # Python-stateful stage keyed by 64 user shards: width = cores
+    # capped at the 64 shards, not the JVM floor trim — one Python
+    # worker per state partition (streams.python_stateful_partitions).
+    # Results are partition-invariant (shards route whole).
     snap = run_to_memory(
         funnel_state(e),
         output_mode="append",

@@ -13,11 +13,12 @@ from __future__ import annotations
 
 from collections.abc import Iterable
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
 OUTPUT_SCHEMA = StructType(
     [StructField("key", StringType()), StructField("cnt", LongType())]
@@ -55,6 +56,13 @@ def running_count(keyed: DataFrame, key_col: str) -> DataFrame:
 
 # --- sequential-pattern state machine: funnel stage tracking -------------
 
+# Users hash onto FUNNEL_SHARDS state keys, one stage machine per shard
+# per micro-batch. The shard is part of the checkpointed state key, so
+# this is a constant: changing it orphans every existing checkpoint.
+FUNNEL_SHARDS = 64
+# A null user_id has no hash; it forms its own one-user shard.
+_NULL_USER_SHARD = -1
+
 FUNNEL_OUTPUT_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -63,66 +71,144 @@ FUNNEL_OUTPUT_SCHEMA = StructType(
         StructField("p", LongType()),
     ]
 )
+# One row per shard: its users in ascending user_id order and, per
+# user, the stage timestamps (null until matched) plus the high-water
+# mark of processed (sec, event_id) — the machine's cross-batch
+# ordering precondition, enforced, not assumed.
+_FUNNEL_STATE_FIELDS = ("user_id", "v", "c", "p", "max_sec", "max_eid")
 FUNNEL_STATE_SCHEMA = StructType(
-    [
-        StructField("v", LongType()),
-        StructField("c", LongType()),
-        StructField("p", LongType()),
-        # high-water mark of processed (sec, event_id): the machine's
-        # cross-batch ordering precondition, enforced, not assumed
-        StructField("max_sec", LongType()),
-        StructField("max_eid", LongType()),
-    ]
+    [StructField(name, ArrayType(LongType())) for name in _FUNNEL_STATE_FIELDS]
 )
 
 
+def _masked(values: list) -> tuple[np.ndarray, np.ndarray]:
+    """A nullable long list as (int64 values, 0 where null; is-set mask)."""
+    arr = np.array(values, dtype=object)
+    is_set = ~np.equal(arr, None)
+    return np.where(is_set, arr, 0).astype(np.int64), is_set
+
+
+def _nullable(values: np.ndarray, is_set: np.ndarray) -> np.ndarray:
+    """The inverse of ``_masked``: an object array with None where unset."""
+    out = values.astype(object)
+    out[~is_set] = None
+    return out
+
+
+def _first(cand: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """Per segment (``starts`` = first row of each), the row index of the
+    first True in ``cand``, or ``len(cand)`` when there is none."""
+    n = len(cand)
+    return np.minimum.reduceat(np.where(cand, np.arange(n), n), starts)
+
+
 def _update_funnel(key, pdfs, state):
-    """Advance the per-user view→click→purchase machine.
+    """Advance the view→click→purchase machine of every user in one shard.
 
-    Greedy single pass over the batch's events in (sec, event_id)
-    order: first view, then first click at-or-after it, then first
-    purchase at-or-after that click — the greedy matches are the
-    minima the batch funnel computes, so final state == batch answer.
-    Cross-batch correctness needs chronologically ordered batches
-    (the same contract as streaming/cdc_stream.py); within a batch the
-    explicit sort handles arbitrary arrival order. The precondition is
-    ENFORCED: state carries the high-water (sec, event_id) mark, and a
-    batch containing any earlier event RAISES instead of silently
-    diverging from the batch oracle (an out-of-order view after a
-    click would never be matched — fail loudly, not wrongly).
+    Per user, a greedy single pass over the batch's events in
+    (sec, event_id) order: first view, then the first click after
+    that row with sec >= v, then the first purchase after the click's
+    row with sec >= c — the greedy matches are the minima the batch
+    funnel computes, so final state == batch answer. The pass runs for
+    all the shard's users at once: rows sort by (user_id, sec,
+    event_id), and each stage is one masked first-match per user
+    segment. Cross-batch correctness needs each user's events to
+    arrive in chronological batches (the same contract as
+    streaming/cdc_stream.py); within a batch the sort handles arbitrary
+    arrival order. The precondition is ENFORCED per user: state
+    carries each user's high-water (sec, event_id) mark, and a batch
+    holding an event earlier than its user's mark RAISES instead of
+    silently diverging from the batch oracle (an out-of-order view
+    after a click would never be matched — fail loudly, not wrongly).
+    Emits one (user_id, v, c, p) row per user with events in the batch.
     """
-    import pandas as pd
+    frames = list(pdfs)
+    rows = frames[0] if len(frames) == 1 else pd.concat(frames)
+    null_shard = key[0] == _NULL_USER_SHARD
+    n = len(rows)
+    # the null shard's one user runs under the stand-in id 0; its id is
+    # stored and emitted as null (the is-set mask below)
+    uid = np.zeros(n, np.int64) if null_shard else rows["user_id"].to_numpy(np.int64)
+    sec = rows["sec"].to_numpy(np.int64)
+    eid = rows["event_id"].to_numpy(np.int64)
+    order = np.lexsort((eid, sec, uid))
+    uid, sec, eid = uid[order], sec[order], eid[order]
+    et = rows["event_type"].to_numpy()[order]
+    new_user = np.empty(n, bool)
+    new_user[0] = True
+    np.not_equal(uid[1:], uid[:-1], out=new_user[1:])
+    starts = np.flatnonzero(new_user)
+    seg = np.cumsum(new_user) - 1
+    users, m = uid[starts], len(starts)
 
+    # the batch's users, each starting from its carried state (if any):
+    # field -> (int64 values, is-set mask)
+    cur = {f: (np.zeros(m, np.int64), np.zeros(m, bool)) for f in _FUNNEL_STATE_FIELDS}
+    cur["user_id"] = (users, np.full(m, not null_shard))
     if state.exists:
-        v, c, p, max_sec, max_eid = state.get
-    else:
-        v, c, p, max_sec, max_eid = None, None, None, None, None
-    rows = pd.concat(list(pdfs))
-    rows = rows.sort_values(["sec", "event_id"])
-    secs = rows["sec"].tolist()
-    eids = rows["event_id"].tolist()
-    if max_sec is not None and secs and (secs[0], eids[0]) < (max_sec, max_eid):
-        raise RuntimeError(
-            f"funnel_state: out-of-order micro-batch for key {key}: event "
-            f"({secs[0]}, {eids[0]}) arrived after high-water mark "
-            f"({max_sec}, {max_eid}). The stage machine requires "
-            f"chronologically ordered batches (single-file source or an "
-            f"event-time-ordered feed); results would silently diverge "
-            f"from the batch funnel otherwise."
+        old = {f: _masked(v) for f, v in zip(_FUNNEL_STATE_FIELDS, state.get)}
+        old_uid = old["user_id"][0]
+        at = np.searchsorted(old_uid, users)
+        found = at < len(old_uid)
+        found[found] = old_uid[at[found]] == users[found]
+        at = at[found]
+        for f in _FUNNEL_STATE_FIELDS[1:]:
+            cur[f][0][found], cur[f][1][found] = old[f][0][at], old[f][1][at]
+        hw_sec, hw_eid = cur["max_sec"][0], cur["max_eid"][0]
+        first_sec, first_eid = sec[starts], eid[starts]
+        back = found & (
+            (first_sec < hw_sec) | ((first_sec == hw_sec) & (first_eid < hw_eid))
         )
-    for sec, et in zip(secs, rows["event_type"].tolist()):
-        if et == "view" and v is None:
-            v = sec
-        elif et == "click" and v is not None and c is None and sec >= v:
-            c = sec
-        elif et == "purchase" and c is not None and p is None and sec >= c:
-            p = sec
-    if secs:
-        max_sec, max_eid = secs[-1], eids[-1]
-    state.update((v, c, p, max_sec, max_eid))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "v": [v], "c": [c], "p": [p]}, dtype="object"
+        if back.any():
+            i = int(np.argmax(back))
+            who = None if null_shard else int(users[i])
+            raise RuntimeError(
+                f"funnel_state: out-of-order micro-batch for key ({who},): event "
+                f"({first_sec[i]}, {first_eid[i]}) arrived after high-water mark "
+                f"({hw_sec[i]}, {hw_eid[i]}). The stage machine requires "
+                f"chronologically ordered batches (single-file source or an "
+                f"event-time-ordered feed); results would silently diverge "
+                f"from the batch funnel otherwise."
+            )
+
+    # each stage: the first row of its type after the previous stage's
+    # row (any row when that stage was matched in an earlier batch) and
+    # not earlier in time than the previous stage's timestamp
+    pos = np.arange(n)
+    prev_set, prev_val, prev_row = np.ones(m, bool), np.zeros(m, np.int64), np.full(m, -1)
+    for f, event_type in (("v", "view"), ("c", "click"), ("p", "purchase")):
+        vals, is_set = cur[f]
+        cand = (
+            (et == event_type)
+            & prev_set[seg]
+            & (pos > prev_row[seg])
+            & (sec >= prev_val[seg])
+        )
+        hit = _first(cand, starts)
+        newly = ~is_set & (hit < n)
+        vals[newly] = sec[hit[newly]]
+        is_set |= newly
+        prev_set, prev_val, prev_row = is_set, vals, np.where(newly, hit, -1)
+    ends = np.append(starts[1:], n) - 1
+    cur["max_sec"] = (sec[ends], np.ones(m, bool))
+    cur["max_eid"] = (eid[ends], np.ones(m, bool))
+
+    # the shard's next state: its users untouched by the batch, then the
+    # batch's users, back in user_id order
+    nxt = cur
+    if state.exists:
+        keep = np.ones(len(old_uid), bool)
+        keep[at] = False
+        nxt = {
+            f: (np.append(old[f][0][keep], cur[f][0]), np.append(old[f][1][keep], cur[f][1]))
+            for f in _FUNNEL_STATE_FIELDS
+        }
+    by_uid = np.argsort(nxt["user_id"][0], kind="stable")
+    state.update(
+        tuple(_nullable(v[by_uid], k[by_uid]).tolist() for v, k in nxt.values())
     )
+    out = ("user_id", "v", "c", "p")
+    yield pd.DataFrame(np.stack([_nullable(*cur[f]) for f in out], axis=1), columns=out)
 
 
 def funnel_state(events: DataFrame) -> DataFrame:
@@ -133,6 +219,13 @@ def funnel_state(events: DataFrame) -> DataFrame:
     timestamps per user per batch — a sequential-pattern matcher that
     no built-in windowed aggregation expresses (stage k's predicate
     depends on stage k−1's MATCH TIME, not on a fixed window).
+
+    The state key is a user shard, ``pmod(hash(user_id),
+    FUNNEL_SHARDS)`` (null user_id: its own shard), not the user:
+    PySpark's per-group wrapper (Arrow slice to pandas, state decode,
+    one output frame) then runs once per shard per batch instead of
+    once per user, and ``_update_funnel`` advances the shard's users
+    together in numpy. The emitted rows are still per user.
 
     CONTRACT (since round 14): only users with ≥1 funnel event
     (view/click/purchase) emit rows. Users whose events are all other
@@ -152,8 +245,16 @@ def funnel_state(events: DataFrame) -> DataFrame:
     # pushed predicate.
     sel = events.where(
         F.col("event_type").isin("view", "click", "purchase")
-    ).select("user_id", "sec", "event_id", "event_type")
-    return sel.groupBy("user_id").applyInPandasWithState(
+    ).select(
+        F.when(F.col("user_id").isNull(), F.lit(_NULL_USER_SHARD))
+        .otherwise(F.pmod(F.hash("user_id"), F.lit(FUNNEL_SHARDS)))
+        .alias("shard"),
+        "user_id",
+        "sec",
+        "event_id",
+        "event_type",
+    )
+    return sel.groupBy("shard").applyInPandasWithState(
         _update_funnel,
         outputStructType=FUNNEL_OUTPUT_SCHEMA,
         stateStructType=FUNNEL_STATE_SCHEMA,
@@ -163,8 +264,6 @@ def funnel_state(events: DataFrame) -> DataFrame:
 
 
 # --- bottom-k (KMV) sketch state ------------------------------------------
-
-from pyspark.sql.types import ArrayType  # noqa: E402
 
 KMV_OUTPUT_SCHEMA = StructType(
     [

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from storm_bench_spark.sources.tables import TABLES, _TIMESTAMP_COLS
+from storm_bench_spark.streaming.stateful import FUNNEL_SHARDS
 
 
 def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -168,13 +169,14 @@ def python_stateful_partitions(spark: SparkSession) -> int:
     partition, so the floor-trimmed width that is right for JVM
     stateful operators (delta-file-per-epoch overhead, see
     STREAM_STATE_PARTITIONS) serializes the Python work onto a handful
-    of workers — measured on streaming_funnel (1500 keys, 32 cores):
-    width 4 → 2.52 s, 8 → 2.12, 16 → 1.77, 32 → 1.65. Python-stateful
-    stages with enough keys therefore size to defaultParallelism —
-    cores, at any scale, not a constant — while stages whose key
-    domain is narrow (topn shards, per-event-type counts) keep the
-    derived width, where extra stores would just commit empty deltas."""
-    return spark.sparkContext.defaultParallelism
+    of workers. The funnel's key domain is its FUNNEL_SHARDS = 64 user
+    shards; streaming_funnel at sf0.1 (1,500 users, 4 vCPU, min of 5)
+    measured width 1 → 1.54 s, 2 → 1.34, 4 → 1.29, 8 → 1.59. The
+    width is therefore the cores, capped at the shard count: stores
+    beyond it could only commit empty deltas. Stages whose key
+    domain is narrower still (topn shards, per-event-type counts) keep
+    the derived width."""
+    return min(spark.sparkContext.defaultParallelism, FUNNEL_SHARDS)
 
 
 def run_stream(

@@ -287,6 +287,76 @@ def test_funnel_state_raises_on_out_of_order_batches(spark, tmp_path):
         q.awaitTermination()
 
 
+def _funnel_over_batches(spark, tmp_path, batches):
+    """Run ``funnel_state`` over ``batches`` (lists of
+    (user_id, sec, event_id, event_type)), one micro-batch each, in
+    list order; returns the emitted rows."""
+    import os
+
+    from storm_bench_spark.streaming.stateful import funnel_state
+
+    cols = ["user_id", "sec", "event_id", "event_type"]
+    data_dir = tmp_path / "funnel_in"
+    data_dir.mkdir()
+    for age, rows in enumerate(batches):
+        before = set(os.listdir(data_dir))
+        spark.createDataFrame(rows, cols).coalesce(1).write.mode("append").parquet(str(data_dir))
+        # the file source reads oldest mtime first
+        for f in set(os.listdir(data_dir)) - before:
+            p = data_dir / f
+            shift = (len(batches) - age) * 3600
+            os.utime(p, (p.stat().st_mtime - shift, p.stat().st_mtime - shift))
+    schema = spark.createDataFrame(batches[0], cols).schema
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(str(data_dir))
+    return run_to_memory(funnel_state(stream), output_mode="append").collect()
+
+
+def _two_users_in_one_shard(spark):
+    from storm_bench_spark.streaming.stateful import FUNNEL_SHARDS
+
+    seen = {}
+    for r in spark.range(1, 1000).select(
+        "id", F.pmod(F.hash("id"), F.lit(FUNNEL_SHARDS)).alias("shard")
+    ).collect():
+        if r.shard in seen:
+            return seen[r.shard], r.id
+        seen[r.shard] = r.id
+    raise AssertionError("no two users share a shard")
+
+
+def test_funnel_state_names_the_user_that_went_backwards(spark, tmp_path):
+    """The ordering precondition is per user: in one shard, user A's
+    batch 2 goes back past A's own high-water mark, user B's does not;
+    the query raises and names A."""
+    a, b = _two_users_in_one_shard(spark)
+    batches = [
+        [(a, 100, 1, "view"), (b, 10, 2, "view")],
+        [(a, 50, 3, "click"), (b, 20, 4, "click")],
+    ]
+    with pytest.raises(Exception, match=rf"out-of-order micro-batch for key \({a},\)"):
+        _funnel_over_batches(spark, tmp_path, batches)
+
+
+def test_funnel_state_keeps_a_high_water_mark_per_user(spark, tmp_path):
+    """In one shard, user B's batch-2 events are older than user A's
+    high-water mark but newer than B's own: that is in order, so no
+    error, and both users advance. A null user_id is one more machine."""
+    a, b = _two_users_in_one_shard(spark)
+    batches = [
+        [(a, 100, 1, "view"), (b, 10, 2, "view"), (None, 30, 5, "view")],
+        [(b, 20, 3, "click"), (a, 110, 4, "click"), (None, 40, 6, "click")],
+    ]
+    rows = _funnel_over_batches(spark, tmp_path, batches)
+    got = sorted(((r.user_id, r.v, r.c, r.p) for r in rows), key=str)
+    assert got == sorted(
+        [
+            (a, 100, None, None), (b, 10, None, None), (None, 30, None, None),
+            (a, 100, 110, None), (b, 10, 20, None), (None, 30, 40, None),
+        ],
+        key=str,
+    )
+
+
 def test_with_processing_time_stamps_arrival_seconds(spark):
     from storm_bench_spark.streaming.streams import with_processing_time
 
