@@ -856,49 +856,29 @@ def ann_topk_ivf(
     )
 
 
-def ann_topk_ivf_fused(
+def _ivf_fused_pass(
     vectors: DataFrame,
     n_queries: int,
-    k: int,
-    n_probe: int = IVF_NPROBE,
-    n_centroids: int = IVF_CENTROIDS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """:func:`ann_topk_ivf` (sampled-centroid mode) as ONE corpus pass —
-    the id-prefix specialization the registered query uses, spelled
-    exactly like :func:`ann_recall_fused`'s candidate leg (round 10;
-    the generic join-based operator remains for arbitrary query /
-    centroid tables and the k-means mode).
+    n_probe: int,
+    n_centroids: int,
+    id_col: str,
+    vec_col: str,
+):
+    """The one corpus pass shared by :func:`ann_topk_ivf_fused` and
+    :func:`ann_recall_fused`: ``(qids, probes, scored)``.
 
-    The composed spelling ran three driver-sync'd jobs (centroid
-    collect, probe broadcast build, final) and scanned the vector
-    table three times (centroids, queries, assignment). Here: one
-    reference collect (queries ∪ centroids are id-prefixes of the same
-    table), probe selection on the driver matrices (queries×centroids
-    cosines are bytes), and one Arrow pass per corpus vector yielding
-    its cell (argmax over the centroid slice; first-max = min-cid
-    tie-break, centroids sorted) and its query cosines (element_at
-    into the query slice — no re-scoring join). Bitwise-identical to
-    the composed operator — same sequential-in-i sums — so the
-    unchanged SQL oracle certifies the fusion.
-
-    Zero-norm rows (ADVICE r10/r11): a zero-norm corpus vector's
-    cosines are 0/0 = NaN in the Arrow kernel, and the pandas→Arrow
-    hand-off converts float NaN to NULL — so its score array arrives
-    JVM-side as all-NULLs (measured round 12; the r11 docstring's
-    "NaN ranks first" claim was wrong — NaN never survives the Arrow
-    boundary). NULL cosines sort LAST under the desc rank window, so
-    a zero-norm vector drops out of any top-k with enough real
-    candidates instead of erroring. Since round 12 the COMPOSED
-    operator agrees: ``_pair_cos`` guards the norm product with
-    ``nullif`` (NULL, ranks last) instead of raising ANSI
-    DIVIDE_BY_ZERO, so the two certified-equivalent spellings return
-    identical rows on this input class — pinned by
-    tests/test_scale_ops.py::test_ivf_fused_zero_norm_vector.
+    Queries and centroids are both id-prefixes of the same table, so
+    ONE reference collect is sliced driver-side (one job, not two).
+    Probe selection runs on the driver matrices with the same
+    sequential-i sums as the JVM/SQL spellings; the stable argsort on
+    -cos orders (desc cos, asc cid). ``scored`` is one Arrow pass per
+    corpus vector: ``s`` holds its cosines against ``[queries;
+    centroids]`` and ``cid`` its cell (argmax over the centroid slice;
+    first max = min cid, centroids sorted). ``probes`` holds each
+    query's ``n_probe`` cells as ``(qid, qi, cid)``, ``qi`` being the
+    query's position in the ``s`` slice.
     """
     import numpy as np
-    from pyspark.sql.window import Window
 
     spark = vectors.sparkSession
     v = vectors.select(F.col(id_col).alias("id"), _dvec(vec_col).alias("v"))
@@ -932,6 +912,15 @@ def ann_topk_ivf_fused(
             cid_arr, F.array_position(cslice, F.array_max(cslice)).cast("int")
         ),
     )
+    return qids, probes, scored
+
+
+def _ivf_candidates(probes: DataFrame, scored: DataFrame, k: int) -> DataFrame:
+    """Each query's top-``k`` probed-cell vectors, ranked by the cosine
+    read from the query slice of ``scored.s`` (no re-scoring join):
+    ``qid, nid, cos, rank``."""
+    from pyspark.sql.window import Window
+
     w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("nid"))
     return (
         F.broadcast(probes)
@@ -944,12 +933,59 @@ def ann_topk_ivf_fused(
         )
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select(
-            "qid",
-            F.col("nid").alias("neighbor"),
-            "cos",
-            F.col("rank").cast("bigint").alias("rank"),
-        )
+    )
+
+
+def ann_topk_ivf_fused(
+    vectors: DataFrame,
+    n_queries: int,
+    k: int,
+    n_probe: int = IVF_NPROBE,
+    n_centroids: int = IVF_CENTROIDS,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """:func:`ann_topk_ivf` (sampled-centroid mode) as ONE corpus pass —
+    the id-prefix specialization the registered query uses: the
+    candidate leg of :func:`ann_recall_fused`, over the same shared
+    pass (:func:`_ivf_fused_pass`, round 10; the generic join-based
+    operator remains for arbitrary query / centroid tables and the
+    k-means mode).
+
+    The composed spelling ran three driver-sync'd jobs (centroid
+    collect, probe broadcast build, final) and scanned the vector
+    table three times (centroids, queries, assignment). Here: one
+    reference collect (queries ∪ centroids are id-prefixes of the same
+    table), probe selection on the driver matrices (queries×centroids
+    cosines are bytes), and one Arrow pass per corpus vector yielding
+    its cell (argmax over the centroid slice; first-max = min-cid
+    tie-break, centroids sorted) and its query cosines (element_at
+    into the query slice — no re-scoring join). Bitwise-identical to
+    the composed operator — same sequential-in-i sums — so the
+    unchanged SQL oracle certifies the fusion.
+
+    Zero-norm rows (ADVICE r10/r11): a zero-norm corpus vector's
+    cosines are 0/0 = NaN in the Arrow kernel, and the pandas→Arrow
+    hand-off converts float NaN to NULL — so its score array arrives
+    JVM-side as all-NULLs (measured round 12; the r11 docstring's
+    "NaN ranks first" claim was wrong — NaN never survives the Arrow
+    boundary). NULL cosines sort LAST under the desc rank window, so
+    a zero-norm vector drops out of any top-k with enough real
+    candidates instead of erroring. Since round 12 the COMPOSED
+    operator agrees: ``_pair_cos`` guards the norm product with
+    ``nullif`` (NULL, ranks last) instead of raising ANSI
+    DIVIDE_BY_ZERO, so the two certified-equivalent spellings return
+    identical rows on this input class — pinned by
+    tests/test_scale_ops.py::test_ivf_fused_zero_norm_vector.
+    """
+    _qids, probes, scored = _ivf_fused_pass(
+        vectors, n_queries, n_probe, n_centroids, id_col, vec_col
+    )
+    return _ivf_candidates(probes, scored, k).select(
+        "qid",
+        F.col("nid").alias("neighbor"),
+        "cos",
+        F.col("rank").cast("bigint").alias("rank"),
     )
 
 
@@ -988,55 +1024,17 @@ def ann_recall_fused(
     one broadcast probe join. The separate-legs spelling scans the
     corpus three times.
     """
-    import numpy as np
     from pyspark.sql.window import Window
 
-    spark = vectors.sparkSession
-    v = vectors.select(F.col(id_col).alias("id"), _dvec(vec_col).alias("v"))
-    # queries and centroids are both id-prefixes of the same table:
-    # ONE reference collect, sliced driver-side (one job, not two)
-    pids, pmat, pnorm = _collect_ref(
-        v.where(F.col("id") < max(n_queries, n_centroids)), "id", "v"
+    qids, probes, scored = _ivf_fused_pass(
+        vectors, n_queries, n_probe, n_centroids, id_col, vec_col
     )
-    qsel = [i for i, p in enumerate(pids) if p < n_queries]
-    csel = [i for i, p in enumerate(pids) if p < n_centroids]
-    qids, qm, qn = [pids[i] for i in qsel], pmat[qsel], pnorm[qsel]
-    cids, cm, cn = [pids[i] for i in csel], pmat[csel], pnorm[csel]
-    nq = len(qids)
-    ref_m = np.vstack([qm, cm])
-    ref_n = np.concatenate([qn, cn])
-
-    # probe selection on the driver matrices: same sequential-i sums as
-    # the JVM/SQL spellings, stable argsort on -cos = (desc cos, asc cid)
-    acc = np.zeros((nq, cm.shape[0]))
-    for i in range(qm.shape[1]):
-        acc += np.outer(qm[:, i], cm[:, i])
-    ccos = acc / (qn[:, None] * cn[None, :])
-    probe_rows = [
-        (int(qids[qi]), int(qi), int(cids[cpos]))
-        for qi in range(nq)
-        for cpos in np.argsort(-ccos[qi], kind="stable")[:n_probe]
-    ]
-    probes = spark.createDataFrame(probe_rows, "qid long, qi int, cid long")
-
-    cid_arr = F.array(*[F.lit(int(c)) for c in cids])
-    cslice = F.slice("s", nq + 1, len(cids))
-    scored = (
-        v.select("id", _ref_scores_udf(ref_m, ref_n)("v").alias("s"))
-        .withColumn(
-            "cid",
-            F.element_at(
-                cid_arr,
-                F.array_position(cslice, F.array_max(cslice)).cast("int"),
-            ),
-        )
-        .persist()
-    )
+    scored.persist()  # the truth and candidate legs both read it
 
     qid_arr = F.array(*[F.lit(int(q)) for q in qids])
     w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("nid"))
     truth = (
-        scored.select("id", F.posexplode(F.slice("s", 1, nq)).alias("qi", "c"))
+        scored.select("id", F.posexplode(F.slice("s", 1, len(qids))).alias("qi", "c"))
         .select(
             F.element_at(qid_arr, F.col("qi") + 1).alias("qid"),
             F.col("id").alias("nid"),
@@ -1047,19 +1045,7 @@ def ann_recall_fused(
         .where(F.col("rank") <= k)
         .select("qid", "nid")
     )
-    cand = (
-        F.broadcast(probes)
-        .join(scored, "cid")
-        .where(F.col("qid") != F.col("id"))
-        .select(
-            "qid",
-            F.col("id").alias("nid"),
-            F.round(F.element_at("s", F.col("qi") + 1), 6).alias("cos"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("qid", "nid")
-    )
+    cand = _ivf_candidates(probes, scored, k).select("qid", "nid")
     hits = (
         cand.join(truth, ["qid", "nid"], "left_semi")
         .groupBy("qid")

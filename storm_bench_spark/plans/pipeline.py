@@ -29,7 +29,7 @@ from storm_bench_spark.functions.text import (
 )
 from storm_bench_spark.operators.dedup import shingle_array
 from storm_bench_spark.plans.registry import register
-from storm_bench_spark.sources.tables import load_table
+from storm_bench_spark.sources.tables import _path_bytes, load_table
 
 # explicit char class, not \s: RE2's \s excludes \x0b while Java's
 # includes it — the class makes both engines tokenize identically by
@@ -47,15 +47,6 @@ def _conf_bytes(spark, key: str, default: int) -> int:
         if raw.endswith(suffix):
             return int(raw[: -len(suffix)]) * m
     return int(raw)
-
-
-def _path_bytes(path: str) -> int:
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-    return total
 
 
 def _spread(df, sf_dir: str, table: str = "documents"):
@@ -82,28 +73,14 @@ def _spread(df, sf_dir: str, table: str = "documents"):
     is only wasteful when the input is big, and big inputs estimate
     high. Same byte-derived sizing rule streaming/streams.py uses for
     state partitions.
-
-    ``SPARK_GRAFT_SPREAD`` overrides: ``auto`` (default, the rule
-    above), ``always`` (unconditional repartition — the pre-round-6
-    behavior), ``never`` (scan partitioning untouched). Any other
-    value raises — an unrecognized mode silently behaving as
-    ``always`` cost a flagged ADVICE finding in round 6.
     """
     sc = df.sparkSession.sparkContext
-    mode = os.environ.get("SPARK_GRAFT_SPREAD", "auto")
-    if mode not in ("auto", "always", "never"):
-        raise ValueError(
-            f"SPARK_GRAFT_SPREAD={mode!r}: expected auto|always|never"
-        )
-    if mode == "never":
+    max_split = _conf_bytes(
+        df.sparkSession, "spark.sql.files.maxPartitionBytes", 128 << 20
+    )
+    est_splits = -(-_path_bytes(os.path.join(sf_dir, f"{table}.parquet")) // max_split)
+    if est_splits >= sc.defaultParallelism:
         return df
-    if mode == "auto":
-        max_split = _conf_bytes(
-            df.sparkSession, "spark.sql.files.maxPartitionBytes", 128 << 20
-        )
-        est_splits = -(-_path_bytes(os.path.join(sf_dir, f"{table}.parquet")) // max_split)
-        if est_splits >= sc.defaultParallelism:
-            return df
     return df.repartition(sc.defaultParallelism)
 
 

@@ -6,10 +6,10 @@ exposes Spark's native sink surface as the declared capability:
 
 - batch: parquet/csv/json writers, with optional hash-partitioned
   layout (``partition_by``) so downstream scans get partition pruning;
-- streaming: memory (tests), console (Print parity), file (parquet
-  append with checkpoint — exactly-once), and ``foreach_batch_capture``
-  for golden-file capture of every micro-batch (the oracle-friendly
-  replacement for log-scraping).
+- streaming: file (parquet append with checkpoint — exactly-once)
+  here; memory tables and per-micro-batch capture (foreachBatch, the
+  oracle-friendly replacement for log-scraping) through
+  ``streaming.streams.run_stream``.
 
 At 100 TB the parquet writer is the only one that matters: writes are
 per-partition parallel, and ``partition_by`` columns should be
@@ -20,8 +20,7 @@ produces a small-files explosion.
 from __future__ import annotations
 
 import tempfile
-import uuid
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
@@ -59,27 +58,6 @@ def stream_to_files(
     if available_now:
         w = w.trigger(availableNow=True)
     return w.start()
-
-
-def foreach_batch_capture(
-    df: DataFrame,
-    fn: Callable[[DataFrame, int], None],
-    checkpoint: str | None = None,
-    available_now: bool = True,
-    output_mode: str = "update",
-):
-    """Run ``fn(batch_df, batch_id)`` per micro-batch (golden capture,
-    custom upserts, side outputs). ``fn`` must be idempotent per
-    batch_id — Spark may re-run a batch after failure."""
-    ckpt = checkpoint or tempfile.mkdtemp(prefix="sbs_feb_ckpt_")
-    return (
-        df.writeStream.foreachBatch(fn)
-        .option("checkpointLocation", ckpt)
-        .outputMode(output_mode)
-        .queryName(f"sbs_feb_{uuid.uuid4().hex[:8]}")
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def write_zordered(

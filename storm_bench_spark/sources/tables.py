@@ -8,6 +8,7 @@ PushedFilters/ReadSchema reaching these scans).
 
 from __future__ import annotations
 
+import fnmatch
 import os
 import weakref
 
@@ -27,6 +28,21 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+
+def _path_bytes(path: str, name_glob: str = "*") -> int:
+    """On-disk bytes of a table path: the file itself, or the files
+    under the directory whose names match ``name_glob`` (a file
+    source's ``pathGlobFilter``)."""
+    if os.path.isfile(path):
+        return os.path.getsize(path)
+    total = 0
+    for root, _dirs, files in os.walk(path):
+        total += sum(
+            os.path.getsize(os.path.join(root, f))
+            for f in fnmatch.filter(files, name_glob)
+        )
+    return total
 
 
 # Fixture columns stored as TIMESTAMP(NANOS) in parquet. Spark reads them

@@ -91,7 +91,7 @@ def apply_changes_stream(
         state["path"] = out
 
     # The fold's epoch jobs are changelog-sized joins: run at the floor
-    # width, whatever input bytes a caller's stream_table recorded.
+    # width, whatever the changelog's on-disk size.
     run_stream(
         change_stream,
         "append",

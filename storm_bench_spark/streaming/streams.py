@@ -22,7 +22,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from storm_bench_spark.sources.tables import TABLES, _TIMESTAMP_COLS
+from storm_bench_spark.sources.tables import TABLES, _TIMESTAMP_COLS, _path_bytes
 from storm_bench_spark.streaming.stateful import FUNNEL_SHARDS
 
 
@@ -36,7 +36,6 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(name)
     path = os.path.join(sf_dir, f"{name}.parquet")
     schema = spark.read.parquet(path).schema
-    _record_input_bytes(spark, _path_bytes(path))
     if os.path.isdir(path):
         # Spark-written table: {name}.parquet is a DIRECTORY of part
         # files — stream it directly. The glob spelling below would
@@ -74,9 +73,10 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # overhead changes.
 #
 # SIZING RULE (VERDICT r5 #8 — the small default must not silently
-# under-parallelize a data-sized stream): ``stream_table`` records the
-# input's on-disk byte size in a session conf; ``run_stream`` derives
-# the state width from it via :func:`state_partitions_for` —
+# under-parallelize a data-sized stream): when a stream starts,
+# ``run_stream`` reads the on-disk bytes of the file sources in the
+# DataFrame's own plan (:func:`_stream_input_bytes`) and derives the
+# state width from them via :func:`state_partitions_for` —
 #   input ≤ 4 × 32 MiB  → STREAM_STATE_PARTITIONS (the floor trim);
 #   larger              → max(defaultParallelism, input/32 MiB),
 #                         capped at 4 × defaultParallelism
@@ -89,32 +89,23 @@ STREAM_STATE_PARTITIONS = 4
 # parallelism gain (the regime the floor trim was measured in).
 STREAM_STATE_TARGET_BYTES = 32 << 20
 
-_INPUT_BYTES_KEY = "spark.sparkGraft.streamInputBytes"
-
-
-def _path_bytes(path: str) -> int:
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-    return total
-
-
-def _record_input_bytes(spark: SparkSession, n: int) -> None:
-    """Accumulate (max) the byte size of streamed inputs in the session
-    conf so ``run_stream`` can size the state width. Max, not sum: a
-    multi-input query (stream-stream join) keys its state off the larger
-    side. Consumed-and-reset by :func:`_take_input_bytes`."""
-    cur = int(spark.conf.get(_INPUT_BYTES_KEY, "0"))
-    if n > cur:
-        spark.conf.set(_INPUT_BYTES_KEY, str(n))
-
-
-def _take_input_bytes(spark: SparkSession) -> int:
-    n = int(spark.conf.get(_INPUT_BYTES_KEY, "0"))
-    spark.conf.set(_INPUT_BYTES_KEY, "0")
-    return n
+def _stream_input_bytes(df: DataFrame) -> int:
+    """On-disk bytes of the largest file source a streaming plan reads,
+    from its ``path`` and ``pathGlobFilter`` options; 0 when it reads
+    none (rate, Kafka). Max, not sum: a stream-stream join keys its
+    state off the larger side. The analyzed plan, not the logical one:
+    there a bare ``readStream...parquet(dir)`` is still unresolved."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    sizes = [0]
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "StreamingRelation":
+            continue
+        opts = leaf.dataSource().options()
+        path, glob = opts.get("path"), opts.get("pathGlobFilter")
+        if path.isDefined():
+            sizes.append(_path_bytes(path.get(), glob.get() if glob.isDefined() else "*"))
+    return max(sizes)
 
 
 # Post-mortem breadcrumbs for the rare in-suite streaming flake
@@ -206,8 +197,8 @@ def run_stream(
     topology models (TridentWordCount.java:36-52).
 
     ``spark.sql.shuffle.partitions`` is trimmed to ``state_partitions``
-    (default: :func:`state_partitions_for` over the input bytes that
-    ``stream_table`` recorded — the floor trim for fixture-sized input,
+    (default: :func:`state_partitions_for` over the bytes of the plan's
+    file sources — the floor trim for fixture-sized input,
     ≥ core-count for data-sized ingest) for the duration of the
     stream and restored after — the streaming plan compiles at
     ``start()``, and foreachBatch jobs run inside it, so only this
@@ -226,12 +217,7 @@ def run_stream(
         .option("checkpointLocation", ckpt)
     )
     w = w.format("memory") if batch_fn is None else w.foreachBatch(batch_fn)
-    # Consume the recorded input bytes UNCONDITIONALLY: with an
-    # explicit state_partitions an `or` short-circuit would leave the
-    # conf key set, max-inflating the NEXT query's derived width
-    # (ADVICE r6). A failed build between stream_table and here is
-    # drained by the registry's wrapper around every query function.
-    input_bytes = _take_input_bytes(spark)
+    input_bytes = _stream_input_bytes(df)
     n_parts = state_partitions or state_partitions_for(spark, input_bytes)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
@@ -290,12 +276,14 @@ def run_stream(
             "floor_sec": round(floor_sec, 3),
         }
     )
-    # Silent-empty-stream guard: a stream over a recorded non-empty
-    # fixture input that processed ZERO rows is never a valid run (the
-    # fixture tables are all non-empty) — fail loudly here, where the
+    # Silent-empty-stream guard: a FRESH stream over a non-empty file
+    # source that processed ZERO rows is never a valid run (the fixture
+    # tables are all non-empty) — fail loudly here, where the
     # checkpoint and progress are still in hand, rather than letting a
     # mysteriously-empty snapshot surface later as an oracle mismatch.
-    if input_bytes > 0 and total_in == 0:
+    # A caller's checkpoint may already have committed every file, so
+    # a resumed run that finds nothing new is valid.
+    if checkpoint is None and input_bytes > 0 and total_in == 0:
         raise RuntimeError(
             f"streaming query {name} read 0 input rows from a "
             f"{input_bytes}-byte source (checkpoint {ckpt}); "

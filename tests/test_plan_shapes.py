@@ -492,7 +492,7 @@ def test_codegen_canary_fails_red_when_codegen_disabled(spark):
 # >= defaultParallelism splits — i.e. on any production input. Since
 # round 7 the split count is estimated from on-disk bytes ÷
 # maxPartitionBytes (no `.rdd` planning probe — VERDICT r6 #3); these
-# tests pin the estimate, both branches, and the overrides.
+# tests pin the estimate and both branches.
 
 @pytest.fixture(scope="module")
 def spread_dir(spark, tmp_path_factory):
@@ -504,10 +504,9 @@ def spread_dir(spark, tmp_path_factory):
     return str(d)
 
 
-def test_spread_skips_when_input_scans_wide(spark, spread_dir, monkeypatch):
+def test_spread_skips_when_input_scans_wide(spark, spread_dir):
     from storm_bench_spark.plans.pipeline import _spread
 
-    monkeypatch.delenv("SPARK_GRAFT_SPREAD", raising=False)
     # Shrink the split size so the small fixture file estimates as many
     # splits — the production-scale regime without a production file.
     spark.conf.set("spark.sql.files.maxPartitionBytes", "100")
@@ -518,41 +517,15 @@ def test_spread_skips_when_input_scans_wide(spark, spread_dir, monkeypatch):
         spark.conf.unset("spark.sql.files.maxPartitionBytes")
 
 
-def test_spread_fires_on_small_input(spark, spread_dir, monkeypatch):
+def test_spread_fires_on_small_input(spark, spread_dir):
     from storm_bench_spark.plans.pipeline import _spread
 
-    monkeypatch.delenv("SPARK_GRAFT_SPREAD", raising=False)
     par = spark.sparkContext.defaultParallelism
     # Default 128 MiB splits: the KB-sized file estimates 1 split.
     df = spark.read.parquet(f"{spread_dir}/documents.parquet")
     out = _spread(df, spread_dir)
     assert out is not df
     assert out.rdd.getNumPartitions() == par
-
-
-def test_spread_mode_overrides(spark, spread_dir, monkeypatch):
-    from storm_bench_spark.plans.pipeline import _spread
-
-    df = spark.read.parquet(f"{spread_dir}/documents.parquet")
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD", "never")
-    assert _spread(df, spread_dir) is df
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD", "always")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "100")
-    try:
-        out = _spread(df, spread_dir)  # wide estimate, but mode=always wins
-        assert out is not df
-        assert "RoundRobinPartitioning" in out._jdf.queryExecution().toString()
-    finally:
-        spark.conf.unset("spark.sql.files.maxPartitionBytes")
-
-
-def test_spread_rejects_unknown_mode(spark, spread_dir, monkeypatch):
-    from storm_bench_spark.plans.pipeline import _spread
-
-    df = spark.read.parquet(f"{spread_dir}/documents.parquet")
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD", "off")  # typo'd mode
-    with pytest.raises(ValueError, match="SPARK_GRAFT_SPREAD"):
-        _spread(df, spread_dir)
 
 
 def test_conf_bytes_parses_suffixes(spark):

@@ -64,3 +64,13 @@ def test_every_query_has_an_oracle():
     # check, and the bench times every row against its DuckDB twin with
     # no rows-only branch
     assert set(R.all_oracles()) == set(R.all_queries())
+
+
+def test_registry_binds_the_decorated_function():
+    # register returns fn itself: no wrapper sits between the driver and
+    # a query, and the module name and the registry entry are one object
+    import importlib
+
+    for name, fn in R.all_queries().items():
+        assert not hasattr(fn, "__wrapped__"), name
+        assert getattr(importlib.import_module(fn.__module__), fn.__name__) is fn, name

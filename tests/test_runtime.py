@@ -5,11 +5,7 @@ import tempfile
 
 import pytest
 
-from storm_bench_spark.sources.sinks import (
-    foreach_batch_capture,
-    stream_to_files,
-    write_batch,
-)
+from storm_bench_spark.sources.sinks import stream_to_files, write_batch
 from tests.conftest import SF_DIR
 
 
@@ -97,7 +93,7 @@ def test_stream_to_files_exactly_once(spark):
 def test_foreach_batch_capture_sees_all_rows(spark):
     from pyspark.sql import functions as F
 
-    from storm_bench_spark.streaming.streams import stream_table
+    from storm_bench_spark.streaming.streams import run_stream, stream_table
 
     counts = []
 
@@ -105,8 +101,7 @@ def test_foreach_batch_capture_sees_all_rows(spark):
         counts.append(batch_df.agg(F.count("*")).collect()[0][0])
 
     docs = stream_table(spark, SF_DIR, "documents")
-    q = foreach_batch_capture(docs, capture, output_mode="append")
-    q.awaitTermination()
+    run_stream(docs, "append", batch_fn=capture)
     total = sum(counts)
     from storm_bench_spark.sources.tables import load_table
 

@@ -1,6 +1,7 @@
 """Streaming-surface tests: stream/batch parity, stateful operator,
 generator spouts (SURVEY.md §5.2 streaming level)."""
 
+import os
 import time
 
 import pytest
@@ -449,8 +450,8 @@ def test_streaming_cdc_folds_across_real_epochs(spark, tmp_path):
 
 # --- state-partition sizing (streams.py:state_partitions_for) ------------
 # The VERDICT r5 #8 rule shipped in round 6 without a test; these pin
-# both regimes, the cap, and the consumed-on-every-run reset of the
-# recorded input bytes.
+# both regimes and the cap, and that each stream is sized from the
+# file sources in its own plan.
 
 def test_state_partitions_small_regime_floor(spark):
     from storm_bench_spark.streaming import streams as S
@@ -478,71 +479,62 @@ def test_state_partitions_data_sized_regime(spark):
     assert S.state_partitions_for(spark, S.STREAM_STATE_TARGET_BYTES * 100 * par) == 4 * par
 
 
-def test_recorded_input_bytes_reset_between_queries(spark):
+def test_rerun_on_own_checkpoint_reads_nothing_and_passes(spark, tmp_path):
+    """A stream_table run resumed on a checkpoint that already
+    committed every file reads 0 rows; that is a valid run, not the
+    silent empty stream the guard exists for."""
     from storm_bench_spark.streaming import streams as S
 
-    # A data-sized recording is consumed by the take...
-    S._record_input_bytes(spark, 10**12)
-    assert S._take_input_bytes(spark) == 10**12
-    # ...and must NOT leak into the next query's sizing.
-    assert S._take_input_bytes(spark) == 0
-    # Recording accumulates by max (stream-stream join keys off the
-    # larger side), then resets again after the take.
-    S._record_input_bytes(spark, 100)
-    S._record_input_bytes(spark, 50)
-    assert S._take_input_bytes(spark) == 100
-    assert S._take_input_bytes(spark) == 0
+    ckpt = str(tmp_path / "ckpt")
+    rows = []
+    for _ in range(2):
+        S.run_stream(
+            S.stream_table(spark, SF_DIR, "documents"),
+            "append",
+            batch_fn=lambda batch_df, batch_id: batch_df.count(),
+            checkpoint=ckpt,
+        )
+        assert S.LAST_STREAM_RUNS[-1]["input_bytes"] > 0
+        rows.append(S.LAST_STREAM_RUNS[-1]["num_input_rows"])
+    assert rows[0] > 0 and rows[1] == 0
 
 
-def test_run_to_memory_consumes_bytes_with_explicit_partitions(spark):
-    """An explicit state_partitions run must still drain the recorded
-    bytes — the `or` short-circuit leak from ADVICE r6."""
-    from storm_bench_spark.streaming import streams as S
+def test_fresh_run_reading_nothing_from_a_nonempty_source_raises(spark, tmp_path):
+    """The guard still fires on a fresh run: a 0-row parquet file has
+    bytes on disk, so a stream that reads no rows from it is caught."""
+    d = str(tmp_path / "empty")
+    spark.createDataFrame([], "k string").write.parquet(d)
+    sdf = spark.readStream.schema("k string").parquet(d)
+    with pytest.raises(RuntimeError, match="read 0 input rows"):
+        run_to_memory(sdf, output_mode="append")
+
+
+def test_failed_build_leaves_the_next_stream_its_own_bytes(spark, tmp_path):
+    """A query that fails after stream_table leaves nothing behind: the
+    next stream is sized from its own plan only."""
     from pyspark.sql import Row
 
-    import tempfile
-    d = tempfile.mkdtemp(prefix="sbs_state_reset_")
-    spark.createDataFrame([Row(k="a"), Row(k="b")]).write.mode("overwrite").parquet(f"{d}/t.parquet")
-    schema = spark.read.parquet(f"{d}/t.parquet").schema
-    sdf = spark.readStream.schema(schema).parquet(f"{d}/t.parquet")
-    S._record_input_bytes(spark, 10**12)  # pretend a huge stream input
-    run_to_memory(sdf.groupBy("k").count(), state_partitions=2)
-    # The fake recording was consumed even though the explicit width
-    # was used; the next derived sizing sees a clean slate.
-    assert S._take_input_bytes(spark) == 0
-
-
-def test_failed_build_drains_recorded_bytes(spark):
-    """VERDICT r7 "what's wrong" #3: a streaming query that raises
-    BETWEEN stream_table (bytes recorded) and the stream run (bytes
-    consumed) must not leave the recording behind to inflate the next
-    query's derived state width. The register wrapper closes that
-    window for every registered query."""
-    from storm_bench_spark.plans import registry as R
+    from storm_bench_spark.sources.tables import _path_bytes
     from storm_bench_spark.streaming import streams as S
 
-    def doomed(spark_, sf_dir):
-        S.stream_table(spark_, sf_dir, "events")  # records real bytes
-        assert int(spark_.conf.get(S._INPUT_BYTES_KEY)) > 0
+    with pytest.raises(ValueError):
+        S.stream_table(spark, SF_DIR, "events")
         raise ValueError("build failed after stream_table")
+    d = str(tmp_path / "t")
+    spark.createDataFrame([Row(k="a"), Row(k="b")]).write.parquet(d)
+    run_to_memory(spark.readStream.schema("k string").parquet(d).groupBy("k").count())
+    assert S.LAST_STREAM_RUNS[-1]["input_bytes"] == _path_bytes(d) > 0
 
-    wrapped = R.register("zz_doomed_probe", oracle="SELECT 1 AS x")(doomed)
-    try:
-        with pytest.raises(ValueError):
-            wrapped(spark, SF_DIR)
-        assert S._take_input_bytes(spark) == 0
-        assert R._REGISTRY["zz_doomed_probe"].fn is wrapped
-        assert wrapped.__wrapped__ is doomed
-    finally:
-        del R._REGISTRY["zz_doomed_probe"]
-    # and every registered query is the register wrapper, both in the
-    # registry and as its module attribute
-    import importlib
 
-    for n, fn in all_queries().items():
-        assert fn.__wrapped__ is not fn, n  # functools.wraps marker
-        mod = importlib.import_module(fn.__module__)
-        assert getattr(mod, fn.__name__) is fn, n
+def test_input_bytes_count_only_glob_matching_files(spark):
+    """A fixture table streams as its sf dir filtered by pathGlobFilter;
+    only the one matching file counts, not the other tables beside it."""
+    from storm_bench_spark.sources.tables import _path_bytes
+    from storm_bench_spark.streaming import streams as S
+
+    n = S._stream_input_bytes(S.stream_table(spark, SF_DIR, "events"))
+    assert n == os.path.getsize(os.path.join(SF_DIR, "events.parquet"))
+    assert n < _path_bytes(SF_DIR)
 
 
 def _run_row(spark, name: str) -> list[dict]:
@@ -557,15 +549,9 @@ def _run_row(spark, name: str) -> list[dict]:
 
 def test_rolling_sort_leaves_no_bytes_and_a_run_record(spark):
     """streaming_rolling_sort runs a foreachBatch sink: it must still
-    consume its recorded input bytes and leave a run record, or the
-    next stream sizes its state off events.parquet and the bench stamps
-    the row's stream floor as 0."""
-    import os
-
-    from storm_bench_spark.streaming import streams as S
-
+    leave a run record, or the bench stamps the row's stream floor as
+    0, and the stream after it must be sized from its own input."""
     recs = _run_row(spark, "streaming_rolling_sort")
-    assert S._take_input_bytes(spark) == 0
     assert len(recs) == 1
     assert recs[0]["num_input_rows"] > 0
     assert recs[0]["input_bytes"] == os.path.getsize(
@@ -581,10 +567,28 @@ def test_rolling_sort_leaves_no_bytes_and_a_run_record(spark):
 def test_every_streaming_row_writes_the_full_run_record(spark, tmp_path):
     """One run path: every streaming registry row appends exactly one
     run record with the key set run_to_memory writes (the CDC fold and
-    the foreachBatch sort included), and leaves no recorded bytes."""
+    the foreachBatch sort included), sized from the largest table it
+    streams. Max, not sum: streaming_dedup and streaming_interval_join
+    stream events twice. The CDC fold streams a changelog it writes
+    itself."""
     from pyspark.sql import Row
 
     from storm_bench_spark.streaming import streams as S
+
+    def size(table: str) -> int:
+        return os.path.getsize(os.path.join(SF_DIR, f"{table}.parquet"))
+
+    streamed = {
+        "streaming_enriched_revenue": "orders",
+        **dict.fromkeys(
+            (
+                "streaming_hashtag_count", "streaming_heavy_hitters",
+                "streaming_rolling_count", "streaming_weighted_sample",
+                "trident_wordcount",
+            ),
+            "documents",
+        ),
+    }
 
     spark.createDataFrame([Row(k="a")]).write.parquet(str(tmp_path / "t"))
     probe = spark.readStream.schema("k string").parquet(str(tmp_path / "t"))
@@ -599,7 +603,10 @@ def test_every_streaming_row_writes_the_full_run_record(spark, tmp_path):
         recs = _run_row(spark, n)
         assert len(recs) == 1, (n, recs)
         assert set(recs[0]) == want, (n, sorted(set(recs[0]) ^ want))
-        assert S._take_input_bytes(spark) == 0, n
+        if n == "streaming_cdc_apply":
+            assert recs[0]["input_bytes"] > 0
+        else:
+            assert recs[0]["input_bytes"] == size(streamed.get(n, "events")), n
 
 
 def test_stream_diagnostics_recorded(spark):
