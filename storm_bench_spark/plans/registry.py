@@ -75,20 +75,23 @@ def _ensure_loaded() -> None:
 # unlisted query can never displace promised window rows.
 #
 # CURRENT WINDOW (exactly 50):
-# (a) the 27 round-14-touched dedup/CC/corpus/similarity/flight/span
-# rows (VERDICT r14 "What's wrong" #1), which include two streaming
-# rows;
-# (b) the round-15 touched rows gap_fill_hourly and
-# asof_click_purchase;
-# (c) the other 20 streaming rows: run_stream now sizes every stream
-# from the file sources in its own plan (streaming_cdc_apply's
-# changelog is now sized too);
-# (d) ann_recall_at_k, which now shares its fused IVF pass with
-# ann_topk_ivf.
-# Rotated out to just below the boundary to make room: the 17 fillers
-# (the r11-cohort remainder), the three round-15 rows adjudicated
-# untouched (rolling_latlong, fuzzy_name_pairs_d2, ann_rerank), and
-# asof_click_purchase_tol, unchanged since round 15.
+# (a) 26 of the 27 round-14-touched dedup/CC/corpus/similarity/flight/
+# span rows (VERDICT r14 "What's wrong" #1), streaming_funnel among
+# them;
+# (b) asof_click_purchase (round 15) and ann_recall_at_k, which shares
+# its fused IVF pass with ann_topk_ivf;
+# (c) all 25 rows whose executed plan has a Python evaluation node
+# (found by scanning every row's SQL executions at sf0.001), since
+# their workers now run through the engine's worker daemon: eight were
+# already in the window (semdedup, ann_topk_ivf, ann_topk_ivf_kmeans,
+# streaming_funnel and ann_recall_at_k above, then
+# stateful_running_count, streaming_kmv_sketch and
+# streaming_weighted_sample), and 17 are rotated in at the end;
+# (d) user_sessions and streaming_user_sessions, whose shared oracle
+# now merges events exactly the session gap apart.
+# Rotated out to just below the boundary to make room: the 17 JVM-only
+# streaming rows (their plans have no Python node, so the daemon does
+# not reach them) and gap_fill_hourly, unchanged since round 15.
 _GATE_PRIORITY: tuple[str, ...] = (
     "simhash",
     "simhash_pairs",
@@ -115,14 +118,36 @@ _GATE_PRIORITY: tuple[str, ...] = (
     "chunk_dedup",
     "rolling_flight_dist",
     "rolling_flight_dist_bucketed",
-    "streaming_flight_dist",
     "streaming_funnel",
-    "gap_fill_hourly",
     "asof_click_purchase",
     "ann_recall_at_k",
+    "stateful_running_count",
+    "streaming_kmv_sketch",
+    "streaming_user_sessions",
+    "streaming_weighted_sample",
+    "user_sessions",
+    "ann_rerank",
+    "ann_topk",
+    "ann_topk_quantized",
+    "embedding_neardup",
+    "embedding_neardup_lsh",
+    "embedding_neardup_lsh_scaled",
+    "embedding_project",
+    "multimodal_audio_chunks",
+    "multimodal_audio_meta",
+    "multimodal_bmp_meta",
+    "multimodal_features",
+    "multimodal_frames",
+    "multimodal_image_meta",
+    "multimodal_ppm_meta",
+    "multimodal_resize",
+    "multimodal_wav_meta",
+    "rrf_hybrid_rank",
+    # --- window boundary (first 50 above) ---
+    "gap_fill_hourly",
+    "streaming_flight_dist",
     "streaming_audience_overlap",
     "streaming_hll_visitors",
-    "stateful_running_count",
     "streaming_bitmap_visitors",
     "streaming_cdc_apply",
     "streaming_dedup",
@@ -132,19 +157,14 @@ _GATE_PRIORITY: tuple[str, ...] = (
     "streaming_heavy_hitters",
     "streaming_histogram_quantiles",
     "streaming_interval_join",
-    "streaming_kmv_sketch",
     "streaming_rolling_count",
     "streaming_rolling_sort",
     "streaming_sol",
     "streaming_tumbling_ohlc",
-    "streaming_user_sessions",
-    "streaming_weighted_sample",
     "trident_wordcount",
-    # --- window boundary (first 50 above) ---
     "asof_click_purchase_tol",
     "rolling_latlong",
     "fuzzy_name_pairs_d2",
-    "ann_rerank",
     "bm25_rank",
     "bpe_encode",
     "bpe_merge_steps",
@@ -164,7 +184,6 @@ _GATE_PRIORITY: tuple[str, ...] = (
     "rolling_hashtag_count",
     "rolling_geo_count",
     "rolling_count",
-    "multimodal_bmp_meta",
     "unique_visitor_approx",
     "interval_click_error",
     "print_passthrough",
@@ -207,11 +226,8 @@ _GATE_PRIORITY: tuple[str, ...] = (
     "ngram_jaccard",
     "quality_score",
     "boilerplate_ngram_ratio",
-    "embedding_neardup_lsh",
-    "embedding_neardup_lsh_scaled",
     "pack_sequences",
     "quality_quantile_filter",
-    "rrf_hybrid_rank",
     "dataclean",
     "dedup_exact",
     "distinct_users",
@@ -219,8 +235,6 @@ _GATE_PRIORITY: tuple[str, ...] = (
     "grep",
     "histogram_quantiles",
     "kmv_distinct_users",
-    "multimodal_ppm_meta",
-    "multimodal_wav_meta",
     "pageview_count",
     "rolling_sort",
     "sol",
@@ -236,21 +250,13 @@ _GATE_PRIORITY: tuple[str, ...] = (
     "tpch_q5",
     "tpch_q6",
     "unique_visitor",
-    "user_sessions",
     "wordcount",
-    "ann_topk",
     "bitmap_distinct_daily",
     "bitmap_distinct_weekly_rollup",
     "bitmap_retention_daily",
     "expand_words",
     "histogram_quantiles_rollup",
     "kmv_resemblance",
-    "multimodal_audio_chunks",
-    "multimodal_audio_meta",
-    "multimodal_features",
-    "multimodal_frames",
-    "multimodal_image_meta",
-    "multimodal_resize",
     "one_per_key",
     "orders_rollup",
     "pageview_extract",
@@ -261,13 +267,10 @@ _GATE_PRIORITY: tuple[str, ...] = (
     "weighted_sample_per_source",
     "zorder_layout",
     "adsb_parse",
-    "ann_topk_quantized",
     "audience_overlap_hll",
     "bloom_high_value_orders",
     "cohort_retention",
     "dsir_select",
-    "embedding_neardup",
-    "embedding_project",
     "embedding_quantize",
     "hll_users_per_type",
 )

@@ -222,7 +222,7 @@ WITH es AS ({D.EVENTS_SEC_SQL}),
 marked AS (
   SELECT user_id, sec, event_id,
          CASE WHEN lag(sec) OVER w IS NULL
-                OR sec - lag(sec) OVER w >= {SESSION_GAP_SEC}
+                OR sec - lag(sec) OVER w > {SESSION_GAP_SEC}
               THEN 1 ELSE 0 END AS new_session
   FROM es
   WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id)
@@ -265,7 +265,8 @@ def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionize each user's events with a 30-minute inactivity gap —
     ``session_window`` (dynamic gap-merged windows in the aggregation
     state, batch and streaming). Two events belong to one session iff
-    their gap is < {SESSION_GAP_SEC}s; the oracle replays that as the
+    their gap is at most {SESSION_GAP_SEC}s (``session_window`` merges
+    events exactly the gap apart); the oracle replays that as the
     classic gap-and-islands window SQL, so the engine's session
     semantics (merge-on-overlap, end = last event + gap) is
     value-checked against first principles."""

@@ -12,6 +12,10 @@ configuration:
 - shuffle partitions default sized for local testing but overridable;
   on a real cluster this is set per-job (or left to AQE coalescing
   from a high initial value).
+- Python workers run through the engine's own daemon
+  (``worker_daemon``), whose per-task import-cache reset skips Spark's
+  zip archives instead of re-reading ``pyspark.zip`` on every task; the
+  engine's package root is on the workers' path so they can start it.
 """
 
 from __future__ import annotations
@@ -19,6 +23,18 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# The package root, so Python workers can import the daemon below from
+# any working directory.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_DAEMON = "storm_bench_spark.worker_daemon"
+
+
+def _worker_pythonpath(extra_conf: dict[str, str]) -> str:
+    """The caller's ``spark.executorEnv.PYTHONPATH``, if any, with the
+    package root appended."""
+    caller = extra_conf.get("spark.executorEnv.PYTHONPATH", "")
+    return os.pathsep.join(p for p in (caller, _PACKAGE_ROOT) if p)
 
 
 def get_spark(
@@ -68,6 +84,10 @@ def get_spark(
         # real cluster this knob is per-executor and set by spark-submit.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
+    builder = builder.config("spark.python.daemon.module", _WORKER_DAEMON).config(
+        "spark.executorEnv.PYTHONPATH", _worker_pythonpath(extra_conf)
+    )
     return builder.getOrCreate()

@@ -38,10 +38,13 @@ def _path_bytes(path: str, name_glob: str = "*") -> int:
         return os.path.getsize(path)
     total = 0
     for root, _dirs, files in os.walk(path):
-        total += sum(
-            os.path.getsize(os.path.join(root, f))
-            for f in fnmatch.filter(files, name_glob)
-        )
+        for f in fnmatch.filter(files, name_glob):
+            try:
+                total += os.path.getsize(os.path.join(root, f))
+            except FileNotFoundError:
+                # Renamed or removed since the listing: a stream's
+                # source directory can change while the stream starts.
+                pass
     return total
 
 

@@ -537,6 +537,18 @@ def test_input_bytes_count_only_glob_matching_files(spark):
     assert n < _path_bytes(SF_DIR)
 
 
+def test_input_bytes_skip_a_file_renamed_after_the_listing(tmp_path, monkeypatch):
+    """An open-loop writer renames ``.part-N`` to ``part-N`` while a
+    stream starts on the directory; a file listed before the rename is
+    gone when it is sized, and counts as 0 bytes instead of raising."""
+    from storm_bench_spark.sources import tables
+
+    (tmp_path / "part-00000.parquet").write_bytes(b"x" * 10)
+    listing = [(str(tmp_path), [], [".part-00001.parquet", "part-00000.parquet"])]
+    monkeypatch.setattr(tables.os, "walk", lambda path: iter(listing))
+    assert tables._path_bytes(str(tmp_path)) == 10
+
+
 def _run_row(spark, name: str) -> list[dict]:
     """Run one registry row to completion; return the stream run
     records it appended."""
@@ -706,3 +718,47 @@ def test_streaming_weighted_sample_multibatch_eviction(spark):
     # exceeds N rows
     per_shard = latest.groupBy("shard").count().collect()
     assert all(r["count"] <= N for r in per_shard)
+
+
+def test_session_gap_boundary_batch_and_stream(spark, duck, tmp_path):
+    """Events 1799, 1800 and 1801 s apart: ``session_window`` merges a
+    gap of at most SESSION_GAP_SEC, in batch and in streaming alike, and
+    the oracle splits at the same place."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from storm_bench_spark.plans.relational import SESSION_GAP_SEC, USER_SESSIONS_ORACLE
+
+    t0 = datetime.datetime(2024, 1, 7, 12, 0, 0)
+    gaps = {1: SESSION_GAP_SEC - 1, 2: SESSION_GAP_SEC, 3: SESSION_GAP_SEC + 1}
+    rows = [(u, t0 + datetime.timedelta(seconds=dt)) for u, g in gaps.items() for dt in (0, g)]
+    schema = pq.read_schema(os.path.join(SF_DIR, "events.parquet")).remove_metadata()
+    table = pa.table(
+        {
+            "event_id": [i for i in range(len(rows))],
+            "ts": [ts for _, ts in rows],
+            "user_id": [u for u, _ in rows],
+            "event_type": ["view"] * len(rows),
+            "value": [1.0] * len(rows),
+            "props": ["{}"] * len(rows),
+        },
+        schema=schema,
+    )
+    pq.write_table(table, tmp_path / "events.parquet")
+
+    duck.execute(f"CREATE OR REPLACE TEMP VIEW gap_events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')")
+    oracle = duck.execute(USER_SESSIONS_ORACLE.replace("FROM events", "FROM gap_events")).fetchdf()
+    start = int(t0.replace(tzinfo=datetime.timezone.utc).timestamp())
+    assert sorted(oracle[["user_id", "n_events", "duration_sec"]].itertuples(index=False, name=None)) == [
+        (1, 2, SESSION_GAP_SEC - 1),
+        (2, 2, SESSION_GAP_SEC),
+        (3, 1, 0),
+        (3, 1, 0),
+    ]
+    assert set(oracle["session_start"]) == {start, start + SESSION_GAP_SEC + 1}
+
+    qs = all_queries()
+    for name in ("user_sessions", "streaming_user_sessions"):
+        assert_frames_match(qs[name](spark, str(tmp_path)).toPandas(), oracle, name)
