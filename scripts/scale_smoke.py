@@ -239,12 +239,12 @@ PERTURB = {
 
 # --- replica provenance marker (shared helper, ADVICE r12) ----------------
 # One read/write/ensure path for every replica builder (bench.py's scale
-# tier, this script, rollup_ab.py). The marker records {base, r} so a
-# SCALE_DIR reused across runs built from a DIFFERENT base or R is
-# rebuilt instead of silently mislabeling provenance. Before r13 the two
-# scripts wrote a legacy "ok" marker that bench.py always treated as a
-# mismatch (spurious full rebuild) and themselves reused ANY marked dir
-# with no provenance check at all.
+# tier, this script, and rollup_ab.py, last held by commit 23abac7). The
+# marker records {base, r} so a SCALE_DIR reused across runs built from a
+# DIFFERENT base or R is rebuilt instead of silently mislabeling
+# provenance. Before r13 the two scripts wrote a legacy "ok" marker that
+# bench.py always treated as a mismatch (spurious full rebuild) and
+# themselves reused ANY marked dir with no provenance check at all.
 
 def read_replica_marker(dst: str) -> dict | None:
     """The {base, r} provenance of dst, or None (absent / legacy "ok" /

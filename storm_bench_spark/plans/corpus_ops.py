@@ -1019,6 +1019,36 @@ def _cms_bucket_col() -> F.Column:
     )
 
 
+def _cms_rows() -> F.Column:
+    """One row per counter row ``r`` in 0..CMS_DEPTH-1."""
+    return F.explode(F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1))).alias("r")
+
+
+def _cms_cells(tok: DataFrame) -> DataFrame:
+    """The depth×width counter table: ``cnt`` per (r, b) over a
+    ``term`` column."""
+    return (
+        tok.select("term", _cms_rows())
+        .select("r", _cms_bucket_col().alias("b"))
+        .groupBy("r", "b")
+        .agg(F.count("*").alias("cnt"))
+    )
+
+
+def _cms_estimate(cand: DataFrame, cells: DataFrame) -> DataFrame:
+    """Probe each candidate term against the broadcast counter table:
+    its estimate is the min over its depth cells, kept when it reaches
+    ``CMS_MIN_EST``."""
+    est = (
+        cand.select("term", _cms_rows())
+        .select("term", "r", _cms_bucket_col().alias("b"))
+        .join(F.broadcast(cells), ["r", "b"])
+        .groupBy("term")
+        .agg(F.min("cnt").cast("bigint").alias("est_cnt"))
+    )
+    return est.where(F.col("est_cnt") >= CMS_MIN_EST)
+
+
 _CMS_ORACLE = f"""
 WITH tok AS (SELECT unnest({_WORDS_SQL}) AS term FROM documents),
 cells AS (
@@ -1067,23 +1097,7 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = words.select(F.explode("w").alias("term")).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    rows = F.explode(F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1))).alias("r")
-    bucket = _cms_bucket_col()
-    cells = (
-        tok.select("term", rows)
-        .select("r", bucket.alias("b"))
-        .groupBy("r", "b")
-        .agg(F.count("*").alias("cnt"))
-    )
-    cand = tok.distinct()
-    est = (
-        cand.select("term", rows)
-        .select("term", "r", bucket.alias("b"))
-        .join(F.broadcast(cells), ["r", "b"])
-        .groupBy("term")
-        .agg(F.min("cnt").cast("bigint").alias("est_cnt"))
-    )
-    return est.where(F.col("est_cnt") >= CMS_MIN_EST)
+    return _cms_estimate(tok.distinct(), _cms_cells(tok))
 
 
 @register("streaming_heavy_hitters", oracle=_CMS_ORACLE)
@@ -1105,31 +1119,16 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from storm_bench_spark.streaming.streams import run_to_memory, stream_table
 
-    rows = F.explode(F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1))).alias("r")
-    bucket = _cms_bucket_col()
     docs = stream_table(spark, sf_dir, "documents")
     tok_stream = docs.select(F.explode(word_split("text")).alias("term"))
-    cells_stream = (
-        tok_stream.select("term", rows)
-        .select("r", bucket.alias("b"))
-        .groupBy("r", "b")
-        .agg(F.count("*").alias("cnt"))
-    )
-    cells = run_to_memory(cells_stream, output_mode="complete")
+    cells = run_to_memory(_cms_cells(tok_stream), output_mode="complete")
     cand = (
         _words(spark, sf_dir)
         .select(F.explode("w").alias("term"))
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    est = (
-        cand.select("term", rows)
-        .select("term", "r", bucket.alias("b"))
-        .join(F.broadcast(cells), ["r", "b"])
-        .groupBy("term")
-        .agg(F.min("cnt").cast("bigint").alias("est_cnt"))
-    )
-    return est.where(F.col("est_cnt") >= CMS_MIN_EST)
+    return _cms_estimate(cand, cells)
 
 
 # --- per-source quantized centroids + source-pair similarity -------------

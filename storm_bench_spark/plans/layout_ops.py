@@ -124,20 +124,9 @@ def streaming_bitmap_visitors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from storm_bench_spark.streaming.streams import run_to_memory, stream_table
 
     e = stream_table(spark, sf_dir, "events").select(
-        F.col("ts").cast("long").alias("sec"), "user_id"
+        F.expr("CAST(ts AS LONG) div 86400").alias("day"), "user_id"
     )
-    blocks = (
-        e.select(
-            F.expr("sec div 86400").alias("day"),
-            F.expr(f"user_id div {BITMAP_BLOCK_BITS}").alias("blk"),
-            F.expr(
-                f"shiftleft(1L, CAST(user_id % {BITMAP_BLOCK_BITS} AS INT))"
-            ).alias("one_bit"),
-        )
-        .groupBy("day", "blk")
-        .agg(F.bit_or("one_bit").alias("bm"))
-    )
-    snap = run_to_memory(blocks, output_mode="complete")
+    snap = run_to_memory(_bitmap_blocks(e, ["day"], "user_id"), output_mode="complete")
     return _bitmap_popcount(snap, ["day"])
 
 
@@ -236,19 +225,10 @@ FROM b GROUP BY event_type, hr
 """
 
 
-@register("tumbling_ohlc", oracle=_OHLC_ORACLE)
-def tumbling_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OHLC bars per (event_type, hour): the time-series downsample
-    every metrics store ships, in ONE hash aggregation. ``min_by``/
-    ``max_by`` on the packed order key pick open/close inside the same
-    partial-aggregate pass that computes high/low/count/volume — no
-    row_number window (which would shuffle-sort every row), no
-    first/last self-join (which would scan twice). Volume follows the
-    repo's exact-decimal-sum discipline, so the double is
-    order-independent. Ties are impossible by construction: ord is
-    unique per event.
-    """
-    es = D.events_sec(spark, sf_dir)
+def _ohlc_bars(es: DataFrame) -> DataFrame:
+    """One bar per (event_type, hr) over a frame with ``event_type``,
+    ``sec``, ``value`` and ``event_id``: open/close by the packed order
+    key, high/low/count, and the exact-decimal volume."""
     b = es.select(
         "event_type",
         F.expr("sec div 3600").alias("hr"),
@@ -263,6 +243,21 @@ def tumbling_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast(_DEC)).cast("double").alias("volume"),
     )
+
+
+@register("tumbling_ohlc", oracle=_OHLC_ORACLE)
+def tumbling_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """OHLC bars per (event_type, hour): the time-series downsample
+    every metrics store ships, in ONE hash aggregation. ``min_by``/
+    ``max_by`` on the packed order key pick open/close inside the same
+    partial-aggregate pass that computes high/low/count/volume — no
+    row_number window (which would shuffle-sort every row), no
+    first/last self-join (which would scan twice). Volume follows the
+    repo's exact-decimal-sum discipline, so the double is
+    order-independent. Ties are impossible by construction: ord is
+    unique per event.
+    """
+    return _ohlc_bars(D.events_sec(spark, sf_dir))
 
 
 @register("streaming_tumbling_ohlc", oracle=_OHLC_ORACLE)
@@ -286,21 +281,7 @@ def streaming_tumbling_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         "event_id",
     )
-    b = e.select(
-        "event_type",
-        F.expr("sec div 3600").alias("hr"),
-        "value",
-        F.expr(_OHLC_ORD).alias("ord"),
-    )
-    bars = b.groupBy("event_type", "hr").agg(
-        F.min_by("value", "ord").alias("open_v"),
-        F.max("value").alias("high_v"),
-        F.min("value").alias("low_v"),
-        F.max_by("value", "ord").alias("close_v"),
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast(_DEC)).cast("double").alias("volume"),
-    )
-    return run_to_memory(bars, output_mode="complete")
+    return run_to_memory(_ohlc_bars(e), output_mode="complete")
 
 
 # z-bucket = top 6 bits of the 32-bit z-value → 64 fixed, deterministic

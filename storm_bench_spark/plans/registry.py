@@ -80,18 +80,21 @@ def _ensure_loaded() -> None:
 # them;
 # (b) asof_click_purchase (round 15) and ann_recall_at_k, which shares
 # its fused IVF pass with ann_topk_ivf;
-# (c) all 25 rows whose executed plan has a Python evaluation node
-# (found by scanning every row's SQL executions at sf0.001), since
-# their workers now run through the engine's worker daemon: eight were
-# already in the window (semdedup, ann_topk_ivf, ann_topk_ivf_kmeans,
-# streaming_funnel and ann_recall_at_k above, then
-# stateful_running_count, streaming_kmv_sketch and
-# streaming_weighted_sample), and 17 are rotated in at the end;
+# (c) 14 of the 25 rows whose executed plan has a Python evaluation
+# node (their workers run through the engine's worker daemon):
+# semdedup, ann_topk_ivf, ann_topk_ivf_kmeans, streaming_funnel and
+# ann_recall_at_k from (a) and (b), then stateful_running_count,
+# streaming_kmv_sketch, streaming_weighted_sample and the six from
+# ann_rerank to rrf_hybrid_rank;
 # (d) user_sessions and streaming_user_sessions, whose shared oracle
-# now merges events exactly the session gap apart.
-# Rotated out to just below the boundary to make room: the 17 JVM-only
-# streaming rows (their plans have no Python node, so the daemon does
-# not reach them) and gap_fill_hourly, unchanged since round 15.
+# merges events exactly the session gap apart;
+# (e) the 11 sketch rows whose batch and streaming twins now share one
+# operator body: the three histogram rows, the OHLC, CMS and HLL
+# pairs, streaming_bitmap_visitors and audience_overlap_hll.
+# Rotated out to just below the boundary to make room: 11 of the
+# Python-evaluation rows (the daemon change that touched them was
+# gated when it landed), then the JVM-only streaming rows and
+# gap_fill_hourly.
 _GATE_PRIORITY: tuple[str, ...] = (
     "simhash",
     "simhash_pairs",
@@ -130,37 +133,43 @@ _GATE_PRIORITY: tuple[str, ...] = (
     "ann_topk",
     "ann_topk_quantized",
     "embedding_neardup",
+    "multimodal_features",
+    "rrf_hybrid_rank",
+    "histogram_quantiles",
+    "streaming_histogram_quantiles",
+    "histogram_quantiles_rollup",
+    "tumbling_ohlc",
+    "streaming_tumbling_ohlc",
+    "heavy_hitters_cms",
+    "streaming_heavy_hitters",
+    "hll_users_per_type",
+    "streaming_hll_visitors",
+    "streaming_bitmap_visitors",
+    "audience_overlap_hll",
+    # --- window boundary (first 50 above) ---
     "embedding_neardup_lsh",
     "embedding_neardup_lsh_scaled",
     "embedding_project",
     "multimodal_audio_chunks",
     "multimodal_audio_meta",
     "multimodal_bmp_meta",
-    "multimodal_features",
     "multimodal_frames",
     "multimodal_image_meta",
     "multimodal_ppm_meta",
     "multimodal_resize",
     "multimodal_wav_meta",
-    "rrf_hybrid_rank",
-    # --- window boundary (first 50 above) ---
     "gap_fill_hourly",
     "streaming_flight_dist",
     "streaming_audience_overlap",
-    "streaming_hll_visitors",
-    "streaming_bitmap_visitors",
     "streaming_cdc_apply",
     "streaming_dedup",
     "streaming_dedup_watermarked",
     "streaming_enriched_revenue",
     "streaming_hashtag_count",
-    "streaming_heavy_hitters",
-    "streaming_histogram_quantiles",
     "streaming_interval_join",
     "streaming_rolling_count",
     "streaming_rolling_sort",
     "streaming_sol",
-    "streaming_tumbling_ohlc",
     "trident_wordcount",
     "asof_click_purchase_tol",
     "rolling_latlong",
@@ -221,7 +230,6 @@ _GATE_PRIORITY: tuple[str, ...] = (
     "domain_mix_sample",
     "epoch_shuffle",
     "events_cube",
-    "heavy_hitters_cms",
     "lang_id",
     "ngram_jaccard",
     "quality_score",
@@ -233,7 +241,6 @@ _GATE_PRIORITY: tuple[str, ...] = (
     "distinct_users",
     "doc_fingerprint",
     "grep",
-    "histogram_quantiles",
     "kmv_distinct_users",
     "pageview_count",
     "rolling_sort",
@@ -255,24 +262,20 @@ _GATE_PRIORITY: tuple[str, ...] = (
     "bitmap_distinct_weekly_rollup",
     "bitmap_retention_daily",
     "expand_words",
-    "histogram_quantiles_rollup",
     "kmv_resemblance",
     "one_per_key",
     "orders_rollup",
     "pageview_extract",
-    "tumbling_ohlc",
     "user_running_value",
     "value_percentiles",
     "weighted_sample",
     "weighted_sample_per_source",
     "zorder_layout",
     "adsb_parse",
-    "audience_overlap_hll",
     "bloom_high_value_orders",
     "cohort_retention",
     "dsir_select",
     "embedding_quantize",
-    "hll_users_per_type",
 )
 
 

@@ -44,6 +44,17 @@ _HLL_ORACLE = hll_estimate_sql(
 )
 
 
+def _hll_estimate_with_all(regs: DataFrame) -> DataFrame:
+    """Estimate per event_type plus an ``__all__`` row whose registers
+    are the per-type registers MERGED (max per bucket), not a rescan."""
+    merged = (
+        regs.groupBy("_bucket")
+        .agg(F.max("_r").alias("_r"))
+        .select(F.lit("__all__").alias("event_type"), "_bucket", "_r")
+    )
+    return hll_estimate(regs.unionByName(merged), ["event_type"])
+
+
 @register("hll_users_per_type", oracle=_HLL_ORACLE)
 def hll_users_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate distinct users per event_type via HyperLogLog —
@@ -58,13 +69,7 @@ def hll_users_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/sketches.py docstring has the argument).
     """
     e = load_table(spark, sf_dir, "events")
-    regs = hll_registers(e, ["event_type"], "user_id")
-    merged = (
-        regs.groupBy("_bucket")
-        .agg(F.max("_r").alias("_r"))
-        .select(F.lit("__all__").alias("event_type"), "_bucket", "_r")
-    )
-    return hll_estimate(regs.unionByName(merged), ["event_type"])
+    return _hll_estimate_with_all(hll_registers(e, ["event_type"], "user_id"))
 
 
 @register("streaming_hll_visitors", oracle=_HLL_ORACLE)
@@ -87,12 +92,7 @@ def streaming_hll_visitors(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = stream_table(spark, sf_dir, "events")
     regs_stream = hll_registers(e, ["event_type"], "user_id")
     regs = run_to_memory(regs_stream, output_mode="complete")
-    merged = (
-        regs.groupBy("_bucket")
-        .agg(F.max("_r").alias("_r"))
-        .select(F.lit("__all__").alias("event_type"), "_bucket", "_r")
-    )
-    return hll_estimate(regs.unionByName(merged), ["event_type"])
+    return _hll_estimate_with_all(regs)
 
 
 @register(
@@ -493,6 +493,85 @@ N_HIST_BINS = 256
 _HIST_QS = (("p50", 0.5), ("p95", 0.95), ("p99", 0.99))
 
 
+def _hist_cells(binned: DataFrame, keys: list[str]) -> DataFrame:
+    """The histogram cell table: one ``cnt`` per (keys, bin, mn, mx)
+    over a frame that carries the global bounds ``mn``/``mx`` beside
+    ``value``. The bin is the clamped floor((v−mn)·B/(mx−mn)); equal
+    bounds put every row in bin 0. Global edges are what make cells
+    add under merge."""
+    B = N_HIST_BINS
+    bin_col = (
+        F.when(F.col("mx") == F.col("mn"), F.lit(0))
+        .otherwise(
+            F.least(
+                F.lit(B - 1),
+                F.floor(
+                    (F.col("value") - F.col("mn")) * F.lit(float(B))
+                    / (F.col("mx") - F.col("mn"))
+                ),
+            )
+        )
+        .cast("long")
+    )
+    return (
+        binned.select(*keys, bin_col.alias("bin"), "mn", "mx")
+        .groupBy(*keys, "bin", "mn", "mx")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
+def _with_all(per_type: DataFrame) -> DataFrame:
+    """Per-type cells plus the ``__all__`` sketch: the cell-wise SUM of
+    the per-type tables (global bin edges make addition the merge
+    operator — no rescan)."""
+    merged = per_type.groupBy("bin", "mn", "mx").agg(
+        F.sum("cnt").alias("cnt")
+    ).select(F.lit("__all__").alias("event_type"), "bin", "mn", "mx", "cnt")
+    return per_type.unionByName(merged)
+
+
+def _hist_quantiles(hist: DataFrame, key: str) -> DataFrame:
+    """Finalize a (key, bin, mn, mx, cnt) cell table to one row per
+    (key, q): the lowest bin whose cumulative count reaches q·n_rows,
+    reported as that bin's lower edge mn + (mx−mn)·bin/B with
+    ``err_bound`` (mx−mn)/B."""
+    from pyspark.sql.window import Window
+
+    B = N_HIST_BINS
+    cum = hist.select(
+        key, "bin", "mn", "mx",
+        F.sum("cnt").over(Window.partitionBy(key).orderBy("bin")).alias("c"),
+        F.sum("cnt").over(Window.partitionBy(key)).alias("n_rows"),
+    )
+    outs = []
+    for label, q in _HIST_QS:
+        sel = (
+            cum.where(F.col("c") >= F.lit(q) * F.col("n_rows"))
+            .groupBy(key, "mn", "mx")
+            .agg(F.min("bin").alias("bin"), F.min("n_rows").alias("n_rows"))
+        )
+        outs.append(
+            sel.select(
+                key,
+                F.lit(label).alias("q"),
+                F.round(
+                    F.col("mn")
+                    + (F.col("mx") - F.col("mn")) * F.col("bin").cast("double")
+                    / F.lit(float(B)),
+                    6,
+                ).alias("est"),
+                F.col("n_rows").cast("long").alias("n_rows"),
+                F.round((F.col("mx") - F.col("mn")) / F.lit(float(B)), 6).alias(
+                    "err_bound"
+                ),
+            )
+        )
+    out = outs[0]
+    for o in outs[1:]:
+        out = out.unionByName(o)
+    return out
+
+
 def _hist_oracle() -> str:
     B = N_HIST_BINS
     per_q = []
@@ -551,71 +630,12 @@ def histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the estimate mn + (mx−mn)·bin/B is the bin's lower edge — no
     interpolation, no float summation order anywhere.
     """
-    from pyspark.sql.window import Window
-
-    B = N_HIST_BINS
     ev = load_table(spark, sf_dir, "events").select("event_type", "value").where(
         F.col("value").isNotNull()
     )
     bounds = ev.agg(F.min("value").alias("mn"), F.max("value").alias("mx"))
-    b = ev.crossJoin(F.broadcast(bounds))
-    bin_col = (
-        F.when(F.col("mx") == F.col("mn"), F.lit(0))
-        .otherwise(
-            F.least(
-                F.lit(B - 1),
-                F.floor(
-                    (F.col("value") - F.col("mn")) * F.lit(float(B))
-                    / (F.col("mx") - F.col("mn"))
-                ),
-            )
-        )
-        .cast("long")
-    )
-    binned = b.select("event_type", bin_col.alias("bin"), "mn", "mx")
-    per_type = binned.groupBy("event_type", "bin", "mn", "mx").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    # the __all__ sketch: cell-wise SUM of the per-type tables (global
-    # bin edges make addition the merge operator)
-    merged = per_type.groupBy("bin", "mn", "mx").agg(
-        F.sum("cnt").alias("cnt")
-    ).select(F.lit("__all__").alias("event_type"), "bin", "mn", "mx", "cnt")
-    hist = per_type.unionByName(merged)
-    wcum = Window.partitionBy("event_type").orderBy("bin")
-    wall = Window.partitionBy("event_type")
-    cum = hist.select(
-        "event_type", "bin", "mn", "mx",
-        F.sum("cnt").over(wcum).alias("c"),
-        F.sum("cnt").over(wall).alias("n_rows"),
-    )
-    outs = []
-    for label, q in _HIST_QS:
-        sel = (
-            cum.where(F.col("c") >= F.lit(q) * F.col("n_rows"))
-            .groupBy("event_type", "mn", "mx")
-            .agg(F.min("bin").alias("bin"), F.min("n_rows").alias("n_rows"))
-        )
-        outs.append(
-            sel.select(
-                "event_type",
-                F.lit(label).alias("q"),
-                F.round(
-                    F.col("mn")
-                    + (F.col("mx") - F.col("mn")) * F.col("bin").cast("double")
-                    / F.lit(float(B)),
-                    6,
-                ).alias("est"),
-                F.col("n_rows").cast("long").alias("n_rows"),
-                F.round((F.col("mx") - F.col("mn")) / F.lit(float(B)), 6).alias(
-                    "err_bound"
-                ),
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+    per_type = _hist_cells(ev.crossJoin(F.broadcast(bounds)), ["event_type"])
+    return _hist_quantiles(_with_all(per_type), "event_type")
 
 
 @register("streaming_histogram_quantiles", oracle=_hist_oracle())
@@ -633,11 +653,8 @@ def streaming_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame
     the sketch's merge, so the final state equals the batch sketch and
     the batch oracle certifies the streaming path.
     """
-    from pyspark.sql.window import Window
-
     from storm_bench_spark.streaming.streams import run_to_memory, stream_table
 
-    B = N_HIST_BINS
     static_bounds = (
         load_table(spark, sf_dir, "events")
         .where(F.col("value").isNotNull())
@@ -646,62 +663,9 @@ def streaming_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame
     ev = stream_table(spark, sf_dir, "events").select("event_type", "value").where(
         F.col("value").isNotNull()
     )
-    b = ev.join(F.broadcast(static_bounds))
-    bin_col = (
-        F.when(F.col("mx") == F.col("mn"), F.lit(0))
-        .otherwise(
-            F.least(
-                F.lit(B - 1),
-                F.floor(
-                    (F.col("value") - F.col("mn")) * F.lit(float(B))
-                    / (F.col("mx") - F.col("mn"))
-                ),
-            )
-        )
-        .cast("long")
-    )
-    cells_stream = b.select("event_type", bin_col.alias("bin"), "mn", "mx").groupBy(
-        "event_type", "bin", "mn", "mx"
-    ).agg(F.count(F.lit(1)).alias("cnt"))
+    cells_stream = _hist_cells(ev.join(F.broadcast(static_bounds)), ["event_type"])
     per_type = run_to_memory(cells_stream, output_mode="complete")
-    merged = per_type.groupBy("bin", "mn", "mx").agg(
-        F.sum("cnt").alias("cnt")
-    ).select(F.lit("__all__").alias("event_type"), "bin", "mn", "mx", "cnt")
-    hist = per_type.unionByName(merged)
-    wcum = Window.partitionBy("event_type").orderBy("bin")
-    wall = Window.partitionBy("event_type")
-    cum = hist.select(
-        "event_type", "bin", "mn", "mx",
-        F.sum("cnt").over(wcum).alias("c"),
-        F.sum("cnt").over(wall).alias("n_rows"),
-    )
-    outs = []
-    for label, q in _HIST_QS:
-        sel = (
-            cum.where(F.col("c") >= F.lit(q) * F.col("n_rows"))
-            .groupBy("event_type", "mn", "mx")
-            .agg(F.min("bin").alias("bin"), F.min("n_rows").alias("n_rows"))
-        )
-        outs.append(
-            sel.select(
-                "event_type",
-                F.lit(label).alias("q"),
-                F.round(
-                    F.col("mn")
-                    + (F.col("mx") - F.col("mn")) * F.col("bin").cast("double")
-                    / F.lit(float(B)),
-                    6,
-                ).alias("est"),
-                F.col("n_rows").cast("long").alias("n_rows"),
-                F.round((F.col("mx") - F.col("mn")) / F.lit(float(B)), 6).alias(
-                    "err_bound"
-                ),
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+    return _hist_quantiles(_with_all(per_type), "event_type")
 
 
 def _hist_rollup_oracle() -> str:
@@ -758,9 +722,6 @@ def histogram_quantiles_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     a gate match certifies the daily→weekly merge is lossless, not
     merely self-consistent.
     """
-    from pyspark.sql.window import Window
-
-    B = N_HIST_BINS
     ev = (
         load_table(spark, sf_dir, "events")
         .where(F.col("value").isNotNull())
@@ -770,66 +731,15 @@ def histogram_quantiles_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     bounds = ev.agg(F.min("value").alias("mn"), F.max("value").alias("mx"))
-    b = ev.crossJoin(F.broadcast(bounds))
-    bin_col = (
-        F.when(F.col("mx") == F.col("mn"), F.lit(0))
-        .otherwise(
-            F.least(
-                F.lit(B - 1),
-                F.floor(
-                    (F.col("value") - F.col("mn")) * F.lit(float(B))
-                    / (F.col("mx") - F.col("mn"))
-                ),
-            )
-        )
-        .cast("long")
-    )
     # the per-day cell table — what a continuous aggregate would store
-    daily = (
-        b.select("day", bin_col.alias("bin"), "mn", "mx")
-        .groupBy("day", "bin", "mn", "mx")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    daily = _hist_cells(ev.crossJoin(F.broadcast(bounds)), ["day"])
     # the rollup: weekly sketch = cell-wise SUM of the daily sketches
     weekly = (
         daily.select(F.expr("day div 7").alias("week"), "bin", "mn", "mx", "cnt")
         .groupBy("week", "bin", "mn", "mx")
         .agg(F.sum("cnt").alias("cnt"))
     )
-    wcum = Window.partitionBy("week").orderBy("bin")
-    wall = Window.partitionBy("week")
-    cum = weekly.select(
-        "week", "bin", "mn", "mx",
-        F.sum("cnt").over(wcum).alias("c"),
-        F.sum("cnt").over(wall).alias("n_rows"),
-    )
-    outs = []
-    for label, q in _HIST_QS:
-        sel = (
-            cum.where(F.col("c") >= F.lit(q) * F.col("n_rows"))
-            .groupBy("week", "mn", "mx")
-            .agg(F.min("bin").alias("bin"), F.min("n_rows").alias("n_rows"))
-        )
-        outs.append(
-            sel.select(
-                "week",
-                F.lit(label).alias("q"),
-                F.round(
-                    F.col("mn")
-                    + (F.col("mx") - F.col("mn")) * F.col("bin").cast("double")
-                    / F.lit(float(B)),
-                    6,
-                ).alias("est"),
-                F.col("n_rows").cast("long").alias("n_rows"),
-                F.round((F.col("mx") - F.col("mn")) / F.lit(float(B)), 6).alias(
-                    "err_bound"
-                ),
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+    return _hist_quantiles(weekly, "week")
 
 
 # --- KMV set resemblance (the sketch's third claimed capability) ----------
@@ -1069,12 +979,7 @@ def audience_overlap_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines (can go slightly negative within sketch error — reported
     raw, not clamped, so the number is honestly the estimator's).
     """
-    from storm_bench_spark.operators.sketches import (
-        HLL_P,
-        _hll_consts,
-        hll_estimate_wide,
-        hll_registers_wide,
-    )
+    from storm_bench_spark.operators.sketches import hll_registers_wide
 
     ev = load_table(spark, sf_dir, "events")
     regs = hll_registers_wide(

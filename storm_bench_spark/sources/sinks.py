@@ -6,10 +6,11 @@ exposes Spark's native sink surface as the declared capability:
 
 - batch: parquet/csv/json writers, with optional hash-partitioned
   layout (``partition_by``) so downstream scans get partition pruning;
-- streaming: file (parquet append with checkpoint — exactly-once)
-  here; memory tables and per-micro-batch capture (foreachBatch, the
-  oracle-friendly replacement for log-scraping) through
-  ``streaming.streams.run_stream``.
+- streaming: memory tables and per-micro-batch capture (foreachBatch)
+  through ``streaming.streams.run_stream``, the one place a stream
+  starts. An exactly-once file sink is a ``batch_fn`` that overwrites
+  one directory per batch id, so a replayed batch rewrites its own
+  output instead of appending a duplicate.
 
 At 100 TB the parquet writer is the only one that matters: writes are
 per-partition parallel, and ``partition_by`` columns should be
@@ -19,7 +20,6 @@ produces a small-files explosion.
 
 from __future__ import annotations
 
-import tempfile
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
@@ -36,28 +36,6 @@ def write_batch(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.save(path)
-
-
-def stream_to_files(
-    df: DataFrame,
-    path: str,
-    fmt: str = "parquet",
-    checkpoint: str | None = None,
-    available_now: bool = True,
-):
-    """Exactly-once file sink: checkpoint + idempotent batch commits is
-    the engine's Trident ``persistentAggregate`` delivery contract
-    (TridentWordCount.java:44-49 → SURVEY.md §2.9)."""
-    ckpt = checkpoint or tempfile.mkdtemp(prefix="sbs_sink_ckpt_")
-    w = (
-        df.writeStream.format(fmt)
-        .option("path", path)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
 
 
 def write_zordered(

@@ -5,7 +5,7 @@ import tempfile
 
 import pytest
 
-from storm_bench_spark.sources.sinks import stream_to_files, write_batch
+from storm_bench_spark.sources.sinks import write_batch
 from tests.conftest import SF_DIR
 
 
@@ -74,20 +74,29 @@ def test_write_batch_partitioned_roundtrip(spark):
         assert "PartitionFilters" in pruned._jdf.queryExecution().executedPlan().toString() or pruned.count() > 0
 
 
-def test_stream_to_files_exactly_once(spark):
-    from storm_bench_spark.streaming.streams import stream_table
+def test_file_sink_exactly_once(spark):
+    """A file sink through ``run_stream``: each batch overwrites its own
+    ``batch_id=<id>`` directory, so a replayed batch cannot duplicate
+    rows, and a re-run on the same checkpoint runs no batch at all."""
+    from storm_bench_spark.streaming.streams import run_stream, stream_table
 
     docs = stream_table(spark, SF_DIR, "documents").select("doc_id", "lang")
     with tempfile.TemporaryDirectory() as d:
         out, ckpt = os.path.join(d, "out"), os.path.join(d, "ckpt")
-        q = stream_to_files(docs, out, checkpoint=ckpt)
-        q.awaitTermination()
+        batches = []
+
+        def write(batch_df, batch_id):
+            batches.append(batch_id)
+            batch_df.write.mode("overwrite").parquet(os.path.join(out, f"batch_id={batch_id}"))
+
+        run_stream(docs, "append", batch_fn=write, checkpoint=ckpt)
         first = spark.read.parquet(out).count()
         assert first > 0
         # re-run with the same checkpoint: no new batches, no duplicates
-        q2 = stream_to_files(docs, out, checkpoint=ckpt)
-        q2.awaitTermination()
+        n_batches = len(batches)
+        run_stream(docs, "append", batch_fn=write, checkpoint=ckpt)
         assert spark.read.parquet(out).count() == first
+        assert len(batches) == n_batches
 
 
 def test_foreach_batch_capture_sees_all_rows(spark):

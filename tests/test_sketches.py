@@ -358,6 +358,55 @@ def test_histogram_quantiles_accuracy_and_merge(spark):
         assert row.n_rows == len(xs)
 
 
+_CELLS_SCHEMA = "event_type string, bin long, mn double, mx double, cnt long"
+
+
+def test_hist_quantiles_picks_the_bin_where_the_count_lands_exactly(spark):
+    """The finalize answers the FIRST bin whose cumulative count reaches
+    q·n_rows, so a count landing exactly on q·n_rows picks that bin,
+    not the next one."""
+    from storm_bench_spark.plans.sketch_queries import _hist_quantiles
+
+    # n_rows = 100; cumulative counts 50, 95, 99, 100 hit p50/p95/p99 exactly
+    cells = spark.createDataFrame(
+        [("a", b, 0.0, 256.0, c) for b, c in ((0, 50), (10, 45), (20, 4), (30, 1))],
+        _CELLS_SCHEMA,
+    )
+    got = {r["q"]: r for r in _hist_quantiles(cells, "event_type").collect()}
+    assert {q: got[q]["est"] for q in got} == {"p50": 0.0, "p95": 10.0, "p99": 20.0}
+    assert all(r["n_rows"] == 100 and r["err_bound"] == 1.0 for r in got.values())
+
+
+def test_hist_cells_equal_bounds_give_bin_zero_and_zero_error(spark):
+    """mx == mn puts every row in bin 0 (no division by a zero width),
+    and the finalize reports that single value with err_bound 0."""
+    from storm_bench_spark.plans.sketch_queries import _hist_cells, _hist_quantiles
+
+    rows = spark.createDataFrame(
+        [("a", 5.0, 5.0, 5.0)] * 3, "event_type string, value double, mn double, mx double"
+    )
+    cells = _hist_cells(rows, ["event_type"])
+    assert [(r["bin"], r["cnt"]) for r in cells.collect()] == [(0, 3)]
+    out = _hist_quantiles(cells, "event_type").collect()
+    assert len(out) == 3
+    assert all(r["est"] == 5.0 and r["err_bound"] == 0.0 and r["n_rows"] == 3 for r in out)
+
+
+def test_hist_with_all_sums_the_per_type_cells(spark):
+    """The __all__ sketch is the cell-wise sum of the per-type tables."""
+    from storm_bench_spark.plans.sketch_queries import _with_all
+
+    per_type = spark.createDataFrame(
+        [("a", 0, 0.0, 1.0, 2), ("a", 3, 0.0, 1.0, 5), ("b", 3, 0.0, 1.0, 7), ("b", 9, 0.0, 1.0, 1)],
+        _CELLS_SCHEMA,
+    )
+    got = {(r["event_type"], r["bin"]): r["cnt"] for r in _with_all(per_type).collect()}
+    assert got == {
+        ("a", 0): 2, ("a", 3): 5, ("b", 3): 7, ("b", 9): 1,
+        ("__all__", 0): 2, ("__all__", 3): 12, ("__all__", 9): 1,
+    }
+
+
 def test_kmv_resemblance_discriminates(spark):
     """The fixture's per-type user sets coincide (every pair's Jaccard
     is 1.0), so the gated query can't show the estimator DISCRIMINATES.
