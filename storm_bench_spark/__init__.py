@@ -9,8 +9,6 @@ JVM-side (zero Python UDFs in the reference-derived surface).
 Layout
 ------
 - ``session``    SparkSession factory tuned for the engine
-- ``config``     YAML + CLI configuration (parity with the reference's
-                 ``conf/conf.yaml`` keys — see SURVEY.md §3.1)
 - ``schemas``    StructTypes for the five reference wire formats
 - ``functions``  column-expression library (text, geo, hashing, vectors)
 - ``sources``    readers + deterministic derived tables for testdata

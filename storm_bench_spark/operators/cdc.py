@@ -40,10 +40,12 @@ def apply_changes(
     ``'delete'``), ``payload_cols`` (the replacement values — ignored
     for deletes) and an ``order_key`` expression that totally orders
     changes per key (ties would make the winner undefined — pass a
-    unique key; prefer ``F.struct(version, change_id)``, which orders
-    lexicographically at any id range, over integer packing like
-    ``version*1e6 + change_id``, which silently inverts once the minor
-    key outgrows the multiplier).
+    unique key). Prefer ``windows.packed_order(version, change_id)``:
+    it orders lexicographically at any non-negative id range and is
+    scalar, which keeps ``latest_by`` on the HashAggregate path. A
+    ``F.struct`` key gives the same rows but forces SortAggregate, and
+    integer packing like ``version*1e6 + change_id`` silently inverts
+    once the minor key outgrows the multiplier.
 
     Output schema = keys + payload_cols. Base rows must share it.
     """
@@ -77,8 +79,9 @@ def scd2_intervals(
     ``max_by`` reduction), SCD2 needs every change's successor, which
     is irreducibly a per-key ordered pass: ONE window shuffle on the
     key, no joins, no full-history replication. ``(sec_col, tie_col)``
-    must totally order changes within a key (same struct-not-packed
-    discipline as ``apply_changes``' order_key) and must be NON-NULL:
+    must totally order changes within a key (the window sorts by the
+    two columns lexicographically, so no packed key is needed) and
+    must be NON-NULL:
     Spark windows sort NULLS FIRST where DuckDB's default is NULLS
     LAST, so a NULL change time would produce engine-dependent
     interval chains (the same cross-engine hazard ``asof_join``

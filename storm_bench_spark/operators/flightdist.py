@@ -158,6 +158,19 @@ def _unit_vector_steps(df: DataFrame) -> DataFrame:
     return df  # pz_i is x{i} (sin(lat'))
 
 
+def latest_positions(positions: DataFrame) -> DataFrame:
+    """The flightMap state: newest report per aircraft
+    (RollingFlightDist.java:213-219). A streaming caller keeps it in
+    the state store and probes the snapshot with
+    :func:`flight_dist_from_latest`."""
+    return latest_by(
+        positions,
+        key_cols=["icao"],
+        order_key=FLIGHT_ORDER_KEY(),
+        payload_cols=["postime", "lat", "lng", "spd", "trak"],
+    )
+
+
 def flight_dist_pairs(
     positions: DataFrame,
     dist_threshold_km: float,
@@ -174,12 +187,7 @@ def flight_dist_pairs(
     """
     from pyspark.storagelevel import StorageLevel
 
-    latest = latest_by(
-        positions,
-        key_cols=["icao"],
-        order_key=FLIGHT_ORDER_KEY(),
-        payload_cols=["postime", "lat", "lng", "spd", "trak"],
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    latest = latest_positions(positions).persist(StorageLevel.MEMORY_AND_DISK)
     # persisted: the snapshot (one row per aircraft — the smallest
     # cacheable unit in the family) is consumed by BOTH pair sides,
     # and the bucketed path's _grid_spec stats action besides; without
@@ -201,8 +209,8 @@ def flight_dist_from_latest(
     """Pair math over an already-reduced latest-position snapshot —
     the probe step DistFilterBolt runs against its flightMap state
     (RollingFlightDist.java:220-260). Streaming callers maintain the
-    snapshot with a streaming ``latest_by`` (state store) and run this
-    per trigger; batch callers use ``flight_dist_pairs``."""
+    snapshot with a streaming :func:`latest_positions` (state store) and
+    run this per trigger; batch callers use ``flight_dist_pairs``."""
     # Spread the probe side across the cluster: the aggregated state is
     # tiny (A rows) and would otherwise land in one AQE-coalesced
     # partition, serializing the A²·steps arithmetic onto one core.

@@ -212,6 +212,12 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.min("sec").alias("ps"))
     )
+    return funnel_counts(v, c, p)
+
+
+def funnel_counts(v: DataFrame, c: DataFrame, p: DataFrame) -> DataFrame:
+    """One (stage, users) row per funnel stage, from the per-user rows
+    that reached it; shared with ``streaming_funnel``."""
 
     def _count(df: DataFrame, stage: str) -> DataFrame:
         return df.agg(

@@ -75,6 +75,13 @@ def _bitmap_blocks(df: DataFrame, group_cols: list[str], id_col: str) -> DataFra
     )
 
 
+def _daily_blocks(es: DataFrame) -> DataFrame:
+    """Per-day bitmap partials of the users in a frame with ``sec`` and
+    ``user_id``."""
+    days = es.select(F.expr("sec div 86400").alias("day"), "user_id")
+    return _bitmap_blocks(days, ["day"], "user_id")
+
+
 def _bitmap_popcount(blocks: DataFrame, group_cols: list[str]) -> DataFrame:
     """Finalize bitmap partials to exact distinct counts per group."""
     return blocks.groupBy(*group_cols).agg(
@@ -102,10 +109,7 @@ def bitmap_distinct_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     (HLL, 2% error). The oracle is DuckDB's own count(DISTINCT) — a
     semantic check on the bitmap algebra, not a replay of it.
     """
-    es = D.events_sec(spark, sf_dir).select(
-        F.expr("sec div 86400").alias("day"), "user_id"
-    )
-    return _bitmap_popcount(_bitmap_blocks(es, ["day"], "user_id"), ["day"])
+    return _bitmap_popcount(_daily_blocks(D.events_sec(spark, sf_dir)), ["day"])
 
 
 @register("streaming_bitmap_visitors", oracle=_BITMAP_DAILY_ORACLE)
@@ -123,10 +127,8 @@ def streaming_bitmap_visitors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from storm_bench_spark.streaming.streams import run_to_memory, stream_table
 
-    e = stream_table(spark, sf_dir, "events").select(
-        F.expr("CAST(ts AS LONG) div 86400").alias("day"), "user_id"
-    )
-    snap = run_to_memory(_bitmap_blocks(e, ["day"], "user_id"), output_mode="complete")
+    blocks = _daily_blocks(D.events_sec(spark, sf_dir, stream_table))
+    snap = run_to_memory(blocks, output_mode="complete")
     return _bitmap_popcount(snap, ["day"])
 
 
@@ -151,10 +153,7 @@ def bitmap_distinct_weekly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame
     input, not row-sized — then popcount. The oracle is the from-raw
     count(DISTINCT) per week, certifying the rollup is lossless.
     """
-    es = D.events_sec(spark, sf_dir).select(
-        F.expr("sec div 86400").alias("day"), "user_id"
-    )
-    daily = _bitmap_blocks(es, ["day"], "user_id")
+    daily = _daily_blocks(D.events_sec(spark, sf_dir))
     weekly = (
         daily.select(F.expr("day div 7").alias("week"), "blk", "bm")
         .groupBy("week", "blk")
@@ -185,10 +184,7 @@ def bitmap_retention_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlapping blocks but no common users popcount to 0 and are
     filtered, matching the oracle's inner join exactly.
     """
-    es = D.events_sec(spark, sf_dir).select(
-        F.expr("sec div 86400").alias("day"), "user_id"
-    )
-    blocks = _bitmap_blocks(es, ["day"], "user_id")
+    blocks = _daily_blocks(D.events_sec(spark, sf_dir))
     nxt = blocks.select(
         (F.col("day") - 1).alias("day"), "blk", F.col("bm").alias("bm_next")
     )
@@ -275,13 +271,8 @@ def streaming_tumbling_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from storm_bench_spark.streaming.streams import run_to_memory, stream_table
 
-    e = stream_table(spark, sf_dir, "events").select(
-        "event_type",
-        F.col("ts").cast("long").alias("sec"),
-        "value",
-        "event_id",
-    )
-    return run_to_memory(_ohlc_bars(e), output_mode="complete")
+    bars = _ohlc_bars(D.events_sec(spark, sf_dir, stream_table))
+    return run_to_memory(bars, output_mode="complete")
 
 
 # z-bucket = top 6 bits of the 32-bit z-value → 64 fixed, deterministic

@@ -30,35 +30,3 @@ def sql_zone(lat: str, lng: str) -> str:
         f"WHEN NOT ({lat} >= -80 AND {lat} < 84 AND {lng} >= -180 AND {lng} < 180) THEN 'undefined' "
         f"ELSE concat({band}, {letter}) END"
     )
-
-
-def sql_dead_reckon_lat(lat: str, brg: str, dist_km: str) -> str:
-    rel = f"({dist_km}) / {R}"
-    return (
-        f"degrees(asin(sin(radians({lat})) * cos({rel}) "
-        f"+ cos(radians({lat})) * sin({rel}) * cos(radians({brg}))))"
-    )
-
-
-def sql_dead_reckon_lng(lat: str, lng: str, brg: str, dist_km: str) -> str:
-    rel = f"({dist_km}) / {R}"
-    lat2 = (
-        f"asin(sin(radians({lat})) * cos({rel}) "
-        f"+ cos(radians({lat})) * sin({rel}) * cos(radians({brg})))"
-    )
-    return (
-        f"degrees(radians({lng}) + atan2("
-        f"sin(radians({brg})) * sin({rel}) * cos(radians({lat})), "
-        f"cos({rel}) - sin(radians({lat})) * sin({lat2})))"
-    )
-
-
-def sql_haversine(lat1: str, lng1: str, lat2: str, lng2: str) -> str:
-    dlat = f"radians(({lat2}) - ({lat1}))"
-    dlng = f"radians(({lng2}) - ({lng1}))"
-    a = (
-        f"sin(({dlat}) / 2) * sin(({dlat}) / 2) "
-        f"+ cos(radians({lat1})) * cos(radians({lat2})) "
-        f"* sin(({dlng}) / 2) * sin(({dlng}) / 2)"
-    )
-    return f"{R} * (2 * atan2(sqrt({a}), sqrt(1 - ({a}))))"

@@ -75,50 +75,36 @@ def _ensure_loaded() -> None:
 # unlisted query can never displace promised window rows.
 #
 # CURRENT WINDOW (exactly 50):
-# (a) 26 of the 27 round-14-touched dedup/CC/corpus/similarity/flight/
-# span rows (VERDICT r14 "What's wrong" #1), streaming_funnel among
-# them;
+# (a) training_corpus_build, the last round-14 dedup/corpus row kept in,
+# and rolling_flight_dist(_bucketed);
 # (b) asof_click_purchase (round 15) and ann_recall_at_k, which shares
 # its fused IVF pass with ann_topk_ivf;
 # (c) 14 of the 25 rows whose executed plan has a Python evaluation
 # node (their workers run through the engine's worker daemon):
 # semdedup, ann_topk_ivf, ann_topk_ivf_kmeans, streaming_funnel and
-# ann_recall_at_k from (a) and (b), then stateful_running_count,
-# streaming_kmv_sketch, streaming_weighted_sample and the six from
-# ann_rerank to rrf_hybrid_rank;
+# ann_recall_at_k, then stateful_running_count, streaming_kmv_sketch,
+# streaming_weighted_sample and the six from ann_rerank to
+# rrf_hybrid_rank;
 # (d) user_sessions and streaming_user_sessions, whose shared oracle
 # merges events exactly the session gap apart;
-# (e) the 11 sketch rows whose batch and streaming twins now share one
+# (e) the 11 sketch rows whose batch and streaming twins share one
 # operator body: the three histogram rows, the OHLC, CMS and HLL
-# pairs, streaming_bitmap_visitors and audience_overlap_hll.
-# Rotated out to just below the boundary to make room: 11 of the
-# Python-evaluation rows (the daemon change that touched them was
-# gated when it landed), then the JVM-only streaming rows and
-# gap_fill_hourly.
+# pairs, streaming_bitmap_visitors and audience_overlap_hll;
+# (f) the rows whose streaming twin now runs its batch builder over
+# stream_table, or whose builder now shares a helper with one: the
+# word/rolling/hashtag counts, flight dist, rolling sort, SOL, dedup,
+# interval-join and CDC streaming rows with their batch twins,
+# funnel_conversion and the three bitmap rows.
+# Rotated out to just below the boundary to make room: 18 of the
+# round-14 dedup/corpus/span rows (gated in round 14 and untouched
+# since), then the Python-evaluation rows the daemon change touched
+# (gated when it landed) and gap_fill_hourly.
 _GATE_PRIORITY: tuple[str, ...] = (
-    "simhash",
-    "simhash_pairs",
-    "minhash_lsh",
-    "lsh_recall_pairs",
-    "source_overlap",
-    "decontaminate_minhash",
-    "incremental_dedup",
-    "corpus_curate",
-    "dedup_keep_best",
-    "neardup_clusters",
-    "pagerank_neardup",
     "training_corpus_build",
-    "textrank_keywords",
-    "pmi_bigrams",
-    "bigram_lm_score",
-    "source_similarity_q8",
     "funnel_conversion",
     "semdedup",
     "ann_topk_ivf",
     "ann_topk_ivf_kmeans",
-    "dup_ngram_spans",
-    "exact_dup_spans",
-    "chunk_dedup",
     "rolling_flight_dist",
     "rolling_flight_dist_bucketed",
     "streaming_funnel",
@@ -146,7 +132,43 @@ _GATE_PRIORITY: tuple[str, ...] = (
     "streaming_hll_visitors",
     "streaming_bitmap_visitors",
     "audience_overlap_hll",
+    "wordcount",
+    "trident_wordcount",
+    "rolling_count",
+    "streaming_rolling_count",
+    "rolling_hashtag_count",
+    "streaming_hashtag_count",
+    "streaming_flight_dist",
+    "rolling_sort",
+    "streaming_rolling_sort",
+    "sol",
+    "streaming_sol",
+    "streaming_interval_join",
+    "streaming_dedup",
+    "streaming_dedup_watermarked",
+    "streaming_cdc_apply",
+    "bitmap_distinct_daily",
+    "bitmap_distinct_weekly_rollup",
+    "bitmap_retention_daily",
     # --- window boundary (first 50 above) ---
+    "simhash",
+    "simhash_pairs",
+    "minhash_lsh",
+    "lsh_recall_pairs",
+    "source_overlap",
+    "decontaminate_minhash",
+    "incremental_dedup",
+    "corpus_curate",
+    "dedup_keep_best",
+    "neardup_clusters",
+    "pagerank_neardup",
+    "textrank_keywords",
+    "pmi_bigrams",
+    "bigram_lm_score",
+    "source_similarity_q8",
+    "dup_ngram_spans",
+    "exact_dup_spans",
+    "chunk_dedup",
     "embedding_neardup_lsh",
     "embedding_neardup_lsh_scaled",
     "embedding_project",
@@ -159,18 +181,8 @@ _GATE_PRIORITY: tuple[str, ...] = (
     "multimodal_resize",
     "multimodal_wav_meta",
     "gap_fill_hourly",
-    "streaming_flight_dist",
     "streaming_audience_overlap",
-    "streaming_cdc_apply",
-    "streaming_dedup",
-    "streaming_dedup_watermarked",
     "streaming_enriched_revenue",
-    "streaming_hashtag_count",
-    "streaming_interval_join",
-    "streaming_rolling_count",
-    "streaming_rolling_sort",
-    "streaming_sol",
-    "trident_wordcount",
     "asof_click_purchase_tol",
     "rolling_latlong",
     "fuzzy_name_pairs_d2",
@@ -190,9 +202,7 @@ _GATE_PRIORITY: tuple[str, ...] = (
     "tfidf_top_terms",
     "token_budget_select",
     "vocab_oov_rate",
-    "rolling_hashtag_count",
     "rolling_geo_count",
-    "rolling_count",
     "unique_visitor_approx",
     "interval_click_error",
     "print_passthrough",
@@ -243,8 +253,6 @@ _GATE_PRIORITY: tuple[str, ...] = (
     "grep",
     "kmv_distinct_users",
     "pageview_count",
-    "rolling_sort",
-    "sol",
     "token_count",
     "top_terms",
     "tpch_q1",
@@ -257,10 +265,6 @@ _GATE_PRIORITY: tuple[str, ...] = (
     "tpch_q5",
     "tpch_q6",
     "unique_visitor",
-    "wordcount",
-    "bitmap_distinct_daily",
-    "bitmap_distinct_weekly_rollup",
-    "bitmap_retention_daily",
     "expand_words",
     "kmv_resemblance",
     "one_per_key",

@@ -241,9 +241,9 @@ FROM sess GROUP BY user_id, sid
 
 def sessions_from_events(es: DataFrame) -> DataFrame:
     """Gap-sessionization spec over any (user_id, sec) frame — batch
-    or streaming — so the two twins share one aggregation body (the
-    ``*_from_events`` builder pattern of sources/derived.py; a drifted
-    copy of a window spec is exactly how stream/oracle parity breaks)."""
+    or streaming — so the two twins share one aggregation body (a
+    drifted copy of a window spec is exactly how stream/oracle parity
+    breaks)."""
     sw = F.session_window(
         F.timestamp_seconds(F.col("sec")), f"{SESSION_GAP_SEC} seconds"
     )

@@ -26,6 +26,7 @@ from storm_bench_spark.operators.sketches import (
 )
 from storm_bench_spark.operators.skew import salted_join
 from storm_bench_spark.plans.registry import register
+from storm_bench_spark.sources import derived as D
 from storm_bench_spark.sources.tables import load_table
 
 # Matches tpch.py's determinism discipline: exact decimal sum surfaced
@@ -723,12 +724,9 @@ def histogram_quantiles_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     merely self-consistent.
     """
     ev = (
-        load_table(spark, sf_dir, "events")
+        D.events_sec(spark, sf_dir)
         .where(F.col("value").isNotNull())
-        .select(
-            F.expr("CAST(ts AS LONG) div 86400").alias("day"),
-            "value",
-        )
+        .select(F.expr("sec div 86400").alias("day"), "value")
     )
     bounds = ev.agg(F.min("value").alias("mn"), F.max("value").alias("mx"))
     # the per-day cell table — what a continuous aggregate would store

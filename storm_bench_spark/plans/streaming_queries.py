@@ -1,22 +1,30 @@
 """Registered queries that execute through Structured Streaming.
 
-These run the SAME logical plans as their batch twins but through
-``readStream`` + availableNow + checkpoint, so the driver's oracle
-gate also certifies the streaming path (micro-batch epochs, state
+A streaming twin is its batch twin's code run incrementally: it
+derives the same wire format with the same ``sources.derived``
+function, reading ``stream_table`` where the batch row reads
+``load_table``; passes it through the batch twin's operator body (the
+``plans.topologies`` helpers); and runs the result with
+``run_to_memory`` or ``run_stream``. The driver's oracle gate
+therefore also certifies the streaming path (micro-batch epochs, state
 store, exactly-once sink semantics — the Trident topology's contract,
-TridentWordCount.java:36-52).
+TridentWordCount.java:36-52). Where a twin's operator has to differ —
+a streaming plan cannot hold the batch plan's shape — one comment at
+the call says why.
 """
 
 from __future__ import annotations
 
+from operator import itemgetter
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from storm_bench_spark.functions.text import WS_RUN_PATTERN, word_split
+from storm_bench_spark.operators.flightdist import flight_dist_from_latest, latest_positions
 from storm_bench_spark.operators.windows import sliding_agg
 from storm_bench_spark.plans import topologies as T
 from storm_bench_spark.plans.registry import register
-from storm_bench_spark.sources.derived import DOC_EPOCH, DOC_TS_STEP_SEC
+from storm_bench_spark.sources import derived as D
 from storm_bench_spark.streaming.stateful import running_count
 from storm_bench_spark.streaming.streams import (
     run_stream,
@@ -27,15 +35,7 @@ from storm_bench_spark.streaming.streams import (
 
 # --- 2. TridentWordCount (TridentWordCount.java:36-52) -------------------
 
-@register(
-    "trident_wordcount",
-    oracle=f"""
-SELECT word, count(*) AS cnt
-FROM (SELECT unnest(string_split_regex(text, '{WS_RUN_PATTERN}')) AS word FROM documents)
-WHERE word <> ''
-GROUP BY word
-""",
-)
+@register("trident_wordcount", oracle=T.WORDCOUNT_ORACLE)
 def trident_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Micro-batched, checkpointed, exactly-once word count.
 
@@ -44,9 +44,7 @@ def trident_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     state-store commits per epoch. Complete-mode memory sink holds the
     final state the oracle checks.
     """
-    docs = stream_table(spark, sf_dir, "documents")
-    words = docs.select(F.explode(word_split("text")).alias("word"))
-    counts = words.groupBy("word").agg(F.count("*").alias("cnt"))
+    counts = T._word_counts(stream_table(spark, sf_dir, "documents"))
     return run_to_memory(counts, output_mode="complete")
 
 
@@ -63,11 +61,9 @@ def trident_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_rolling_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rolling_count executed through the streaming engine (event-time
     window state + availableNow), complete-mode snapshot."""
-    docs = stream_table(spark, sf_dir, "documents")
-    docs = docs.withColumn(
-        "sec", (F.lit(DOC_EPOCH) + F.col("doc_id") * DOC_TS_STEP_SEC).cast("bigint")
-    )
-    words = docs.select("sec", F.explode(word_split("text")).alias("word"))
+    words = T._doc_words(D.documents_ts(spark, sf_dir, stream_table))
+    # sliding_agg, not the batch's sliding_agg_twophase: its two chained
+    # aggregations are not a valid complete-mode streaming plan
     win = sliding_agg(words, 60, 10, ["word"], [F.count("*").alias("cnt")])
     return run_to_memory(win, output_mode="complete")
 
@@ -93,36 +89,9 @@ def streaming_flight_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     state); ``tests/test_streaming.py`` additionally asserts equality
     with the batch topology's result engine-side.
     """
-    from storm_bench_spark.operators.flightdist import flight_dist_from_latest
-    from storm_bench_spark.operators.windows import latest_by
-    from storm_bench_spark.plans.topologies import (
-        FLIGHT_CHUNK,
-        FLIGHT_DIST_THRESHOLD_KM,
-        FLIGHT_STEP_SEC,
-        FLIGHT_STEPS,
-    )
-    from storm_bench_spark.sources.derived import adsb_flights_from_events
-
-    e = stream_table(spark, sf_dir, "events").withColumn(
-        "sec", F.col("ts").cast("long")
-    )
-    fl = adsb_flights_from_events(e)
-    from storm_bench_spark.operators.flightdist import FLIGHT_ORDER_KEY
-
-    latest = latest_by(
-        fl, ["icao"], FLIGHT_ORDER_KEY(), ["postime", "lat", "lng", "spd", "trak"]
-    )
-    snapshot = run_to_memory(latest, output_mode="complete")
-    hits = flight_dist_from_latest(
-        snapshot,
-        dist_threshold_km=FLIGHT_DIST_THRESHOLD_KM,
-        speculative_comp_num=FLIGHT_STEPS,
-        speculative_comp_timestep_sec=FLIGHT_STEP_SEC,
-    )
-    ranked = hits.select(
-        F.round(F.col("dist_km"), 6).alias("dist_km"), "step", "icao1", "icao2"
-    )
-    return ranked.orderBy("dist_km", "icao1", "icao2", "step").limit(FLIGHT_CHUNK)
+    fl = D.adsb_flights(spark, sf_dir, stream_table)
+    snapshot = run_to_memory(latest_positions(fl), output_mode="complete")
+    return T._flight_top_k(flight_dist_from_latest(snapshot, **T.FLIGHT_PROBE))
 
 
 # --- streaming RollingSort (per-trigger sort via foreachBatch) -----------
@@ -139,30 +108,25 @@ def streaming_rolling_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffered, emit the top rows (SURVEY.md §4.3.3) — as a foreachBatch
     sink: global sorts are not allowed inside a streaming plan, so each
     micro-batch is sorted as a batch DataFrame, exactly the per-tick
-    ring-buffer sort. Returns the last trigger's top-k; parity with the
-    batch topology is asserted in tests."""
-    from storm_bench_spark.sources.derived import messages_from_events
-
-    e = stream_table(spark, sf_dir, "events").withColumn(
-        "sec", F.col("ts").cast("long")
-    )
-    m = messages_from_events(e).select("event_id", "message")
+    ring-buffer sort. Returns the merged top-k; parity with the batch
+    topology is asserted in tests."""
+    m = D.messages(spark, sf_dir, stream_table).select("event_id", "message")
 
     per_trigger: list[list] = []
 
     def sort_batch(batch_df, batch_id: int) -> None:
-        top = batch_df.orderBy("message", "event_id").limit(100).collect()
-        per_trigger.append(top)
+        per_trigger.append(T._sorted_top(batch_df).collect())
 
     run_stream(m, "append", batch_fn=sort_batch)
     # merge across triggers: availableNow is one batch for the
     # single-file fixture, but with maxFilesPerTrigger (or a multi-file
-    # table) the global top-100 spans batches — re-sort the union of
-    # the per-trigger tops rather than trusting the last batch alone
+    # table) the global top-k spans batches — re-sort the union of the
+    # per-trigger tops by the same order rather than trusting the last
+    # batch alone
     merged = sorted(
         (r for rows in per_trigger for r in rows),
-        key=lambda r: (r["message"], r["event_id"]),
-    )[:100]
+        key=itemgetter(*T.ROLLING_SORT_ORDER),
+    )[: T.ROLLING_SORT_TOP]
     return spark.createDataFrame(merged, schema="event_id long, message string")
 
 
@@ -176,18 +140,9 @@ def streaming_rolling_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_sol(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SOL's identity-bolt chain with an exchange between levels,
     executed per micro-batch (repartition is legal inside a streaming
-    plan; each trigger pays the same two shuffles the batch query
-    does)."""
-    from storm_bench_spark.sources.derived import messages_from_events
-
-    e = stream_table(spark, sf_dir, "events").withColumn(
-        "sec", F.col("ts").cast("long")
-    )
-    df = messages_from_events(e).select("message")
-    n = spark.sparkContext.defaultParallelism
-    for _ in range(2):
-        df = df.repartition(n)
-    return run_to_memory(df, output_mode="append")
+    plan; each trigger pays the same shuffles the batch query does)."""
+    chain = T._sol_chain(D.messages(spark, sf_dir, stream_table))
+    return run_to_memory(chain, output_mode="append")
 
 
 # --- stream-stream interval join (watermarked two-store join) ------------
@@ -212,18 +167,21 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, which the oracle checks."""
     from storm_bench_spark.plans.relational import INTERVAL_DELTA_SEC
 
+    # Not the batch twin's interval_join: its time-bucket equi-join
+    # gives a stream-stream join no time bound to evict state by, so
+    # each side is watermarked and the range is the join condition.
     def side(event_type: str, prefix: str) -> DataFrame:
-        e = stream_table(spark, sf_dir, "events").where(
+        e = D.events_sec(spark, sf_dir, stream_table).where(
             F.col("event_type") == event_type
         )
-        # floor event time to whole seconds BEFORE the join: the batch
-        # twin and the oracle compare |floor(a) - floor(b)| <= delta,
-        # and joining on raw sub-second ts would disagree for pairs
-        # whose floored gap is exactly delta (data-dependent red cell)
+        # join on whole seconds (``sec``), not raw sub-second ts: the
+        # batch twin and the oracle compare |floor(a) - floor(b)| <=
+        # delta, and raw ts would disagree for pairs whose floored gap
+        # is exactly delta (data-dependent red cell)
         return e.select(
             F.col("event_id").alias(f"{prefix}_id"),
             F.col("user_id").alias(f"{prefix}_user"),
-            F.timestamp_seconds(F.col("ts").cast("long")).alias(f"{prefix}_ts"),
+            F.timestamp_seconds(F.col("sec")).alias(f"{prefix}_ts"),
         ).withWatermark(f"{prefix}_ts", "1 hour")
 
     a = side("click", "a")
@@ -270,40 +228,39 @@ def stateful_running_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- streaming dedup (stateful dropDuplicates through the engine) --------
 
-@register(
-    "streaming_dedup",
-    # duplicate-injected stream deduped on the key == plain DISTINCT of
-    # the source (event_id is the events PK; both copies are identical
-    # rows, so "which copy wins" is unobservable)
-    oracle="""
+# duplicate-injected stream deduped on the key == plain DISTINCT of the
+# source (event_id is the events PK; both copies are identical rows, so
+# "which copy wins" is unobservable)
+_DEDUP_ORACLE = """
 SELECT DISTINCT event_id, event_type, user_id FROM events
-""",
-)
+"""
+
+
+def _delivered_twice(spark: SparkSession, sf_dir: str, cols: list[str]) -> DataFrame:
+    """The events stream unioned with a second read of itself: every row
+    arrives twice, the at-least-once-delivery shape a Kafka replay
+    produces."""
+    a = stream_table(spark, sf_dir, "events").select(*cols)
+    b = stream_table(spark, sf_dir, "events").select(*cols)
+    return a.unionByName(b)
+
+
+@register("streaming_dedup", oracle=_DEDUP_ORACLE)
 def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stateful streaming deduplication: the events stream is unioned
-    with a second read of itself (every row arrives twice — the
-    at-least-once-delivery shape a Kafka replay produces), then
-    ``dropDuplicates`` on the key holds one state row per event_id and
-    emits each key exactly once. At 100 TB the state is one compact row
-    per distinct key in the state store, partitioned by key hash; with
-    event-time bounds, ``dropDuplicatesWithinWatermark`` caps it — the
-    unbounded variant here matches the oracle's global DISTINCT."""
-    a = stream_table(spark, sf_dir, "events").select(
-        "event_id", "event_type", "user_id"
-    )
-    b = stream_table(spark, sf_dir, "events").select(
-        "event_id", "event_type", "user_id"
-    )
-    deduped = a.unionByName(b).dropDuplicates(["event_id"])
+    """Stateful streaming deduplication of a twice-delivered events
+    stream: ``dropDuplicates`` on the key holds one state row per
+    event_id and emits each key exactly once. At 100 TB the state is
+    one compact row per distinct key in the state store, partitioned by
+    key hash; with event-time bounds, ``dropDuplicatesWithinWatermark``
+    caps it — the unbounded variant here matches the oracle's global
+    DISTINCT."""
+    deduped = _delivered_twice(
+        spark, sf_dir, ["event_id", "event_type", "user_id"]
+    ).dropDuplicates(["event_id"])
     return run_to_memory(deduped, output_mode="append")
 
 
-@register(
-    "streaming_dedup_watermarked",
-    oracle="""
-SELECT DISTINCT event_id, event_type, user_id FROM events
-""",
-)
+@register("streaming_dedup_watermarked", oracle=_DEDUP_ORACLE)
 def streaming_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-state twin of ``streaming_dedup``:
     ``dropDuplicatesWithinWatermark`` holds a key only until the
@@ -313,11 +270,8 @@ def streaming_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct keys forever). The duplicate-injected copies arrive within
     the same availableNow epoch — well inside any watermark — so the
     final sink equals the global DISTINCT and the same oracle applies."""
-    cols = ["event_id", "event_type", "user_id", "ts"]
-    a = stream_table(spark, sf_dir, "events").select(*cols)
-    b = stream_table(spark, sf_dir, "events").select(*cols)
     deduped = (
-        a.unionByName(b)
+        _delivered_twice(spark, sf_dir, ["event_id", "event_type", "user_id", "ts"])
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
         .drop("ts")
@@ -354,9 +308,7 @@ def streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from storm_bench_spark.plans.relational import sessions_from_events
 
-    es = stream_table(spark, sf_dir, "events").withColumn(
-        "sec", F.col("ts").cast("long")
-    )
+    es = D.events_sec(spark, sf_dir, stream_table)
     return run_to_memory(sessions_from_events(es), output_mode="complete")
 
 
@@ -373,20 +325,11 @@ def streaming_hashtag_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     trending-topics shape: tweet stream → parse 13-field wire format →
     explode hashtags → event-time sliding window (60 s / 5 s) counts
     in the state store, complete-mode snapshot after the availableNow
-    epoch. Shares the tweet derivation (``tweets_from_docs``) and the
-    window/count spec with the batch topology, so the batch oracle
-    checks the streaming state machinery bit-for-bit."""
-    from storm_bench_spark.functions.parsers import parse_tweet_text
-    from storm_bench_spark.functions.text import extract_hashtags
-    from storm_bench_spark.sources.derived import tweets_from_docs
-
-    docs = stream_table(spark, sf_dir, "documents").withColumn(
-        "sec", (F.lit(DOC_EPOCH) + F.col("doc_id") * DOC_TS_STEP_SEC).cast("bigint")
-    )
-    t = tweets_from_docs(docs)
-    tags = t.select(
-        "sec", F.explode(extract_hashtags(parse_tweet_text("raw"))).alias("tag")
-    )
+    epoch. Shares the tweet derivation (``derived.tweets``), the
+    hashtag parse and the window/count spec with the batch topology, so
+    the batch oracle checks the streaming state machinery bit-for-bit."""
+    tags = T._hashtags(D.tweets(spark, sf_dir, stream_table))
+    # sliding_agg for the same reason as streaming_rolling_count
     win = sliding_agg(tags, 60, 5, ["tag"], [F.count("*").alias("cnt")])
     return run_to_memory(win, output_mode="complete")
 
@@ -424,12 +367,14 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from storm_bench_spark.plans.curation import cdc_changelog
-    from storm_bench_spark.sources.derived import events_sec
     from storm_bench_spark.sources.tables import load_table
     from storm_bench_spark.streaming.cdc_stream import apply_changes_stream
 
+    # Not cdc_apply over stream_table: the fold needs real ordered
+    # micro-batches, so the batch changelog is written as three files
+    # and folded per batch with foreachBatch.
     base = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    ch = cdc_changelog(events_sec(spark, sf_dir))
+    ch = cdc_changelog(D.events_sec(spark, sf_dir))
 
     bounds = ch.agg(F.min("sec").alias("lo"), F.max("sec").alias("hi")).first()
     lo, hi = bounds["lo"], bounds["hi"]
@@ -471,6 +416,7 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- streaming funnel: sequential-pattern keyed state ---------------------
 
 from storm_bench_spark.plans.analytics_ext import _FUNNEL_ORACLE as _SF_ORACLE  # noqa: E402
+from storm_bench_spark.plans.analytics_ext import funnel_counts  # noqa: E402
 
 
 @register(
@@ -495,9 +441,11 @@ def streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from storm_bench_spark.streaming.stateful import funnel_state
     from storm_bench_spark.streaming.streams import python_stateful_partitions
 
-    e = stream_table(spark, sf_dir, "events").withColumn(
-        "sec", F.col("ts").cast("long")
-    )
+    # Not the batch funnel's per-user min-aggregations joined stage to
+    # stage: a streaming plan joins an aggregation only in append mode,
+    # where an unwindowed per-user minimum is never final, so the stages
+    # advance in one keyed state machine instead.
+    e = D.events_sec(spark, sf_dir, stream_table)
     # Python-stateful stage keyed by 64 user shards: width = cores
     # capped at the 64 shards, not the JVM floor trim — one Python
     # worker per state partition (streams.python_stateful_partitions).
@@ -511,17 +459,7 @@ def streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = snap.groupBy("user_id").agg(
         F.max("v").alias("v"), F.max("c").alias("c"), F.max("p").alias("p")
     )
-
-    def _stage(col: str, stage: str) -> DataFrame:
-        return per_user.where(F.col(col).isNotNull()).agg(
-            F.lit(stage).alias("stage"), F.count(F.lit(1)).alias("users")
-        )
-
-    return (
-        _stage("v", "view")
-        .unionByName(_stage("c", "click"))
-        .unionByName(_stage("p", "purchase"))
-    )
+    return funnel_counts(*(per_user.where(F.col(k).isNotNull()) for k in "vcp"))
 
 
 # --- stream-static join (dimension enrichment) ----------------------------
@@ -550,6 +488,7 @@ def streaming_enriched_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from storm_bench_spark.sources.tables import load_table
 
+    # No batch twin row: the oracle's one-shot join is the batch side.
     o = stream_table(spark, sf_dir, "orders")
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
@@ -593,7 +532,6 @@ def streaming_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from storm_bench_spark.plans.pipeline import _WSMP_N, wsmp_keyed
     from storm_bench_spark.streaming.stateful import topn_state
-    from storm_bench_spark.streaming.streams import run_to_memory, stream_table
 
     P = 8
     docs = stream_table(spark, sf_dir, "documents").select("doc_id", "n_chars")

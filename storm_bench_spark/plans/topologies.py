@@ -42,24 +42,36 @@ FLIGHT_DIST_THRESHOLD_KM = 50.0
 FLIGHT_STEPS = 3
 FLIGHT_STEP_SEC = 5
 FLIGHT_CHUNK = 100
+FLIGHT_PROBE = dict(
+    dist_threshold_km=FLIGHT_DIST_THRESHOLD_KM,
+    speculative_comp_num=FLIGHT_STEPS,
+    speculative_comp_timestep_sec=FLIGHT_STEP_SEC,
+)
+
+# A topology with a streaming twin (plans/streaming_queries.py) keeps
+# its operator body in a helper here; the twin runs that helper over
+# the same derivation read through ``stream_table``.
 
 
 # --- 1. WordCount (WordCount.java:38-47) ---------------------------------
 
-@register(
-    "wordcount",
-    oracle=f"""
+WORDCOUNT_ORACLE = f"""
 SELECT word, count(*) AS cnt
 FROM (SELECT unnest(string_split_regex(text, '{WS_RUN_PATTERN}')) AS word FROM documents)
 WHERE word <> ''
 GROUP BY word
-""",
-)
-def wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """kafka → split → running count per word ⇒ total count per word."""
-    docs = load_table(spark, sf_dir, "documents")
+"""
+
+
+def _word_counts(docs: DataFrame) -> DataFrame:
     words = docs.select(F.explode(word_split("text")).alias("word"))
     return words.groupBy("word").agg(F.count("*").alias("cnt"))
+
+
+@register("wordcount", oracle=WORDCOUNT_ORACLE)
+def wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """kafka → split → running count per word ⇒ total count per word."""
+    return _word_counts(load_table(spark, sf_dir, "documents"))
 
 
 # --- 3. Grep (Grep.java:41-50) -------------------------------------------
@@ -90,11 +102,15 @@ FROM ({D.sliding_windows_sql(_RC_INNER, 60, 10)})
 GROUP BY ws, word
 """
 
+
+def _doc_words(d: DataFrame) -> DataFrame:
+    return d.select("sec", F.explode(word_split("text")).alias("word"))
+
+
 @register("rolling_count", oracle=ROLLING_COUNT_ORACLE)
 def rolling_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window (60s/10s) count per word over the doc timeline."""
-    d = D.documents_ts(spark, sf_dir)
-    words = d.select("sec", F.explode(word_split("text")).alias("word"))
+    words = _doc_words(D.documents_ts(spark, sf_dir))
     return sliding_agg_twophase(
         words, 60, 10, ["word"],
         [F.count("*").alias("_c")], [F.sum("_c").alias("cnt")],
@@ -121,12 +137,15 @@ GROUP BY ws, tag
 """
 
 
+def _hashtags(t: DataFrame) -> DataFrame:
+    text = parse_tweet_text("raw")
+    return t.select("sec", F.explode(extract_hashtags(text)).alias("tag"))
+
+
 @register("rolling_hashtag_count", oracle=ROLLING_HASHTAG_ORACLE)
 def rolling_hashtag_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kafka → parse 13-field tweet → explode hashtags → window(60s/5s) count."""
-    t = D.tweets(spark, sf_dir)
-    text = parse_tweet_text("raw")
-    tags = t.select("sec", F.explode(extract_hashtags(text)).alias("tag"))
+    tags = _hashtags(D.tweets(spark, sf_dir))
     return sliding_agg_twophase(
         tags, 60, 5, ["tag"],
         [F.count("*").alias("_c")], [F.sum("_c").alias("cnt")],
@@ -172,6 +191,13 @@ SELECT event_id, message FROM ({D.MESSAGES_SQL})
 ORDER BY message, event_id
 LIMIT 100
 """
+ROLLING_SORT_ORDER = ("message", "event_id")
+ROLLING_SORT_TOP = 100
+
+
+def _sorted_top(m: DataFrame) -> DataFrame:
+    return m.orderBy(*ROLLING_SORT_ORDER).limit(ROLLING_SORT_TOP)
+
 
 @register("rolling_sort", oracle=ROLLING_SORT_ORACLE)
 def rolling_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -181,28 +207,32 @@ def rolling_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort all buffered rows, keep the displayed top-k. The event_id
     tiebreak makes the limit deterministic.
     """
-    m = D.messages(spark, sf_dir)
-    return m.select("event_id", "message").orderBy("message", "event_id").limit(100)
+    return _sorted_top(D.messages(spark, sf_dir).select("event_id", "message"))
 
 
 # --- 8. SOL (SOL.java:39-52): shuffle-throughput chain -------------------
 
 SOL_ORACLE = f"SELECT message FROM ({D.MESSAGES_SQL})"
+SOL_LEVEL = 3  # topology_level (conf/conf.yaml:32)
+
+
+def _sol_chain(m: DataFrame) -> DataFrame:
+    df = m.select("message")
+    n = m.sparkSession.sparkContext.defaultParallelism
+    for _ in range(SOL_LEVEL - 1):
+        df = df.repartition(n)
+    return df
+
 
 @register("sol", oracle=SOL_ORACLE)
 def sol(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Identity bolt chain with a shuffle between each level.
 
-    topology_level = 3 (conf/conf.yaml:32) ⇒ 2 inter-level exchanges,
-    reproduced as explicit round-robin repartitions. The query result is
-    the identity; the shuffles are the benchmark.
+    SOL_LEVEL levels ⇒ SOL_LEVEL − 1 inter-level exchanges, reproduced
+    as explicit round-robin repartitions. The query result is the
+    identity; the shuffles are the benchmark.
     """
-    level = 3
-    df = D.messages(spark, sf_dir).select("message")
-    n = spark.sparkContext.defaultParallelism
-    for _ in range(level - 1):
-        df = df.repartition(n)
-    return df
+    return _sol_chain(D.messages(spark, sf_dir))
 
 
 # --- 9. PageViewCount (PageViewCount.java:34-44) -------------------------
@@ -406,21 +436,21 @@ LIMIT {FLIGHT_CHUNK}
 
 FLIGHT_DIST_ORACLE = _flight_dist_oracle()
 
-@register("rolling_flight_dist", oracle=FLIGHT_DIST_ORACLE)
-def rolling_flight_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Latest position per aircraft → canonical pair self-join (broadcast)
-    → dead-reckoned speculative distances → threshold → global top-k."""
-    fl = D.adsb_flights(spark, sf_dir)
-    hits = flight_dist_pairs(
-        fl,
-        dist_threshold_km=FLIGHT_DIST_THRESHOLD_KM,
-        speculative_comp_num=FLIGHT_STEPS,
-        speculative_comp_timestep_sec=FLIGHT_STEP_SEC,
-    )
+
+def _flight_top_k(hits: DataFrame) -> DataFrame:
+    """The emitted chunk: the FLIGHT_CHUNK nearest pair-steps, distances
+    at the oracle's 6 dp."""
     ranked = hits.select(
         F.round(F.col("dist_km"), 6).alias("dist_km"), "step", "icao1", "icao2"
     )
     return ranked.orderBy("dist_km", "icao1", "icao2", "step").limit(FLIGHT_CHUNK)
+
+
+@register("rolling_flight_dist", oracle=FLIGHT_DIST_ORACLE)
+def rolling_flight_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Latest position per aircraft → canonical pair self-join (broadcast)
+    → dead-reckoned speculative distances → threshold → global top-k."""
+    return _flight_top_k(flight_dist_pairs(D.adsb_flights(spark, sf_dir), **FLIGHT_PROBE))
 
 
 # Fresh-snapshot window for the grid-pruned twin: a live collision
@@ -448,17 +478,7 @@ def rolling_flight_dist_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     fl = D.adsb_flights(spark, sf_dir)
     maxpt = fl.agg(F.max("postime").alias("m")).first()["m"]
     fresh = fl.where(F.col("postime") >= F.lit(maxpt - FLIGHT_FRESH_MS))
-    hits = flight_dist_pairs(
-        fresh,
-        dist_threshold_km=FLIGHT_DIST_THRESHOLD_KM,
-        speculative_comp_num=FLIGHT_STEPS,
-        speculative_comp_timestep_sec=FLIGHT_STEP_SEC,
-        bucketed=True,
-    )
-    ranked = hits.select(
-        F.round(F.col("dist_km"), 6).alias("dist_km"), "step", "icao1", "icao2"
-    )
-    return ranked.orderBy("dist_km", "icao1", "icao2", "step").limit(FLIGHT_CHUNK)
+    return _flight_top_k(flight_dist_pairs(fresh, bucketed=True, **FLIGHT_PROBE))
 
 
 # --- Library op: RollingLatLongBolt (+ LatLongReducer) -------------------

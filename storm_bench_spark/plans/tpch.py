@@ -33,10 +33,6 @@ def _dsum(expr: Column) -> Column:
     return F.sum(expr.cast(DEC_ROW)).cast("double")
 
 
-def _davg(expr: Column) -> Column:
-    return F.sum(expr.cast(DEC_ROW)).cast("double") / F.count("*")
-
-
 # --- two-phase exact decimal totals (the scan-heavy agg path) ------------
 # Spark's sum over DECIMAL(18,6) widens the accumulator past the
 # long-backed compact range, so every row pays a BigDecimal add in the

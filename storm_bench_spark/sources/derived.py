@@ -12,16 +12,27 @@ the driver's Spark-vs-DuckDB comparison checks the engine, not the
 fixture. Distributions follow FIXTURES.md / PageViewGenerator.java:37-42
 (url 70/20/10, status 95/5, zip 50/50).
 
+The wire-format builders take a ``read`` table reader, so a streaming
+row derives its format with the same function over ``stream_table``
+that its batch twin runs over ``load_table``.
+
 Naming: ``sec`` is epoch seconds (BIGINT) — window arithmetic and oracle
 comparison happen on integers, never on engine-formatted timestamps.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from storm_bench_spark.sources.tables import load_table
+
+# ``(spark, sf_dir, table) -> DataFrame``: ``load_table`` for a batch
+# row, ``streaming.streams.stream_table`` for its streaming twin — the
+# one thing the two sides of a twin read differently.
+Reader = Callable[[SparkSession, str, str], DataFrame]
 
 DOC_EPOCH = 1_704_067_200  # 2024-01-01T00:00:00Z
 DOC_TS_STEP_SEC = 7  # monotone synthetic event-time for documents
@@ -29,8 +40,8 @@ DOC_TS_STEP_SEC = 7  # monotone synthetic event-time for documents
 
 # --- documents with synthetic event-time ---------------------------------
 
-def documents_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
+def documents_ts(spark: SparkSession, sf_dir: str, read: Reader = load_table) -> DataFrame:
+    d = read(spark, sf_dir, "documents")
     return d.withColumn("sec", (F.lit(DOC_EPOCH) + F.col("doc_id") * DOC_TS_STEP_SEC).cast("bigint"))
 
 
@@ -42,8 +53,8 @@ DOCUMENTS_TS_SQL = (
 
 # --- events base: epoch seconds ------------------------------------------
 
-def events_sec(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "events")
+def events_sec(spark: SparkSession, sf_dir: str, read: Reader = load_table) -> DataFrame:
+    e = read(spark, sf_dir, "events")
     return e.withColumn("sec", F.col("ts").cast("long"))
 
 
@@ -55,13 +66,8 @@ EVENTS_SEC_SQL = (
 
 # --- pageviews (PageView.java wire format over events) -------------------
 
-def pageviews(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return pageviews_from_events(events_sec(spark, sf_dir))
-
-
-def pageviews_from_events(e: DataFrame) -> DataFrame:
-    """Pageview derivation over any (event_id, sec, user_id) frame —
-    batch or streaming — so stream/batch parity tests share one spec."""
+def pageviews(spark: SparkSession, sf_dir: str, read: Reader = load_table) -> DataFrame:
+    e = events_sec(spark, sf_dir, read)
     url = (
         F.when(F.col("user_id") % 10 < 7, F.lit("foo.com"))
         .when(F.col("user_id") % 10 < 9, F.lit("foo.news.com"))
@@ -110,8 +116,8 @@ FROM (
 # 'undefined' band to exercise the sentinel), and a compact ~5°x5° box
 # for the flight-distance join (so a km threshold is meaningful).
 
-def adsb_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = events_sec(spark, sf_dir)
+def adsb_geo(spark: SparkSession, sf_dir: str, read: Reader = load_table) -> DataFrame:
+    e = events_sec(spark, sf_dir, read)
     return e.select(
         "event_id",
         "sec",
@@ -128,14 +134,8 @@ FROM ({EVENTS_SEC_SQL})
 """
 
 
-def adsb_flights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return adsb_flights_from_events(events_sec(spark, sf_dir))
-
-
-def adsb_flights_from_events(e: DataFrame) -> DataFrame:
-    """Flight-record derivation over any (event_id, sec, user_id, value)
-    frame — batch or streaming."""
-    return e.select(
+def adsb_flights(spark: SparkSession, sf_dir: str, read: Reader = load_table) -> DataFrame:
+    return events_sec(spark, sf_dir, read).select(
         "event_id",
         F.lpad(F.col("user_id").cast("string"), 6, "0").alias("icao"),
         (F.col("sec") * 1000).cast("bigint").alias("postime"),
@@ -160,13 +160,8 @@ FROM ({EVENTS_SEC_SQL})
 
 # --- messages (RandomMessageSpout analog: pool of 100) -------------------
 
-def messages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return messages_from_events(events_sec(spark, sf_dir))
-
-
-def messages_from_events(e: DataFrame) -> DataFrame:
-    """Message derivation over any (event_id, sec) frame."""
-    return e.select(
+def messages(spark: SparkSession, sf_dir: str, read: Reader = load_table) -> DataFrame:
+    return events_sec(spark, sf_dir, read).select(
         "event_id",
         "sec",
         F.lpad((F.col("event_id") % 100).cast("string"), 3, "0").alias("message"),
@@ -184,16 +179,11 @@ FROM ({EVENTS_SEC_SQL})
 # Words of >= 6 letters become '#'-prefixed hashtags inside the text
 # field, so the arity-13 parser and the '#'-extractor both do real work.
 
-def tweets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tweets_from_docs(documents_ts(spark, sf_dir))
-
-
-def tweets_from_docs(d: DataFrame) -> DataFrame:
-    """Tweet derivation over any (doc_id, sec, text) frame."""
+def tweets(spark: SparkSession, sf_dir: str, read: Reader = load_table) -> DataFrame:
     tagged = F.regexp_replace(F.col("text"), r"(\w{6,})", r"#$1")
     fields = [F.lit(f"f{i}") for i in range(13)]
     fields[4] = tagged
-    return d.select(
+    return documents_ts(spark, sf_dir, read).select(
         "doc_id",
         "sec",
         F.concat_ws("|", *fields).alias("raw"),

@@ -115,7 +115,10 @@ def _stream_input_bytes(df: DataFrame) -> int:
 # input-row total, final state-store row count, checkpoint dir, state
 # width. tests/oracle_utils dumps this next to the mismatched frames,
 # so a recurrence pinpoints WHICH stage lost rows (source listing vs
-# state vs sink) instead of leaving only a value diff.
+# state vs sink) instead of leaving only a value diff. ``plan`` keeps
+# the last micro-batch's physical plan: a streaming row returns only a
+# batch read of its sink, so this is the one place its incremental
+# plan is visible (scripts/explain_dump.py prints it).
 LAST_STREAM_RUNS: deque = deque(maxlen=32)
 
 
@@ -234,6 +237,7 @@ def run_stream(
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     wall_sec = time.perf_counter() - t_start
     progs = _progress_dicts(q)
+    plan = q._jsq.explainInternal(False)
     total_in = sum(int(p.get("numInputRows") or 0) for p in progs)
     # Engine-start/checkpoint floor (VERDICT r8 next #4): processing =
     # Σ addBatch (the data actually flowing through the plan into the
@@ -274,6 +278,7 @@ def run_stream(
             "wall_sec": round(wall_sec, 3),
             "processing_sec": round(processing_sec, 3),
             "floor_sec": round(floor_sec, 3),
+            "plan": plan,
         }
     )
     # Silent-empty-stream guard: a FRESH stream over a non-empty file

@@ -54,10 +54,7 @@ def test_stream_batch_parity_unique_visitor(spark):
     from storm_bench_spark.sources import derived as D
     from storm_bench_spark.streaming.streams import stream_table
 
-    e = stream_table(spark, SF_DIR, "events").withColumn(
-        "sec", F.col("ts").cast("long")
-    )
-    pv = D.pageviews_from_events(e)
+    pv = D.pageviews(spark, SF_DIR, stream_table)
     win = sliding_agg(
         pv.select("sec", "url", "user_id"), 3600, 600, ["url"],
         [F.size(F.collect_set("user_id")).alias("uniques")],
@@ -68,20 +65,9 @@ def test_stream_batch_parity_unique_visitor(spark):
 
 
 def test_stream_batch_parity_hashtag_count(spark):
-    from storm_bench_spark.functions.parsers import parse_tweet_text
-    from storm_bench_spark.functions.text import extract_hashtags
-    from storm_bench_spark.operators.windows import sliding_agg
-    from storm_bench_spark.sources import derived as D
-    from storm_bench_spark.streaming.streams import stream_table
-
-    d = stream_table(spark, SF_DIR, "documents").withColumn(
-        "sec", (F.lit(D.DOC_EPOCH) + F.col("doc_id") * D.DOC_TS_STEP_SEC).cast("bigint")
-    )
-    t = D.tweets_from_docs(d)
-    tags = t.select("sec", F.explode(extract_hashtags(parse_tweet_text("raw"))).alias("tag"))
-    win = sliding_agg(tags, 60, 5, ["tag"], [F.count("*").alias("cnt")])
-    stream = run_to_memory(win, output_mode="complete").toPandas()
-    batch = all_queries()["rolling_hashtag_count"](spark, SF_DIR).toPandas()
+    qs = all_queries()
+    batch = qs["rolling_hashtag_count"](spark, SF_DIR).toPandas()
+    stream = qs["streaming_hashtag_count"](spark, SF_DIR).toPandas()
     assert_frames_match(stream, batch, "hashtag stream/batch parity")
 
 
@@ -636,6 +622,8 @@ def test_stream_diagnostics_recorded(spark):
     assert rec["input_bytes"] > 0
     assert rec["final_state_operators"], "stateful agg must report state rows"
     assert rec["final_state_operators"][0]["numRowsTotal"] > 0
+    # the stream's own physical plan, not the batch read of its sink
+    assert "StateStoreSave" in rec["plan"], rec["plan"]
 
 
 def test_stream_table_reads_directory_shaped_tables(spark, tmp_path):
