@@ -9,7 +9,7 @@ JVM-side (zero Python UDFs in the reference-derived surface).
 Layout
 ------
 - ``session``    SparkSession factory tuned for the engine
-- ``schemas``    StructTypes for the five reference wire formats
+- ``schemas``    StructTypes for the parsed reference wire formats
 - ``functions``  column-expression library (text, geo, hashing, vectors)
 - ``sources``    readers + deterministic derived tables for testdata
 - ``operators``  reusable operator compositions (windows, top-k, joins,

@@ -17,7 +17,8 @@ core count when payloads are large.
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
+import functools
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -30,6 +31,27 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+
+def _map_rows(
+    df: DataFrame,
+    cols: list[str],
+    schema: StructType,
+    rows: Callable[..., Iterable[tuple]],
+) -> DataFrame:
+    """The one Arrow-batch map every operator here runs: select
+    ``cols``, call ``rows(*values)`` on each input row and emit the
+    tuples it yields as ``schema``'s columns, one pandas frame per
+    Arrow batch (payload bytes never reach the driver)."""
+    names = schema.fieldNames()
+
+    def batches(pdfs: Iterator[pd.DataFrame]) -> Iterable[pd.DataFrame]:
+        for pdf in pdfs:
+            out = [t for vals in zip(*(pdf[c] for c in cols)) for t in rows(*vals)]
+            yield pd.DataFrame(out, columns=names)
+
+    return df.select(*cols).mapInPandas(batches, schema)
+
 
 IMAGE_META_SCHEMA = StructType(
     [
@@ -59,32 +81,39 @@ def _fake_decode(payload: bytes) -> tuple[int, int, int, int]:
     return width, height, channels, n_frames
 
 
-def _try_real_decode(payload: bytes):
-    try:  # pragma: no cover - Pillow absent in this container
+@functools.lru_cache(maxsize=1)
+def _pil_image():
+    """Pillow's ``Image`` module, or None when Pillow is not installed —
+    probed once per process, not once per payload."""
+    try:
         from PIL import Image  # type: ignore
-        import io
-
-        img = Image.open(io.BytesIO(payload))
-        return img.width, img.height, len(img.getbands()), getattr(img, "n_frames", 1)
     except ImportError:
         return None
+    return Image
+
+
+def _try_real_decode(payload: bytes):
+    image = _pil_image()
+    if image is None:
+        return None
+    try:  # pragma: no cover - Pillow is optional
+        import io
+
+        img = image.open(io.BytesIO(payload))
+        return img.width, img.height, len(img.getbands()), getattr(img, "n_frames", 1)
     except Exception:
         return None
 
 
-def decode_image_meta(df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload") -> DataFrame:
+def decode_image_meta(df: DataFrame) -> DataFrame:
     """(doc_id, width, height, channels, n_frames) per binary payload."""
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload)
-                meta = _try_real_decode(payload) or _fake_decode(payload)
-                rows.append((int(doc_id), *[int(m) for m in meta]))
-            yield pd.DataFrame(rows, columns=[f.name for f in IMAGE_META_SCHEMA.fields])
+    def meta(doc_id, payload):
+        payload = bytes(payload)
+        m = _try_real_decode(payload) or _fake_decode(payload)
+        yield (int(doc_id), *[int(x) for x in m])
 
-    return df.select(id_col, payload_col).mapInPandas(decode_batches, IMAGE_META_SCHEMA)
+    return _map_rows(df, ["doc_id", "payload"], IMAGE_META_SCHEMA, meta)
 
 
 def documents_as_binary(docs: DataFrame) -> DataFrame:
@@ -115,20 +144,15 @@ def _fake_features(payload: bytes) -> list[float]:
     return [((n * (i + 1)) % 97) / 97.0 for i in range(FEATURE_DIM)]
 
 
-def extract_features(df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload") -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """(doc_id, features: array<double>) per binary payload — the
     decode→embed stage of a multimodal pipeline as an Arrow-batched
     mapInPandas; output feeds the similarity operators directly."""
 
-    def feature_batches(batches: Iterator[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (int(doc_id), _fake_features(bytes(payload)))
-                for doc_id, payload in zip(pdf[id_col], pdf[payload_col])
-            ]
-            yield pd.DataFrame(rows, columns=[f.name for f in FEATURES_SCHEMA.fields])
+    def features(doc_id, payload):
+        yield int(doc_id), _fake_features(bytes(payload))
 
-    return df.select(id_col, payload_col).mapInPandas(feature_batches, FEATURES_SCHEMA)
+    return _map_rows(df, ["doc_id", "payload"], FEATURES_SCHEMA, features)
 
 
 # --- resize (payload → payload) ------------------------------------------
@@ -141,10 +165,7 @@ RESIZED_SCHEMA = StructType(
 )
 
 
-def resize_image(
-    df: DataFrame, width: int, height: int, channels: int = 3,
-    id_col: str = "doc_id", payload_col: str = "payload",
-) -> DataFrame:
+def resize_image(df: DataFrame, width: int, height: int, channels: int = 3) -> DataFrame:
     """(doc_id, resized: binary) — binary-in/binary-out UDF plumbing.
 
     STUB resampler: tile the payload to exactly width·height·channels
@@ -152,16 +173,12 @@ def resize_image(
     """
     target = width * height * channels
 
-    def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload) or b"\x00"
-                reps = target // len(payload) + 1
-                rows.append((int(doc_id), (payload * reps)[:target]))
-            yield pd.DataFrame(rows, columns=[f.name for f in RESIZED_SCHEMA.fields])
+    def resize(doc_id, payload):
+        payload = bytes(payload) or b"\x00"
+        reps = target // len(payload) + 1
+        yield int(doc_id), (payload * reps)[:target]
 
-    return df.select(id_col, payload_col).mapInPandas(resize_batches, RESIZED_SCHEMA)
+    return _map_rows(df, ["doc_id", "payload"], RESIZED_SCHEMA, resize)
 
 
 # --- frame sampling (one payload → many frames) ---------------------------
@@ -192,9 +209,7 @@ AUDIO_META_SCHEMA = StructType(
 )
 
 
-def decode_audio_meta(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
+def decode_audio_meta(df: DataFrame) -> DataFrame:
     """(doc_id, n_samples, duration_ms, mean_abs) per audio payload.
 
     STUB codec (no audio library in this container): payloads are
@@ -206,23 +221,19 @@ def decode_audio_meta(
     only length arithmetic."""
     import numpy as np
 
-    def meta_batches(batches: Iterator[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload)
-                n_samples = len(payload) // AUDIO_BYTES_PER_SAMPLE
-                duration_ms = n_samples * 1000 // AUDIO_SAMPLE_RATE
-                arr = np.frombuffer(payload, dtype=np.uint8)
-                # integer byte sum is exact in float64 (≤ 255·n ≪ 2^53),
-                # so sum/len is order-independent and oracle-identical;
-                # rounding is left to the caller (engine round == SQL
-                # round HALF_UP; Python's round() is banker's — avoid)
-                mean_abs = float(arr.sum()) / len(arr) if len(arr) else 0.0
-                rows.append((int(doc_id), n_samples, duration_ms, mean_abs))
-            yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_META_SCHEMA.fields])
+    def meta(doc_id, payload):
+        payload = bytes(payload)
+        n_samples = len(payload) // AUDIO_BYTES_PER_SAMPLE
+        duration_ms = n_samples * 1000 // AUDIO_SAMPLE_RATE
+        arr = np.frombuffer(payload, dtype=np.uint8)
+        # integer byte sum is exact in float64 (≤ 255·n ≪ 2^53), so
+        # sum/len is order-independent and oracle-identical; rounding
+        # is left to the caller (engine round == SQL round HALF_UP;
+        # Python's round() is banker's — avoid)
+        mean_abs = float(arr.sum()) / len(arr) if len(arr) else 0.0
+        yield int(doc_id), n_samples, duration_ms, mean_abs
 
-    return df.select(id_col, payload_col).mapInPandas(meta_batches, AUDIO_META_SCHEMA)
+    return _map_rows(df, ["doc_id", "payload"], AUDIO_META_SCHEMA, meta)
 
 
 AUDIO_CHUNK_SCHEMA = StructType(
@@ -235,12 +246,7 @@ AUDIO_CHUNK_SCHEMA = StructType(
 )
 
 
-def chunk_audio(
-    df: DataFrame,
-    chunk_ms: int = 250,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
+def chunk_audio(df: DataFrame, chunk_ms: int = 250) -> DataFrame:
     """(doc_id, chunk_index, start_ms, chunk) — time-aligned chunking
     (the audio twin of frame sampling): fixed-duration PCM windows for
     downstream feature extraction, one-row-in/many-rows-out through
@@ -248,47 +254,28 @@ def chunk_audio(
     keep; keeping is the honest stub)."""
     chunk_bytes = AUDIO_SAMPLE_RATE * AUDIO_BYTES_PER_SAMPLE * chunk_ms // 1000
 
-    def chunk_batches(batches: Iterator[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload)
-                n_chunks = max(1, (len(payload) + chunk_bytes - 1) // chunk_bytes)
-                for i in range(n_chunks):
-                    rows.append(
-                        (
-                            int(doc_id),
-                            i,
-                            i * chunk_ms,
-                            payload[i * chunk_bytes : (i + 1) * chunk_bytes],
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_CHUNK_SCHEMA.fields])
+    def chunks(doc_id, payload):
+        payload = bytes(payload)
+        n_chunks = max(1, (len(payload) + chunk_bytes - 1) // chunk_bytes)
+        for i in range(n_chunks):
+            yield int(doc_id), i, i * chunk_ms, payload[i * chunk_bytes : (i + 1) * chunk_bytes]
 
-    return df.select(id_col, payload_col).mapInPandas(chunk_batches, AUDIO_CHUNK_SCHEMA)
+    return _map_rows(df, ["doc_id", "payload"], AUDIO_CHUNK_SCHEMA, chunks)
 
 
-def sample_frames(
-    df: DataFrame, every_k: int = 2, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
+def sample_frames(df: DataFrame, every_k: int = 2) -> DataFrame:
     """(doc_id, frame_index, frame) for every k-th frame — the
     one-row-in/many-rows-out UDF shape (video frame sampling). Frames
     are FRAME_SIZE_BYTES slices of the payload; count mirrors
     ``decode_image_meta.n_frames`` (ceil(len / 1024), min 1)."""
 
-    def frame_batches(batches: Iterator[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload)
-                n = len(payload)
-                n_frames = max(1, (n + FRAME_SIZE_BYTES - 1) // FRAME_SIZE_BYTES)
-                for i in range(0, n_frames, every_k):
-                    frame = payload[i * FRAME_SIZE_BYTES : (i + 1) * FRAME_SIZE_BYTES]
-                    rows.append((int(doc_id), i, frame))
-            yield pd.DataFrame(rows, columns=[f.name for f in FRAMES_SCHEMA.fields])
+    def frames(doc_id, payload):
+        payload = bytes(payload)
+        n_frames = max(1, (len(payload) + FRAME_SIZE_BYTES - 1) // FRAME_SIZE_BYTES)
+        for i in range(0, n_frames, every_k):
+            yield int(doc_id), i, payload[i * FRAME_SIZE_BYTES : (i + 1) * FRAME_SIZE_BYTES]
 
-    return df.select(id_col, payload_col).mapInPandas(frame_batches, FRAMES_SCHEMA)
+    return _map_rows(df, ["doc_id", "payload"], FRAMES_SCHEMA, frames)
 
 
 # --- REAL WAV codec (round 8: one decoder upgraded from stub to real) -----
@@ -383,52 +370,28 @@ def decode_wav_pcm16(wav: bytes) -> tuple[int, int, int, int, int, float]:
     return sample_rate, channels, bits, n_frames, duration_ms, mean_abs
 
 
-def wav_files(
-    df: DataFrame,
-    rate_col: str = "sample_rate",
-    channels_col: str = "channels",
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
+def wav_files(df: DataFrame) -> DataFrame:
     """(doc_id, wav: binary) — encode each payload into a real WAV
     container with per-row sample rate / channel count (binary-in/
     binary-out mapInPandas, same batch shape as resize_image)."""
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (
-                    int(doc_id),
-                    encode_wav_pcm16(bytes(payload), int(rate), int(ch)),
-                )
-                for doc_id, payload, rate, ch in zip(
-                    pdf[id_col], pdf[payload_col], pdf[rate_col], pdf[channels_col]
-                )
-            ]
-            yield pd.DataFrame(rows, columns=[f.name for f in WAV_FILE_SCHEMA.fields])
+    def encode(doc_id, payload, rate, ch):
+        yield int(doc_id), encode_wav_pcm16(bytes(payload), int(rate), int(ch))
 
-    return df.select(id_col, payload_col, rate_col, channels_col).mapInPandas(
-        encode_batches, WAV_FILE_SCHEMA
-    )
+    cols = ["doc_id", "payload", "sample_rate", "channels"]
+    return _map_rows(df, cols, WAV_FILE_SCHEMA, encode)
 
 
-def decode_wav_meta(
-    df: DataFrame, id_col: str = "doc_id", wav_col: str = "wav"
-) -> DataFrame:
+def decode_wav_meta(df: DataFrame) -> DataFrame:
     """(doc_id, sample_rate, channels, bits, n_frames, duration_ms,
     mean_abs) from REAL WAV containers via Arrow-batched mapInPandas —
     the decode stage the other multimodal rows stub, running the
     genuine parser above."""
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, wav in zip(pdf[id_col], pdf[wav_col]):
-                sr, ch, bits, nf, ms, mean_abs = decode_wav_pcm16(bytes(wav))
-                rows.append((int(doc_id), sr, ch, bits, nf, ms, mean_abs))
-            yield pd.DataFrame(rows, columns=[f.name for f in WAV_META_SCHEMA.fields])
+    def decode(doc_id, wav):
+        yield (int(doc_id), *decode_wav_pcm16(bytes(wav)))
 
-    return df.select(id_col, wav_col).mapInPandas(decode_batches, WAV_META_SCHEMA)
+    return _map_rows(df, ["doc_id", "wav"], WAV_META_SCHEMA, decode)
 
 
 # --- REAL PPM (P6) codec — the image twin of the WAV round-trip ----------
@@ -499,45 +462,24 @@ def decode_ppm_p6(ppm: bytes) -> tuple[int, int, int, float]:
     return width, height, maxval, mean_pixel
 
 
-def ppm_files(
-    df: DataFrame,
-    width_col: str = "width",
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
+def ppm_files(df: DataFrame) -> DataFrame:
     """(doc_id, ppm: binary) — encode each payload into a real P6 file
     with a per-row width (binary-in/binary-out mapInPandas)."""
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (int(doc_id), encode_ppm_p6(bytes(payload), int(w)))
-                for doc_id, payload, w in zip(
-                    pdf[id_col], pdf[payload_col], pdf[width_col]
-                )
-            ]
-            yield pd.DataFrame(rows, columns=[f.name for f in PPM_FILE_SCHEMA.fields])
+    def encode(doc_id, payload, w):
+        yield int(doc_id), encode_ppm_p6(bytes(payload), int(w))
 
-    return df.select(id_col, payload_col, width_col).mapInPandas(
-        encode_batches, PPM_FILE_SCHEMA
-    )
+    return _map_rows(df, ["doc_id", "payload", "width"], PPM_FILE_SCHEMA, encode)
 
 
-def decode_ppm_meta(
-    df: DataFrame, id_col: str = "doc_id", ppm_col: str = "ppm"
-) -> DataFrame:
+def decode_ppm_meta(df: DataFrame) -> DataFrame:
     """(doc_id, width, height, maxval, mean_pixel) from REAL P6 files
     via Arrow-batched mapInPandas — the genuine parser above."""
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, ppm in zip(pdf[id_col], pdf[ppm_col]):
-                w, h, mv, mean_pixel = decode_ppm_p6(bytes(ppm))
-                rows.append((int(doc_id), w, h, mv, mean_pixel))
-            yield pd.DataFrame(rows, columns=[f.name for f in PPM_META_SCHEMA.fields])
+    def decode(doc_id, ppm):
+        yield (int(doc_id), *decode_ppm_p6(bytes(ppm)))
 
-    return df.select(id_col, ppm_col).mapInPandas(decode_batches, PPM_META_SCHEMA)
+    return _map_rows(df, ["doc_id", "ppm"], PPM_META_SCHEMA, decode)
 
 
 # --- BMP (Windows bitmap, BITMAPINFOHEADER) — third REAL codec ------------
@@ -640,42 +582,21 @@ def decode_bmp24(bmp: bytes) -> tuple[int, int, int, int, int, int, float]:
     return width, height, bpp, stride, file_size, first_pixel, mean_pixel
 
 
-def bmp_files(
-    df: DataFrame,
-    width_col: str = "width",
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
+def bmp_files(df: DataFrame) -> DataFrame:
     """(doc_id, bmp: binary) — encode each payload into a real BMP
     with a per-row width (binary-in/binary-out mapInPandas)."""
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (int(doc_id), encode_bmp24(bytes(payload), int(w)))
-                for doc_id, payload, w in zip(
-                    pdf[id_col], pdf[payload_col], pdf[width_col]
-                )
-            ]
-            yield pd.DataFrame(rows, columns=[f.name for f in BMP_FILE_SCHEMA.fields])
+    def encode(doc_id, payload, w):
+        yield int(doc_id), encode_bmp24(bytes(payload), int(w))
 
-    return df.select(id_col, payload_col, width_col).mapInPandas(
-        encode_batches, BMP_FILE_SCHEMA
-    )
+    return _map_rows(df, ["doc_id", "payload", "width"], BMP_FILE_SCHEMA, encode)
 
 
-def decode_bmp_meta(
-    df: DataFrame, id_col: str = "doc_id", bmp_col: str = "bmp"
-) -> DataFrame:
+def decode_bmp_meta(df: DataFrame) -> DataFrame:
     """(doc_id, width, height, bpp, stride, file_size, first_pixel,
     mean_pixel) from REAL BMP files via Arrow-batched mapInPandas."""
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, bmp in zip(pdf[id_col], pdf[bmp_col]):
-                w, h, bpp, stride, fs, fp, mean_pixel = decode_bmp24(bytes(bmp))
-                rows.append((int(doc_id), w, h, bpp, stride, fs, fp, mean_pixel))
-            yield pd.DataFrame(rows, columns=[f.name for f in BMP_META_SCHEMA.fields])
+    def decode(doc_id, bmp):
+        yield (int(doc_id), *decode_bmp24(bytes(bmp)))
 
-    return df.select(id_col, bmp_col).mapInPandas(decode_batches, BMP_META_SCHEMA)
+    return _map_rows(df, ["doc_id", "bmp"], BMP_META_SCHEMA, decode)

@@ -17,16 +17,17 @@ chosen by where the per-row work can run fastest:
   dot product (codegen-method-size discipline — see _dot_terms).
 
 All vector math is double-precision with every sum accumulated in
-dimension order (unrolled left-assoc expressions JVM-side, sequential
-``for i`` loops over vectorized rows in the NumPy kernels), matching
-DuckDB's ``list_reduce`` fold bitwise, so cosines agree exactly before
-the rounding that outputs carry.
+dimension order (unrolled left-assoc expressions JVM-side, the
+dimension-order helpers ``_dots``/``_row_dots``/``_norms`` in the NumPy
+kernels), matching DuckDB's ``list_reduce`` fold bitwise, so cosines
+agree exactly before the rounding that outputs carry.
 """
 
 from __future__ import annotations
 
 import functools
 
+import numpy as np
 import pandas as pd  # module-level: pandas_udf type hints resolve in module globals
 
 from pyspark.sql import Column, DataFrame
@@ -145,47 +146,76 @@ def cosine_sql(a: str, b: str) -> str:
 # (8KB *bytecode*), C2 never JITs it, and the stage runs in the
 # bytecode interpreter at ~15µs/row — with no error logged anywhere.
 # (Third silent-slowness mechanism after janino-fail and HOF fallback.)
-#
-# FP discipline: dots and norms accumulate *sequentially in i*
-# (vectorized across rows and references), reproducing the
-# left-associated double sums of the unrolled/fold spellings and
-# DuckDB's ``list_reduce`` — cosines match the oracle bitwise.
+
+
+# --- dimension-order NumPy helpers -----------------------------------------
+# Every NumPy kernel in the engine decodes its vectors with ``_matrix``
+# and sums with the three helpers below; nothing else spells a dot or a
+# norm. THE SUMMATION RULE: each dot and each sum of squares is
+# accumulated one dimension at a time, ``acc += a[:, i] * b[:, i]`` for
+# i = 0, 1, ..., dim-1, vectorized across rows (and references) but
+# never across dimensions. That is the left-associated double sum
+# ``((0 + a0·b0) + a1·b1) + ...`` which the unrolled JVM expressions
+# (``_dot_terms``) and DuckDB's ``list_reduce`` fold (``DOT_SQL``,
+# ``NORM_SQL``) also compute — ``0.0 + x == x`` for finite x — so a
+# kernel's cosine is bitwise equal to the oracle's before rounding.
+# NumPy's ``sum``/``@``/``einsum`` use pairwise or BLAS blocking and
+# differ in the last bits (pinned by tests/test_properties.py).
+# Each accumulator keeps its own add sequence, so computing a dot and a
+# norm in two calls instead of one interleaved loop moves no bit.
+
+
+def _matrix(s: pd.Series) -> np.ndarray:
+    """float64 rows × dim matrix of an Arrow batch's vector column."""
+    return np.stack(s.to_numpy()).astype(np.float64)
+
+
+def _dots(m: np.ndarray, ref: np.ndarray) -> np.ndarray:
+    """rows × refs: every row of ``m`` dotted with every row of ``ref``."""
+    acc = np.zeros((m.shape[0], ref.shape[0]))
+    for i in range(m.shape[1]):
+        acc += np.outer(m[:, i], ref[:, i])
+    return acc
+
+
+def _row_dots(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """rows: each row of ``a`` dotted with the same row of ``b``."""
+    acc = np.zeros(a.shape[0])
+    for i in range(a.shape[1]):
+        acc += a[:, i] * b[:, i]
+    return acc
+
+
+def _norms(m: np.ndarray) -> np.ndarray:
+    """rows: the L2 norm of each row (``NORM_SQL``)."""
+    return np.sqrt(_row_dots(m, m))
+
+
+def _cosines(m: np.ndarray, ref_m: np.ndarray, ref_n: np.ndarray) -> np.ndarray:
+    """rows × refs cosines given the references' norms; a zero-norm
+    row or reference gives NaN (0/0)."""
+    return _dots(m, ref_m) / (_norms(m)[:, None] * ref_n[None, :])
 
 
 def _collect_ref(df: DataFrame, id_col: str, vec_col: str):
     """(ids, matrix, norms) of a small reference table, sorted by id."""
-    import numpy as np
-
     # sort driver-side: an orderBy would add an exchange + AQE stage to
     # what is otherwise a single-stage scan of a tiny table
     rows = sorted(df.select(id_col, vec_col).collect(), key=lambda r: r[0])
     ids = [int(r[0]) for r in rows]
     m = np.array([list(r[1]) for r in rows], dtype=np.float64)
-    n = np.zeros(m.shape[0])
-    for i in range(m.shape[1]):  # sequential: left-assoc sum
-        n += m[:, i] * m[:, i]
-    return ids, m, np.sqrt(n)
+    return ids, m, _norms(m)
 
 
 def _ref_scores_udf(ref_m, ref_n):
     """array<double>: cosine of the input vector to every reference."""
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<double>")
     def scores(vec: pd.Series) -> pd.Series:
-        import numpy as np
-
         if len(vec) == 0:
             return pd.Series([], dtype=object)
-        m = np.stack(vec.to_numpy()).astype(np.float64)
-        acc = np.zeros((m.shape[0], ref_m.shape[0]))
-        n = np.zeros(m.shape[0])
-        for i in range(m.shape[1]):  # sequential in i: left-assoc sums
-            acc += np.outer(m[:, i], ref_m[:, i])
-            n += m[:, i] * m[:, i]
-        cos = acc / (np.sqrt(n)[:, None] * ref_n[None, :])
-        return pd.Series(list(cos))
+        return pd.Series(list(_cosines(_matrix(vec), ref_m, ref_n)))
 
     return scores
 
@@ -206,33 +236,23 @@ def _pair_scores_udf(ref_m, ref_n):
     chewed the generated method). This kernel closes over the same
     matrix instead; the plan carries one ArrowEvalPython node.
 
-    FP discipline (same contract as ``_ref_scores_udf``): the dot and
-    the squared norm accumulate sequentially in i — the left-assoc
-    double sums of the unrolled/fold spellings and DuckDB's
-    ``list_reduce`` — and the denominator multiplies the two norms
-    before the single division, so every finite cosine is bitwise
-    equal to ``_pair_cos`` / the SQL oracle's unrolled chain. A
-    zero-norm pair divides 0/0 = NaN, which the pandas→Arrow hand-off
-    delivers JVM-side as NULL — the ``nullif`` agreement point.
+    Sums follow the dimension-order helpers, and the denominator
+    multiplies the two norms before the single division, so every
+    finite cosine is bitwise equal to ``_pair_cos`` / the SQL oracle's
+    unrolled chain. A zero-norm pair divides 0/0 = NaN, which the
+    pandas→Arrow hand-off delivers JVM-side as NULL — the ``nullif``
+    agreement point.
     """
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
     def score(qi: pd.Series, vec: pd.Series) -> pd.Series:
-        import numpy as np
-
         if len(vec) == 0:
             return pd.Series([], dtype=np.float64)
-        m = np.stack(vec.to_numpy()).astype(np.float64)
+        m = _matrix(vec)
         q = qi.to_numpy().astype(np.int64)
-        qm = ref_m[q]
-        acc = np.zeros(m.shape[0])
-        n = np.zeros(m.shape[0])
-        for i in range(m.shape[1]):  # sequential in i: left-assoc sums
-            acc += qm[:, i] * m[:, i]
-            n += m[:, i] * m[:, i]
         with np.errstate(divide="ignore", invalid="ignore"):
-            cos = acc / (ref_n[q] * np.sqrt(n))
+            cos = _row_dots(ref_m[q], m) / (ref_n[q] * _norms(m))
         return pd.Series(cos)
 
     return score
@@ -410,8 +430,6 @@ def _plane_weights(n_planes: int, dim: int):
     # cached per process: the kernel calls this once per Arrow BATCH on
     # the executor; uncached that is n_planes·dim md5 hashes per batch
     # (4096 at 64 dims) of pure recomputation
-    import numpy as np
-
     return np.array(
         [
             [1.0 if _weight_bit(p, i) else -1.0 for i in range(dim)]
@@ -434,13 +452,9 @@ def _band_keys_udf(n_bands: int = N_BANDS, rows_per_band: int = ROWS_PER_BAND):
     too. NumPy over Arrow batches is the genuinely fast path — and the
     only one whose cost doesn't grow with codegen limits as dim grows.
 
-    FP discipline: the fold over dimensions runs *sequentially in i*
-    (vectorized across rows and planes), so every plane dot is the
-    same left-associated double sum as the unrolled/``F.aggregate``
-    spelling and DuckDB's ``list_reduce`` — sign bits, and therefore
-    bucket keys, match the oracle bitwise.
+    Plane dots follow the dimension-order helpers, so sign bits, and
+    therefore bucket keys, match the oracle bitwise.
     """
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     n_planes = n_bands * rows_per_band
@@ -450,11 +464,8 @@ def _band_keys_udf(n_bands: int = N_BANDS, rows_per_band: int = ROWS_PER_BAND):
     def band_keys(vec: pd.Series) -> pd.Series:
         if len(vec) == 0:
             return pd.Series([], dtype=object)
-        m = np.stack(vec.to_numpy()).astype(np.float64)  # rows × dim
-        w = _plane_weights(n_planes, m.shape[1])  # planes × dim
-        acc = np.zeros((m.shape[0], n_planes))
-        for i in range(m.shape[1]):  # sequential in i: left-assoc sum
-            acc += np.outer(m[:, i], w[:, i])
+        m = _matrix(vec)
+        acc = _dots(m, _plane_weights(n_planes, m.shape[1]))
         bits = (acc >= 0).astype(np.int64)  # rows × planes
         keys = (
             bits.reshape(m.shape[0], n_bands, rows_per_band) * shifts
@@ -535,28 +546,22 @@ def neardup_lsh(
     # DontCompileHugeMethods class semdedup's pair join hit). The
     # joins stay JVM-side (they move each vector to its candidate
     # pairs — LSH-bounded volume), but the dot now runs in ONE Arrow
-    # mapInPandas kernel over the joined batches: sequential-in-i
-    # accumulation (left-assoc, bit-identical to the unrolled SQL dot)
-    # divided by the SAME JVM-computed fixed norms, sparse emit at raw
+    # mapInPandas kernel over the joined batches: ``_row_dots``
+    # (bit-identical to the unrolled SQL dot) divided by the SAME
+    # JVM-computed fixed norms, sparse emit at raw
     # cosine ≥ threshold − 1e-6, exact HALF_UP round-then-filter back
     # on the JVM (rounding moves a value ≤ 5e-7, so the margin cannot
     # drop a round-passing pair). Zero-norm rows produce NaN in the
     # kernel and fail the margin — the same drop as _pair_cos's
     # nullif. Measured: 15.3 s → see BASELINE.md round 12;
     # bit-identical at sf0.01/sf0.1, oracle unchanged.
-    import numpy as np
-
     margin = threshold - 1e-6
 
     def score_pairs(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            va_m = np.stack(pdf["va"].to_numpy()).astype(np.float64)
-            vb_m = np.stack(pdf["vb"].to_numpy()).astype(np.float64)
-            dot = np.zeros(len(pdf))
-            for i in range(va_m.shape[1]):  # sequential in i: left-assoc
-                dot += va_m[:, i] * vb_m[:, i]
+            dot = _row_dots(_matrix(pdf["va"]), _matrix(pdf["vb"]))
             with np.errstate(divide="ignore", invalid="ignore"):
                 c = dot / (pdf["na"].to_numpy() * pdf["nb"].to_numpy())
             keep = c >= margin  # NaN (zero-norm) fails, matching nullif
@@ -615,7 +620,6 @@ def ivf_assign(
     join) shuffled or materialized C rows per vector and kept the
     dim-term dot in JVM codegen, where it exceeds HotSpot's
     huge-method JIT limit and runs in the bytecode interpreter."""
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     cids, cm, cn = _collect_ref(centroids, "cid", "cv")
@@ -626,13 +630,7 @@ def ivf_assign(
         def nearest(vec: pd.Series) -> pd.Series:
             if len(vec) == 0:
                 return pd.Series([], dtype="int64")
-            m = np.stack(vec.to_numpy()).astype(np.float64)
-            acc = np.zeros((m.shape[0], cm.shape[0]))
-            n = np.zeros(m.shape[0])
-            for i in range(m.shape[1]):  # sequential in i: left-assoc sums
-                acc += np.outer(m[:, i], cm[:, i])
-                n += m[:, i] * m[:, i]
-            cos = acc / (np.sqrt(n)[:, None] * cn[None, :])
+            cos = _cosines(_matrix(vec), cm, cn)
             return pd.Series(cid_np[np.argmax(cos, axis=1)])
 
         return v.withColumn("cid", nearest("v"))
@@ -641,15 +639,10 @@ def ivf_assign(
     def nearest_cells(vec: pd.Series) -> pd.Series:
         if len(vec) == 0:
             return pd.Series([], dtype=object)
-        m = np.stack(vec.to_numpy()).astype(np.float64)
-        acc = np.zeros((m.shape[0], cm.shape[0]))
-        n = np.zeros(m.shape[0])
-        for i in range(m.shape[1]):  # sequential in i: left-assoc sums
-            acc += np.outer(m[:, i], cm[:, i])
-            n += m[:, i] * m[:, i]
-        cos = acc / (np.sqrt(n)[:, None] * cn[None, :])
+        cos = _cosines(_matrix(vec), cm, cn)
         # stable top-r: argsort is ascending, kind='stable' keeps the
-        # min-cid tie-break deterministic
+        # min-cid tie-break deterministic (argmax above takes the first
+        # maximum; the two differ on NaN rows, so each keeps its own)
         top = np.argsort(-cos, axis=1, kind="stable")[:, :n_assign]
         return pd.Series(list(cid_np[top]))
 
@@ -685,11 +678,10 @@ def kmeans_centroids(
     bit-identical for any partitioning and any combine order — which
     is what lets DuckDB replay the whole iteration as plain SQL
     (``ann_topk_ivf_kmeans_sql``). Means divide back out
-    ``(Σq/2^20)/n``; the mean-norm accumulates sequentially in
-    dimension order (left-assoc, same as the unrolled SQL sum); empty
-    cells keep their previous centroid; centroids are L2-normalized
-    after each mean so assignment cosine ≡ dot with the running mean
-    direction — standard spherical k-means.
+    ``(Σq/2^20)/n``; the mean-norm is ``_norms``; empty cells keep
+    their previous centroid; centroids are L2-normalized after each
+    mean so assignment cosine ≡ dot with the running mean direction —
+    standard spherical k-means.
 
     Cost per iteration: one scan + C·P tiny rows to the driver. The
     centroid matrix itself stays driver-side between iterations (it
@@ -701,8 +693,6 @@ def kmeans_centroids(
     recall lever is boundary replication (``n_assign`` in
     :func:`ivf_assign`), not more iterations.
     """
-    import numpy as np
-
     spark = v.sparkSession
     _, cm, cn = _collect_ref(
         v.where(F.col("id") < n_centroids).select(
@@ -723,13 +713,8 @@ def kmeans_centroids(
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                m = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-                acc = np.zeros((m.shape[0], n_c))
-                nn = np.zeros(m.shape[0])
-                for i in range(dim):  # sequential: left-assoc sums
-                    acc += np.outer(m[:, i], cm_bc[:, i])
-                    nn += m[:, i] * m[:, i]
-                cos = acc / np.sqrt(nn)[:, None]  # centroids already unit
+                m = _matrix(pdf["v"])
+                cos = _dots(m, cm_bc) / _norms(m)[:, None]  # centroids already unit
                 assign = np.argmax(cos, axis=1)
                 q = np.floor(m * KMEANS_QUANT_SCALE + 0.5).astype(np.int64)
                 np.add.at(sums, assign, q)
@@ -750,11 +735,7 @@ def kmeans_centroids(
         means = (
             sums[nonempty].astype(np.float64) / KMEANS_QUANT_SCALE
         ) / cnts[nonempty, None]
-        nsq = np.zeros(means.shape[0])
-        for i in range(dim):  # sequential: matches the SQL's unrolled sum
-            nsq += means[:, i] * means[:, i]
-        norms = np.sqrt(nsq)
-        cm[nonempty] = means / np.maximum(norms, 1e-300)[:, None]
+        cm[nonempty] = means / np.maximum(_norms(means), 1e-300)[:, None]
 
     return spark.createDataFrame(
         [(int(i), [float(x) for x in cm[i]]) for i in range(n_c)],
@@ -870,7 +851,7 @@ def _ivf_fused_pass(
     Queries and centroids are both id-prefixes of the same table, so
     ONE reference collect is sliced driver-side (one job, not two).
     Probe selection runs on the driver matrices with the same
-    sequential-i sums as the JVM/SQL spellings; the stable argsort on
+    dimension-order sums as the JVM/SQL spellings; the stable argsort on
     -cos orders (desc cos, asc cid). ``scored`` is one Arrow pass per
     corpus vector: ``s`` holds its cosines against ``[queries;
     centroids]`` and ``cid`` its cell (argmax over the centroid slice;
@@ -878,8 +859,6 @@ def _ivf_fused_pass(
     query's ``n_probe`` cells as ``(qid, qi, cid)``, ``qi`` being the
     query's position in the ``s`` slice.
     """
-    import numpy as np
-
     spark = vectors.sparkSession
     v = vectors.select(F.col(id_col).alias("id"), _dvec(vec_col).alias("v"))
     pids, pmat, pnorm = _collect_ref(
@@ -893,10 +872,7 @@ def _ivf_fused_pass(
     ref_m = np.vstack([qm, cm])
     ref_n = np.concatenate([qn, cn])
 
-    acc = np.zeros((nq, cm.shape[0]))
-    for i in range(qm.shape[1]):  # sequential in i: left-assoc sums
-        acc += np.outer(qm[:, i], cm[:, i])
-    ccos = acc / (qn[:, None] * cn[None, :])
+    ccos = _dots(qm, cm) / (qn[:, None] * cn[None, :])
     probe_rows = [
         (int(qids[qi]), int(qi), int(cids[cpos]))
         for qi in range(nq)
@@ -961,7 +937,7 @@ def ann_topk_ivf_fused(
     its cell (argmax over the centroid slice; first-max = min-cid
     tie-break, centroids sorted) and its query cosines (element_at
     into the query slice — no re-scoring join). Bitwise-identical to
-    the composed operator — same sequential-in-i sums — so the
+    the composed operator — same dimension-order sums — so the
     unchanged SQL oracle certifies the fusion.
 
     Zero-norm rows (ADVICE r10/r11): a zero-norm corpus vector's
@@ -1015,9 +991,9 @@ def ann_recall_fused(
     queries·centroids cosines are bytes, never cluster work.
 
     Bitwise-identical to composing :func:`ann_topk_bruteforce` +
-    :func:`ann_topk_ivf`: every dot/norm uses the same sequential-in-i
-    accumulation (left-assoc double sums), so scores, ranks, and the
-    DuckDB oracle's replay all agree exactly — the gate certifies this.
+    :func:`ann_topk_ivf`: every dot/norm uses the same dimension-order
+    helpers, so scores, ranks, and the DuckDB oracle's replay all
+    agree exactly — the gate certifies this.
 
     Shape at scale: one corpus scan (the persisted slim (id, scores,
     cid) table is (Q+C+2)·8 bytes per vector), two slim keyed rankings,
@@ -1256,9 +1232,9 @@ def semdedup_pairs(
     scored in ONE Arrow ``applyInPandas`` kernel: the cell's vectors
     arrive as one group (ONE cid-keyed exchange of the vector table —
     the join needed the same exchange, twice), the kernel forms the
-    cell's full Gram matrix with the sequential-in-i accumulation
-    (left-assoc sums, bit-identical to the SQL's unrolled dot and to
-    the old projection), takes the upper triangle over ids sorted
+    cell's full Gram matrix with ``_dots`` (bit-identical to the SQL's
+    unrolled dot and to the old projection), takes the upper triangle
+    over ids sorted
     ascending (the a < b pairing), and emits only pairs with raw
     cosine ≥ threshold − 1e-6; the exact filter — round(cos, 6) ≥
     threshold, HALF_UP like the old spelling and the oracle — runs
@@ -1283,8 +1259,6 @@ def semdedup_pairs(
     ``connected_components`` gives canonical keepers (the
     neardup_clusters pattern).
     """
-    import numpy as np
-
     # Persist the projected double-cast vector table: the Lloyd loop
     # makes 1 + n_iter full passes over it (init sample + one
     # mapInPandas scan per iteration) and ivf_assign a further one —
@@ -1314,12 +1288,9 @@ def semdedup_pairs(
             return empty
         pdf = pdf.sort_values("id")
         ids = pdf["id"].to_numpy()
-        m = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-        k, d = m.shape
-        nn = np.zeros(k)
-        for i in range(d):  # sequential in i: left-assoc sums
-            nn += m[:, i] * m[:, i]
-        norm = np.sqrt(nn)
+        m = _matrix(pdf["v"])
+        k = m.shape[0]
+        norm = _norms(m)
         # Sub-blocked Gram accumulation (ADVICE r12): tile the outer-
         # product loop over ROW blocks so the peak tile is bs×k doubles
         # (≤ ~32 MB) instead of a dense k×k — a pathological 100k-row
@@ -1334,11 +1305,8 @@ def semdedup_pairs(
         out = []
         for s in range(0, k, bs):
             e = min(s + bs, k)
-            accb = np.zeros((e - s, k))
-            for i in range(d):  # sequential in i: left-assoc sums
-                accb += np.outer(m[s:e, i], m[:, i])
             with np.errstate(divide="ignore", invalid="ignore"):
-                cosb = accb / (norm[s:e, None] * norm[None, :])
+                cosb = _dots(m[s:e], m) / (norm[s:e, None] * norm[None, :])
             # upper triangle (a < b by SORTED position = id order) and
             # the margin filter; NaN (zero-norm) fails, matching nullif
             keep = (cols[None, :] > np.arange(s, e)[:, None]) & (
@@ -1548,23 +1516,17 @@ def project_embeddings(
 
     Arrow-batched kernel, not column expressions, for the same janino
     reason as ``_band_keys_udf`` (n_components·dim multiply-adds per
-    row); the accumulation is sequential in i, so each component is
-    the left-associated double sum the SQL twin unrolls — bitwise
-    match before rounding.
+    row); each component is a ``_dots`` entry, the left-associated
+    double sum the SQL twin unrolls — bitwise match before rounding.
     """
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<double>")
     def proj(vec: pd.Series) -> pd.Series:
         if len(vec) == 0:
             return pd.Series([], dtype=object)
-        m = np.stack(vec.to_numpy()).astype(np.float64)  # rows × dim
-        w = _plane_weights(n_components, m.shape[1])  # comps × dim
-        acc = np.zeros((m.shape[0], n_components))
-        for i in range(m.shape[1]):  # sequential in i: left-assoc sum
-            acc += np.outer(m[:, i], w[:, i])
-        return pd.Series(list(acc))
+        m = _matrix(vec)
+        return pd.Series(list(_dots(m, _plane_weights(n_components, m.shape[1]))))
 
     # rounding happens JVM-side (F.round == DuckDB round, the pairing
     # every cosine in this module relies on) — np.round is half-even

@@ -629,10 +629,10 @@ def ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     generated method. Kernel spelling: 1.19 s → ~0.75 s steady at the
     tier, bit-identical output (git-stash A/B, BASELINE.md round 13).
 
-    FP discipline: driver-side query norms accumulate sequentially in
-    i (the `_collect_ref` loop), and both kernels accumulate dot and
-    norm sequentially in i — the left-assoc dimension-order sums of
-    the oracle's unrolled chain, bitwise-identical cosines.
+    FP discipline: the driver-side query norms and both kernels sum
+    with the dimension-order helpers of ``operators/similarity.py``
+    (``SIM._norms`` here), the order of the oracle's unrolled chain —
+    bitwise-identical cosines.
     """
     import numpy as np
     from pyspark.sql.window import Window
@@ -647,14 +647,7 @@ def ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     qids = [int(r["vec_id"]) for r in rows]
     qm = np.array([list(r["qv"]) for r in rows], dtype=np.float64)
     fm = np.array([list(r["v"]) for r in rows], dtype=np.float64)
-
-    def _norms(m):
-        n = np.zeros(m.shape[0])
-        for i in range(m.shape[1]):  # sequential: left-assoc sum
-            n += m[:, i] * m[:, i]
-        return np.sqrt(n)
-
-    qn, fnrm = _norms(qm), _norms(fm)
+    qn, fnrm = SIM._norms(qm), SIM._norms(fm)
     qid_arr = F.array(*[F.lit(q) for q in qids])
 
     scored = (

@@ -79,26 +79,27 @@ def _ensure_loaded() -> None:
 # and rolling_flight_dist(_bucketed);
 # (b) asof_click_purchase (round 15) and ann_recall_at_k, which shares
 # its fused IVF pass with ann_topk_ivf;
-# (c) 14 of the 25 rows whose executed plan has a Python evaluation
-# node (their workers run through the engine's worker daemon):
-# semdedup, ann_topk_ivf, ann_topk_ivf_kmeans, streaming_funnel and
-# ann_recall_at_k, then stateful_running_count, streaming_kmv_sketch,
-# streaming_weighted_sample and the six from ann_rerank to
-# rrf_hybrid_rank;
+# (c) 25 rows whose executed plan has a Python evaluation node: the
+# 21 batch rows whose kernels share the dimension-order helpers of
+# operators/similarity.py or the one batch map of
+# operators/multimodal.py (semdedup, ann_topk_ivf, ann_topk_ivf_kmeans,
+# ann_recall_at_k, then the six from ann_rerank to rrf_hybrid_rank
+# and the eleven from embedding_neardup_lsh to multimodal_wav_meta),
+# and the Python-state rows streaming_funnel, stateful_running_count,
+# streaming_kmv_sketch and streaming_weighted_sample;
 # (d) user_sessions and streaming_user_sessions, whose shared oracle
 # merges events exactly the session gap apart;
 # (e) the 11 sketch rows whose batch and streaming twins share one
 # operator body: the three histogram rows, the OHLC, CMS and HLL
 # pairs, streaming_bitmap_visitors and audience_overlap_hll;
-# (f) the rows whose streaming twin now runs its batch builder over
-# stream_table, or whose builder now shares a helper with one: the
-# word/rolling/hashtag counts, flight dist, rolling sort, SOL, dedup,
-# interval-join and CDC streaming rows with their batch twins,
+# (f) of the rows whose streaming twin runs its batch builder over
+# stream_table: the flight-dist, dedup and CDC streaming rows,
 # funnel_conversion and the three bitmap rows.
-# Rotated out to just below the boundary to make room: 18 of the
-# round-14 dedup/corpus/span rows (gated in round 14 and untouched
-# since), then the Python-evaluation rows the daemon change touched
-# (gated when it landed) and gap_fill_hourly.
+# Rotated out to just below the boundary to make room: the word,
+# rolling, hashtag, rolling-sort, SOL and interval-join rows of (f)'s
+# twin change (gated when it landed and untouched since), then 18 of
+# the round-14 dedup/corpus/span rows (gated in round 14 and untouched
+# since) and gap_fill_hourly.
 _GATE_PRIORITY: tuple[str, ...] = (
     "training_corpus_build",
     "funnel_conversion",
@@ -121,6 +122,17 @@ _GATE_PRIORITY: tuple[str, ...] = (
     "embedding_neardup",
     "multimodal_features",
     "rrf_hybrid_rank",
+    "embedding_neardup_lsh",
+    "embedding_neardup_lsh_scaled",
+    "embedding_project",
+    "multimodal_audio_chunks",
+    "multimodal_audio_meta",
+    "multimodal_bmp_meta",
+    "multimodal_frames",
+    "multimodal_image_meta",
+    "multimodal_ppm_meta",
+    "multimodal_resize",
+    "multimodal_wav_meta",
     "histogram_quantiles",
     "streaming_histogram_quantiles",
     "histogram_quantiles_rollup",
@@ -132,18 +144,7 @@ _GATE_PRIORITY: tuple[str, ...] = (
     "streaming_hll_visitors",
     "streaming_bitmap_visitors",
     "audience_overlap_hll",
-    "wordcount",
-    "trident_wordcount",
-    "rolling_count",
-    "streaming_rolling_count",
-    "rolling_hashtag_count",
-    "streaming_hashtag_count",
     "streaming_flight_dist",
-    "rolling_sort",
-    "streaming_rolling_sort",
-    "sol",
-    "streaming_sol",
-    "streaming_interval_join",
     "streaming_dedup",
     "streaming_dedup_watermarked",
     "streaming_cdc_apply",
@@ -151,6 +152,17 @@ _GATE_PRIORITY: tuple[str, ...] = (
     "bitmap_distinct_weekly_rollup",
     "bitmap_retention_daily",
     # --- window boundary (first 50 above) ---
+    "wordcount",
+    "trident_wordcount",
+    "rolling_count",
+    "streaming_rolling_count",
+    "rolling_hashtag_count",
+    "streaming_hashtag_count",
+    "rolling_sort",
+    "streaming_rolling_sort",
+    "sol",
+    "streaming_sol",
+    "streaming_interval_join",
     "simhash",
     "simhash_pairs",
     "minhash_lsh",
@@ -169,17 +181,6 @@ _GATE_PRIORITY: tuple[str, ...] = (
     "dup_ngram_spans",
     "exact_dup_spans",
     "chunk_dedup",
-    "embedding_neardup_lsh",
-    "embedding_neardup_lsh_scaled",
-    "embedding_project",
-    "multimodal_audio_chunks",
-    "multimodal_audio_meta",
-    "multimodal_bmp_meta",
-    "multimodal_frames",
-    "multimodal_image_meta",
-    "multimodal_ppm_meta",
-    "multimodal_resize",
-    "multimodal_wav_meta",
     "gap_fill_hourly",
     "streaming_audience_overlap",
     "streaming_enriched_revenue",

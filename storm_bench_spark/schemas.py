@@ -1,8 +1,10 @@
-"""Typed schemas for the five reference wire formats (SURVEY.md §1.3).
+"""Typed layouts for the reference wire formats the parsers read
+(SURVEY.md §1.3): the ADS-B position record and the tweet line.
 
-The reference's tuples are dynamically typed (Object + casts); here every
-format gets an explicit StructType so Catalyst can prune/pushdown and so
-parsers are total functions with declared output shape.
+The reference's tuples are dynamically typed (Object + casts); here a
+record gets an explicit StructType (a delimited line, its arity and
+field index) so Catalyst can prune/pushdown and so parsers are total
+functions with declared output shape.
 """
 
 from __future__ import annotations
@@ -10,21 +12,10 @@ from __future__ import annotations
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
-)
-
-# PageView: url \t status \t zip \t user  (PageView.java:48-61)
-PAGEVIEW_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("http_status", IntegerType()),
-        StructField("zip_code", IntegerType()),
-        StructField("user_id", IntegerType()),
-    ]
 )
 
 # ADS-B aircraft position, VRS JSON dump line (RollingFlightDist.java:90-114).
@@ -44,7 +35,3 @@ ADSB_SCHEMA = StructType(
 # (RollingHashtagCount.java:52-69).
 TWEET_ARITY = 13
 TWEET_TEXT_INDEX = 4
-
-# Sentence / random-message formats are single string columns.
-SENTENCE_SCHEMA = StructType([StructField("sentence", StringType())])
-MESSAGE_SCHEMA = StructType([StructField("message", StringType())])

@@ -329,3 +329,28 @@ def test_bmp_codec_real_roundtrip():
         decode_bmp24(bytes(bad))
     with _pytest.raises(ValueError):
         decode_bmp24(encode_bmp24(b"\x01" * 120, 7)[:-5])  # truncated
+
+
+def test_pillow_is_probed_once_per_process(monkeypatch):
+    """``_try_real_decode`` imports Pillow once per process, not once
+    per payload, and still falls back (None) per payload when a decode
+    fails or Pillow is absent."""
+    import builtins
+
+    from storm_bench_spark.operators import multimodal as MM
+
+    probes = []
+    real_import = builtins.__import__
+
+    def counting_import(name, *args, **kwargs):
+        if name == "PIL":
+            probes.append(name)
+        return real_import(name, *args, **kwargs)
+
+    MM._pil_image.cache_clear()
+    monkeypatch.setattr(builtins, "__import__", counting_import)
+    try:
+        assert [MM._try_real_decode(p) for p in (b"a", b"bb", b"not an image")] == [None] * 3
+    finally:
+        MM._pil_image.cache_clear()
+    assert probes == ["PIL"]

@@ -538,3 +538,82 @@ def test_conf_bytes_parses_suffixes(spark):
             assert _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 0) == expect
         finally:
             spark.conf.unset("spark.sql.files.maxPartitionBytes")
+
+
+# --- one owner per Python-boundary decision ---------------------------------
+# The vector decode, the dimension-order sums and the multimodal batch
+# loop each have one owner (operators/similarity.py's helpers and
+# operators/multimodal.py:_map_rows); a second copy is how a kernel
+# drifts off the DuckDB oracles' summation order.
+
+_VECTOR_OWNERS = {
+    "np.stack": {("operators/similarity.py", "_matrix")},
+    "np.outer": {("operators/similarity.py", "_dots")},
+    "column sum": {("operators/similarity.py", "_dots"), ("operators/similarity.py", "_row_dots")},
+}
+# Not a vector decode: the funnel's Python state stacks its four output
+# columns into one frame.
+_VECTOR_EXEMPT = {("np.stack", "streaming/stateful.py", "_update_funnel")}
+
+
+def _vector_sites():
+    """(kind, file, enclosing function) for every ``np.stack(``,
+    ``np.outer(`` and dimension loop ``acc += a[:, i] ...`` in the
+    engine package."""
+    import ast
+    import pathlib
+
+    import storm_bench_spark
+
+    root = pathlib.Path(storm_bench_spark.__file__).parent
+    sites = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+
+        def visit(node, fn):
+            for child in ast.iter_child_nodes(node):
+                inner = child.name if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)) else fn
+                if isinstance(child, ast.Call) and isinstance(child.func, ast.Attribute):
+                    name = f"{getattr(child.func.value, 'id', '')}.{child.func.attr}"
+                    if name in ("np.stack", "np.outer"):
+                        sites.append((name, rel, fn))
+                if isinstance(child, ast.AugAssign) and isinstance(child.op, ast.Add) and any(
+                    isinstance(s, ast.Subscript)
+                    and isinstance(s.slice, ast.Tuple)
+                    and any(isinstance(e, ast.Slice) for e in s.slice.elts)
+                    for s in ast.walk(child.value)
+                ):
+                    sites.append(("column sum", rel, fn))
+                visit(child, inner)
+
+        visit(ast.parse(path.read_text()), None)
+    return sites
+
+
+def test_vector_math_has_one_owner():
+    stray = [
+        s for s in _vector_sites()
+        if (s[1], s[2]) not in _VECTOR_OWNERS[s[0]] and s not in _VECTOR_EXEMPT
+    ]
+    assert not stray, (
+        f"vector decode or dimension-order sum outside the helpers in "
+        f"operators/similarity.py: {stray} — call _matrix/_dots/_row_dots/_norms"
+    )
+    assert set(_vector_sites()) >= {(k, f, fn) for k, owners in _VECTOR_OWNERS.items() for f, fn in owners}
+
+
+def test_multimodal_operators_share_one_batch_map():
+    import inspect
+
+    from storm_bench_spark.operators import multimodal as MM
+
+    src = inspect.getsource(MM)
+    assert src.count(".mapInPandas(") == 1, "every multimodal operator goes through _map_rows"
+    knobs = [
+        f"{name}({p})"
+        for name, fn in inspect.getmembers(MM, inspect.isfunction)
+        if fn.__module__ == MM.__name__
+        for p in inspect.signature(fn).parameters
+        if p.endswith("_col")
+    ]
+    assert not knobs, f"column-name parameters no caller sets: {knobs}"

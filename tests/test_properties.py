@@ -611,3 +611,67 @@ def test_packed_order_sorts_like_the_pair(spark, pairs):
     by_pair = [r.i for r in df.orderBy("hi", "lo", "i").collect()]
     by_packed = [r.i for r in df.orderBy("p", "i").collect()]
     assert by_pair == by_packed
+
+
+# ---------------------------------------------------------------------------
+# dimension-order NumPy helpers == DuckDB's DOT_SQL / NORM_SQL, bit for bit
+# (the summation rule in operators/similarity.py)
+
+_f32_components = st.floats(
+    min_value=-4.0, max_value=4.0, allow_nan=False, allow_infinity=False, width=32
+)
+
+
+@st.composite
+def _f32_vectors(draw):
+    """float32-origin vectors (as the embeddings table stores them),
+    negative components included, plus one zero vector."""
+    import numpy as np
+
+    dim = draw(st.integers(8, 64))
+    rows = draw(
+        st.lists(
+            st.lists(_f32_components, min_size=dim, max_size=dim),
+            min_size=1,
+            max_size=6,
+        )
+    )
+    return np.array(rows + [[0.0] * dim], dtype=np.float64)
+
+
+@settings(max_examples=25, deadline=None)
+@given(_f32_vectors())
+def test_dimension_order_helpers_match_duckdb_bitwise(duck, m):
+    import numpy as np
+
+    from storm_bench_spark.operators.similarity import (
+        DOT_SQL,
+        NORM_SQL,
+        _dots,
+        _norms,
+        _row_dots,
+    )
+
+    def bits(a):
+        return np.asarray(a, dtype=np.float64).view(np.int64)
+
+    n = len(m)
+    duck.execute("CREATE OR REPLACE TEMP TABLE _dim_order (i INTEGER, v DOUBLE[])")
+    try:
+        duck.executemany(
+            "INSERT INTO _dim_order VALUES (?, ?)", [(i, r.tolist()) for i, r in enumerate(m)]
+        )
+        dots = duck.execute(
+            f"SELECT {DOT_SQL.format(a='a.v', b='b.v')} FROM _dim_order a, _dim_order b "
+            "ORDER BY a.i, b.i"
+        ).fetchall()
+        norms = duck.execute(
+            f"SELECT {NORM_SQL.format(a='v')} FROM _dim_order ORDER BY i"
+        ).fetchall()
+    finally:
+        duck.execute("DROP TABLE IF EXISTS _dim_order")
+    want = np.array([d for (d,) in dots]).reshape(n, n)
+    np.testing.assert_array_equal(bits(_dots(m, m)), bits(want))
+    # row i of m against row n-1-i: the paired accumulator
+    np.testing.assert_array_equal(bits(_row_dots(m, m[::-1])), bits(want[np.arange(n), n - 1 - np.arange(n)]))
+    np.testing.assert_array_equal(bits(_norms(m)), bits([x for (x,) in norms]))

@@ -102,3 +102,34 @@ def test_session_workers_run_the_engine_daemon(spark, tmp_path):
 
     got = {r[0] for r in ids.select(imports_added_file("s")).collect()}
     assert got == {"added-after-start"}
+
+
+def test_entry_package_zip_is_content_named_and_importable(tmp_path, monkeypatch):
+    """``__spark_entry__`` ships this zip to a foreign session's workers:
+    it is named by its content (a second call reuses it), and a Python
+    started outside the repo with only the zip on its path imports the
+    kernels from it. No JVM."""
+    import tempfile
+
+    import __spark_entry__ as E
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "t"))
+    os.makedirs(tmp_path / "t")
+    path = E._package_zip()
+    mtime = os.stat(path).st_mtime_ns
+    assert E._package_zip() == path and os.stat(path).st_mtime_ns == mtime
+    assert os.listdir(tmp_path / "t") == [os.path.basename(path)]
+    with zipfile.ZipFile(path) as z:
+        names = set(z.namelist())
+    assert "storm_bench_spark/operators/similarity.py" in names
+    assert not any("__pycache__" in n for n in names)
+
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYTHONPATH"] = path
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import storm_bench_spark.operators.multimodal as M, storm_bench_spark.operators.similarity as S; "
+         "print(S.__file__, M.__file__)"],
+        cwd=tmp_path, env=env, check=True, timeout=120, capture_output=True, text=True,
+    ).stdout.split()
+    assert all(f.startswith(path + os.sep) for f in out), out
